@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,10 +12,10 @@ import org.apache.spark.sql.types._
   * the work per batch is bounded by batch size + dirty-chunk members,
   * never the corpus.
   *
-  * Layout at `base/` (all three tables are per-batch DELTA partitions,
-  * written with dynamic partition overwrite so a replayed micro-batch
-  * rewrites its own partition — the same idempotence contract as the
-  * dedup-index ingestion):
+  * Layout at `base/` (all three tables are [[DeltaChains]] — per-batch
+  * DELTA partitions, written with dynamic partition overwrite so a
+  * replayed micro-batch rewrites its own partition — the same idempotence
+  * contract as the dedup-index ingestion):
   *  - `docs/batch_id=N/`     doc stats (doc_id, h, n_tokens, fp), h-sorted
   *                           inside files so the dirty-range scan prunes
   *                           on parquet min/max
@@ -51,15 +51,12 @@ object ChunkIndex {
   private val tombsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("batch_id", LongType)))
 
-  private def readOr(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    scala.util.Try(spark.read.schema(schema).parquet(path))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  private val Chains = Seq("docs", "cuts", "manifest")
+  private val Retired = Seq("tombs")
 
   private def readTombs(spark: SparkSession, base: String,
                         excludeBatch: Long): DataFrame =
-    readOr(spark, s"$base/tombs", tombsSchema)
+    DeltaChains.read(spark, base, "tombs", tombsSchema)
       .filter(col("batch_id") =!= excludeBatch)
       .select(col("doc_id").as("__tomb_id"), col("batch_id").as("__tomb_batch"))
 
@@ -80,7 +77,7 @@ object ChunkIndex {
   def readDocs(spark: SparkSession, base: String,
                excludeBatch: Long = Long.MinValue): DataFrame =
     maskTombs(
-      readOr(spark, s"$base/docs", docsSchema)
+      DeltaChains.read(spark, base, "docs", docsSchema)
         .filter(col("batch_id") =!= excludeBatch),
       readTombs(spark, base, excludeBatch))
 
@@ -89,7 +86,7 @@ object ChunkIndex {
   def readCuts(spark: SparkSession, base: String,
                excludeBatch: Long = Long.MinValue): DataFrame =
     maskTombs(
-      readOr(spark, s"$base/cuts", cutsSchema)
+      DeltaChains.read(spark, base, "cuts", cutsSchema)
         .filter(col("batch_id") =!= excludeBatch),
       readTombs(spark, base, excludeBatch))
 
@@ -100,7 +97,7 @@ object ChunkIndex {
                    excludeBatch: Long = Long.MinValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     heal(spark, base)
-    readOr(spark, s"$base/manifest", manifestSchema)
+    DeltaChains.read(spark, base, "manifest", manifestSchema)
       .filter(col("batch_id") =!= excludeBatch)
       .withColumn("__rk", row_number().over(
         Window.partitionBy("chunk_key").orderBy(col("batch_id").desc)))
@@ -173,11 +170,11 @@ object ChunkIndex {
     // excludeBatch = batchId), so no write can observe a sibling's
     // output — overlapped (§2.6), cutting the leg's serial job chain
     graft.exec.Concurrent.run(
-      () => writeDelta(base, batchId)(stats, "docs", Some("h")),
-      () => writeDelta(base, batchId)(
+      () => DeltaChains.write(base, "docs", batchId, stats, Some("h")),
+      () => DeltaChains.write(base, "cuts", batchId,
         stats.filter(col("h") % cutMod === 0L).select("doc_id", "h"),
-        "cuts", Some("h")),
-      () => writeDelta(base, batchId)(recomputed, "manifest", None))
+        Some("h")),
+      () => DeltaChains.write(base, "manifest", batchId, recomputed))
   }
 
   /** (chunk_key, lo, hi) h-ranges of the given cut set, including the −1
@@ -216,15 +213,6 @@ object ChunkIndex {
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("checksum"), lit(0L)).as("checksum"))
-
-  private def writeDelta(base: String, batchId: Long)(
-      df: DataFrame, table: String, sortCol: Option[String]): Unit = {
-    val stamped = df.withColumn("batch_id", lit(batchId))
-    val sorted = sortCol.map(c => stamped.sortWithinPartitions(c)).getOrElse(stamped)
-    sorted.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$base/$table")
-  }
 
   /** Takedown: tombstone `ids` and recompute only the chunks they leave —
     * each victim's chunk under the PRE-delete cuts, plus the predecessor
@@ -295,9 +283,9 @@ object ChunkIndex {
 
     // independent sinks, inputs exclude this batch (append's contract)
     graft.exec.Concurrent.run(
-      () => writeDelta(base, batchId)(victims.select("doc_id"), "tombs", None),
-      () => writeDelta(base, batchId)(
-        recomputeManifest(dirty, members), "manifest", None))
+      () => DeltaChains.write(base, "tombs", batchId, victims.select("doc_id")),
+      () => DeltaChains.write(base, "manifest", batchId,
+        recomputeManifest(dirty, members)))
   }
 
   /** Takedown-SLO watermark: manifest delta versions still standing —
@@ -305,19 +293,7 @@ object ChunkIndex {
     * compaction; each append/delete adds one. */
   def manifestVersions(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    chainBatchIds(spark, base, "manifest").size.toLong
-  }
-
-  private def chainBatchIds(spark: SparkSession, base: String,
-                            chain: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$base/$chain")
-    val f = fs(spark)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id=") =>
-        st.getPath.getName.stripPrefix("batch_id=").toLong
-    }
+    DeltaChains.batchIds(spark, base, "manifest").size.toLong
   }
 
   /** Erasure-LAG watermark (batch units): delta batches landed since
@@ -327,9 +303,8 @@ object ChunkIndex {
     * the batch clock. Two directory listings, no row reads. */
   def tombBatchLag(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    val tombs = chainBatchIds(spark, base, "tombs")
-    if (tombs.isEmpty) 0L
-    else chainBatchIds(spark, base, "manifest").count(_ > tombs.min).toLong
+    DeltaChains.tombBatchLag(spark, base, Seq("manifest"),
+      oldestTomb(spark, base))
   }
 
   /** Wall-clock twin of [[tombBatchLag]]: ms since the oldest
@@ -338,15 +313,11 @@ object ChunkIndex {
     * of any oracle-gated frame. */
   def oldestTombstoneAgeMs(spark: SparkSession, base: String): Option[Long] = {
     heal(spark, base)
-    val tombs = chainBatchIds(spark, base, "tombs")
-    if (tombs.isEmpty) None
-    else {
-      val p = new org.apache.hadoop.fs.Path(
-        s"$base/tombs/batch_id=${tombs.min}")
-      Some(System.currentTimeMillis() -
-        fs(spark).getFileStatus(p).getModificationTime)
-    }
+    DeltaChains.tombstoneAgeMs(spark, base, "tombs", oldestTomb(spark, base))
   }
+
+  private def oldestTomb(spark: SparkSession, base: String): Option[Long] =
+    DeltaChains.batchIds(spark, base, "tombs").minOption
 
   /** Takedown-SLO watermark: tombstoned doc ids not yet physically
     * retired by a compaction — delta-sized read ([[compact]]'s heal
@@ -358,23 +329,17 @@ object ChunkIndex {
   }
 
   /** Streaming maintenance: each micro-batch appends through the batch
-    * step above. foreachBatch, not a stateful operator — the chunk state
-    * must outlive the stream and serve batch readers. Micro-batch ids
-    * version the delta partitions directly, so a replayed batch
-    * overwrites its own partitions and the standing manifest is
-    * unchanged (ChunkIndexSpec pins the same step called twice).
-    * `baseBatch` offsets the stream's ids: a run resumed with a FRESH
-    * checkpoint restarts its counter at 0, which would sort below every
-    * existing version — pass the index's current max batch + 1. */
+    * step above ([[DeltaChains.stream]]). Micro-batch ids version the
+    * delta partitions directly, so a replayed batch overwrites its own
+    * partitions and the standing manifest is unchanged (ChunkIndexSpec
+    * pins the same step called twice). */
   def run(stream: DataFrame, base: String, textCol: String, idCol: String,
           seed: Long, cutMod: Long, checkpoint: String, baseBatch: Long = 0L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        append(batch.sparkSession, base, batch, textCol, idCol,
-          seed, cutMod, baseBatch + batchId)
-      }
+    DeltaChains.stream(stream, checkpoint, baseBatch) { (batch, batchId) =>
+      append(batch.sparkSession, base, batch, textCol, idCol, seed, cutMod,
+        batchId)
+    }
 
   /** Observability: physical layout (delta batches, live vs tombstoned
     * docs, manifest versions) plus logical totals. `needs_compact` flags
@@ -383,17 +348,18 @@ object ChunkIndex {
   def stats(spark: SparkSession, base: String): DataFrame = {
     heal(spark, base)
     import spark.implicits._
-    val allDocs = readOr(spark, s"$base/docs", docsSchema)
+    val allDocs = DeltaChains.read(spark, base, "docs", docsSchema)
     val nBatches = allDocs.select("batch_id").distinct().count()
     val nRows = allDocs.count()
-    val nTombs = readOr(spark, s"$base/tombs", tombsSchema)
+    val nTombs = DeltaChains.read(spark, base, "tombs", tombsSchema)
       .select("doc_id").distinct().count()
     val live = readDocs(spark, base)
     val nLive = live.count()
     val toks = live.agg(coalesce(sum("n_tokens"), lit(0L))).head.getLong(0)
     val manifest = readManifest(spark, base)
     val nChunks = manifest.count()
-    val versions = readOr(spark, s"$base/manifest", manifestSchema).count()
+    val versions =
+      DeltaChains.read(spark, base, "manifest", manifestSchema).count()
     Seq((nBatches, nRows, nTombs, nLive, toks, nChunks, versions,
       nBatches > 8 || (nRows > 0 && nTombs * 5 > nRows)))
       .toDF("n_delta_batches", "n_doc_rows", "n_tombstones", "n_live_docs",
@@ -402,70 +368,17 @@ object ChunkIndex {
 
   // ------------------------------------------------------------- compaction
 
-  private def fs(spark: SparkSession) = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
-  private def startMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_start")
-  private def commitMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_commit")
-
-  private def writeMarker(spark: SparkSession,
-                          p: org.apache.hadoop.fs.Path, c: Long): Unit = {
-    val out = fs(spark).create(p, true)
-    try out.write(c.toString.getBytes("UTF-8")) finally out.close()
-  }
-  private def readMarker(spark: SparkSession,
-                         p: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs(spark).exists(p)) None
-    else {
-      val in = fs(spark).open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-
-  private def dropBatches(spark: SparkSession, base: String,
-                          pred: Long => Boolean): Unit = {
-    val f = fs(spark)
-    for (table <- Seq("docs", "cuts", "manifest")) {
-      val dir = new org.apache.hadoop.fs.Path(s"$base/$table")
-      if (f.exists(dir))
-        f.listStatus(dir).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith("batch_id=") &&
-              pred(name.stripPrefix("batch_id=").toLong))
-            f.delete(st.getPath, true)
-        }
-    }
-  }
-
   /** Roll an interrupted compaction forward (commit marker present) or
-    * back (only the start marker). Every index entry point calls this, so
-    * a crash at any point leaves the next call with a consistent view. */
+    * back (only the start marker) — [[DeltaChains.heal]]. Every index
+    * entry point calls this, so a crash at any point leaves the next call
+    * with a consistent view. */
   def heal(spark: SparkSession, base: String): Unit =
-    readMarker(spark, commitMarker(base)) match {
-      case Some(c) => // consolidation complete: finish the cleanup
-        dropBatches(spark, base, _ < c)
-        fs(spark).delete(new org.apache.hadoop.fs.Path(s"$base/tombs"), true)
-        fs(spark).delete(startMarker(base), false)
-        fs(spark).delete(commitMarker(base), false)
-      case None => readMarker(spark, startMarker(base)) match {
-        case Some(c) => // consolidation may be partial: discard it
-          dropBatches(spark, base, _ == c)
-          fs(spark).delete(startMarker(base), false)
-        case None => ()
-      }
-    }
+    DeltaChains.heal(spark, base, Chains, Retired)
 
   /** Fold every delta and tombstone into one consolidated batch. Single
     * writer: run between ingestion runs, never concurrently with one.
-    * Crash-safe via the two-marker protocol healed above: before the
-    * commit marker lands the consolidated partitions are garbage (rolled
-    * back); after it, the old partitions are garbage (rolled forward).
-    * Returns the consolidated batch id — resume streaming with
-    * `baseBatch` above it. */
+    * Crash-safe via the [[DeltaChains.commit]] window. Returns the
+    * consolidated batch id — resume streaming with `baseBatch` above it. */
   def compact(spark: SparkSession, base: String, cutMod: Long): Long = {
     heal(spark, base)
     // Next consolidated id = max over ALL FOUR chains, not just docs:
@@ -475,8 +388,7 @@ object ChunkIndex {
     // the orphan (violating the "batch ids only grow" latest-wins
     // contract). Batch ids are partition DIRECTORY names, so the max is
     // a driver listing (guide §6), not a data scan.
-    val c = (Seq("docs", "cuts", "manifest", "tombs")
-      .flatMap(chainBatchIds(spark, base, _)) :+ -1L).max + 1L
+    val c = DeltaChains.nextBatchId(spark, base, Chains ++ Retired)
     // three independent latest-wins folds of the three chains,
     // materialized concurrently (§2.6)
     val Seq(docs, cuts, manifest) = graft.exec.Concurrent.all(Seq(
@@ -484,16 +396,15 @@ object ChunkIndex {
         .localCheckpoint(),
       () => readCuts(spark, base).select("doc_id", "h").localCheckpoint(),
       () => readManifest(spark, base).localCheckpoint()))
-    writeMarker(spark, startMarker(base), c)
     // the consolidated writes land under the start marker (heal rolls
     // batch c back if any is incomplete) and read only the checkpointed
     // folds — independent sinks, overlapped
-    graft.exec.Concurrent.run(
-      () => writeDelta(base, c)(docs, "docs", Some("h")),
-      () => writeDelta(base, c)(cuts, "cuts", Some("h")),
-      () => writeDelta(base, c)(manifest, "manifest", None))
-    writeMarker(spark, commitMarker(base), c)
-    heal(spark, base) // rolls forward: drops old partitions + tombs
+    DeltaChains.commit(spark, base, c, Chains, Retired) {
+      graft.exec.Concurrent.run(
+        () => DeltaChains.write(base, "docs", c, docs, Some("h")),
+        () => DeltaChains.write(base, "cuts", c, cuts, Some("h")),
+        () => DeltaChains.write(base, "manifest", c, manifest))
+    }
     c
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   * no row — the table is sized by DUPLICATE-INVOLVED documents, not by
   * the corpus.
   *
-  * Layout ([[PreferenceIndex]]'s delta discipline and two-marker
-  * compaction protocol, reused verbatim):
+  * Layout ([[DeltaChains]] — the batch-dir chains, heal and two-marker
+  * compaction commit shared with [[ChunkIndex]] and [[PreferenceIndex]]):
   *
   *   base/members/batch_id=N/  (id, cid)   membership assertions
   *   base/edges/batch_id=N/    (a, b, alive)  verified edges (a < b)
@@ -85,6 +85,8 @@ object ClusterIndex {
     StructField("a", LongType), StructField("b", LongType),
     StructField("alive", BooleanType), StructField("batch_id", LongType)))
 
+  private val Chains = Seq("members", "edges")
+
   /** Membership-retraction sentinel (see the header: `max_by` skips
     * NULLs, so a NULL cid could not win latest-wins). Doc ids are
     * non-negative by fixture and corpus contract; the sentinel never
@@ -104,39 +106,12 @@ object ClusterIndex {
     * both chains). Strictly between the last stream fold and the next
     * one as long as fewer than 2^20 manual ops land in the gap.
     *
-    * The batch id IS the partition directory name, so the max is driver
-    * metadata (guide §6) — two directory listings, zero Spark jobs —
-    * where a column aggregate would scan both chains. A partition dir
-    * exists iff its delta wrote rows (a partitioned write of an empty
-    * frame creates no partition dirs), so the listing max equals the
-    * row max. */
+    * Two directory listings, zero Spark jobs
+    * ([[DeltaChains.nextBatchId]]). */
   def nextBatchId(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    val ids = batchIds(spark, base, "members") ++ batchIds(spark, base, "edges")
-    (ids :+ -1L).max + 1L
+    DeltaChains.nextBatchId(spark, base, Chains)
   }
-
-  // Empty ONLY for a genuinely absent path; any other read failure must
-  // propagate (the PreferenceIndex.readOr contract — folding against a
-  // phantom-empty state would silently orphan every prior assertion).
-  private def readOr(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    if (!fs(spark).exists(new org.apache.hadoop.fs.Path(path)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(path)
-
-  private def writeDelta(base: String, batchId: Long, df: DataFrame): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$base/members")
-
-  private def writeEdges(base: String, batchId: Long, df: DataFrame): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$base/edges")
 
   /** The live membership (id, cid): latest assertion per id, withdrawn
     * ids ([[RetractedCid]]) filtered out AFTER latest-wins — a
@@ -147,7 +122,7 @@ object ClusterIndex {
   def current(spark: SparkSession, base: String,
               excludeBatchId: Long = Long.MinValue): DataFrame = {
     heal(spark, base)
-    readOr(spark, s"$base/members", membersSchema)
+    DeltaChains.read(spark, base, "members", membersSchema)
       .filter(col("batch_id") =!= lit(excludeBatchId))
       .groupBy("id").agg(max_by(col("cid"), col("batch_id")).as("cid"))
       .filter(col("cid") =!= lit(RetractedCid))
@@ -160,7 +135,7 @@ object ClusterIndex {
   def liveEdges(spark: SparkSession, base: String,
                 excludeBatchId: Long = Long.MinValue): DataFrame = {
     heal(spark, base)
-    readOr(spark, s"$base/edges", edgesSchema)
+    DeltaChains.read(spark, base, "edges", edgesSchema)
       .filter(col("batch_id") =!= lit(excludeBatchId))
       .groupBy("a", "b").agg(max_by(col("alive"), col("batch_id")).as("alive"))
       .filter(col("alive")).select(col("a"), col("b"))
@@ -229,7 +204,7 @@ object ClusterIndex {
         graft.exec.Concurrent.labeled[Unit](Seq(
           "cluster: edge delta" -> (() =>
             if (trackEdges)
-              writeEdges(base, batchId,
+              DeltaChains.write(base, "edges", batchId,
                 e.filter(col("id_a") =!= col("id_b"))
                   .select(least(col("id_a"), col("id_b")).as("a"),
                     greatest(col("id_a"), col("id_b")).as("b"))
@@ -247,7 +222,8 @@ object ClusterIndex {
           .select(col("id"), col("id").as("cid"))
           .join(remap, Seq("cid"), "left")
           .select(col("id"), coalesce(col("__new"), col("cid")).as("cid"))
-        writeDelta(base, batchId, changedOld.unionByName(newAsserts))
+        DeltaChains.write(base, "members", batchId,
+          changedOld.unionByName(newAsserts))
       } finally graft.exec.Partitioning.unpersistCheckpoint(all0)
     } finally graft.exec.Partitioning.unpersistCheckpoint(cur)
   }
@@ -297,8 +273,8 @@ object ClusterIndex {
     // A pre-edge-persistence index has memberships but no edge state —
     // relabeling against a phantom-empty edge set would silently split
     // every touched cluster into singletons. Refuse loudly instead.
-    require(!fs(spark).exists(new org.apache.hadoop.fs.Path(s"$base/members"))
-        || fs(spark).exists(new org.apache.hadoop.fs.Path(s"$base/edges")),
+    require(!DeltaChains.exists(spark, base, "members")
+        || DeltaChains.exists(spark, base, "edges"),
       s"$base: cluster index predates edge persistence — withdraw would " +
         "re-label against an empty edge set and split every touched " +
         "cluster; rebuild the index (re-fold its batches) first")
@@ -354,12 +330,12 @@ object ClusterIndex {
         @volatile var relabel: DataFrame = null
         graft.exec.Concurrent.labeled[Unit](Seq(
           "cluster: edge retractions" -> (() =>
-            writeEdges(base, batchId,
+            DeltaChains.write(base, "edges", batchId,
               retract.withColumn("alive", lit(false)))),
           "cluster: survivor cc" -> (() =>
             relabel = Dedup.clusters(survivors,
               ccEdges.select(col("a").as("id_a"), col("b").as("id_b"))))))
-        writeDelta(base, batchId,
+        DeltaChains.write(base, "members", batchId,
           relabel.select(col("id"), col("cluster").as("cid"))
             .unionByName(
               w.select(col("id"), lit(RetractedCid).as("cid"))))
@@ -376,7 +352,7 @@ object ClusterIndex {
     * chains (duplicate-involved nodes), never the corpus. */
   def retractedLive(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    readOr(spark, s"$base/members", membersSchema)
+    DeltaChains.read(spark, base, "members", membersSchema)
       .groupBy("id").agg(max_by(col("cid"), col("batch_id")).as("cid"))
       .filter(col("cid") === lit(RetractedCid)).count()
   }
@@ -386,23 +362,7 @@ object ClusterIndex {
     * compaction; each fold/withdraw adds one. */
   def pendingBatches(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    memberBatchIds(spark, base).size.toLong
-  }
-
-  private def memberBatchIds(spark: SparkSession, base: String): Seq[Long] =
-    batchIds(spark, base, "members")
-
-  /** Live delta-partition ids of one chain — pure directory listing. */
-  private def batchIds(spark: SparkSession, base: String,
-                       sub: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$base/$sub")
-    val f = fs(spark)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id=") =>
-        st.getPath.getName.stripPrefix("batch_id=").toLong
-    }
+    DeltaChains.batchIds(spark, base, "members").size.toLong
   }
 
   /** Erasure-LAG watermark (batch units): how many delta batches have
@@ -415,9 +375,8 @@ object ClusterIndex {
     * plus a directory listing — never a corpus scan. */
   def tombBatchLag(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    oldestSentinelBatch(spark, base)
-      .map(o => memberBatchIds(spark, base).count(_ > o).toLong)
-      .getOrElse(0L)
+    DeltaChains.tombBatchLag(spark, base, Seq("members"),
+      oldestSentinelBatch(spark, base))
   }
 
   /** Wall-clock twin of [[tombBatchLag]]: ms since the delta batch
@@ -428,18 +387,15 @@ object ClusterIndex {
   def oldestTombstoneAgeMs(spark: SparkSession,
                            base: String): Option[Long] = {
     heal(spark, base)
-    oldestSentinelBatch(spark, base).map { o =>
-      val p = new org.apache.hadoop.fs.Path(s"$base/members/batch_id=$o")
-      System.currentTimeMillis() - fs(spark).getFileStatus(p)
-        .getModificationTime
-    }
+    DeltaChains.tombstoneAgeMs(spark, base, "members",
+      oldestSentinelBatch(spark, base))
   }
 
   /** Batch id of the oldest still-live retraction sentinel (the
     * latest-wins pass bounded by tracked membership chains). */
   private def oldestSentinelBatch(spark: SparkSession,
                                   base: String): Option[Long] = {
-    val oldest = readOr(spark, s"$base/members", membersSchema)
+    val oldest = DeltaChains.read(spark, base, "members", membersSchema)
       .groupBy("id").agg(max_by(col("cid"), col("batch_id")).as("cid"),
         max(col("batch_id")).as("b"))
       .filter(col("cid") === lit(RetractedCid))
@@ -456,68 +412,19 @@ object ClusterIndex {
 
   // ------------------------------------------------------------- compaction
 
-  private def fs(spark: SparkSession) = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
-  private def startMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_start")
-  private def commitMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_commit")
-
-  private def writeMarker(spark: SparkSession,
-                          p: org.apache.hadoop.fs.Path, c: Long): Unit = {
-    val out = fs(spark).create(p, true)
-    try out.write(c.toString.getBytes("UTF-8")) finally out.close()
-  }
-  private def readMarker(spark: SparkSession,
-                         p: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs(spark).exists(p)) None
-    else {
-      val in = fs(spark).open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-
-  private def dropBatches(spark: SparkSession, base: String,
-                          pred: Long => Boolean): Unit = {
-    val f = fs(spark)
-    Seq("members", "edges").foreach { sub =>
-      val dir = new org.apache.hadoop.fs.Path(s"$base/$sub")
-      if (f.exists(dir))
-        f.listStatus(dir).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith("batch_id=") &&
-              pred(name.stripPrefix("batch_id=").toLong))
-            f.delete(st.getPath, true)
-        }
-    }
-  }
-
   /** Roll an interrupted compaction forward (commit marker present) or
-    * back (only the start marker) — the [[ChunkIndex.heal]] protocol. */
+    * back (only the start marker) — [[DeltaChains.heal]]; no dir is
+    * retired whole (retractions live in the chains). */
   def heal(spark: SparkSession, base: String): Unit =
-    readMarker(spark, commitMarker(base)) match {
-      case Some(c) =>
-        dropBatches(spark, base, _ < c)
-        fs(spark).delete(startMarker(base), false)
-        fs(spark).delete(commitMarker(base), false)
-      case None => readMarker(spark, startMarker(base)) match {
-        case Some(c) =>
-          dropBatches(spark, base, _ == c)
-          fs(spark).delete(startMarker(base), false)
-        case None => ()
-      }
-    }
+    DeltaChains.heal(spark, base, Chains, retire = Nil)
 
   /** Fold both assertion chains to one consolidated batch (latest-wins
     * resolved once, then a single partition each): live memberships
     * only — [[RetractedCid]] rows retire physically here — and live
     * edges only (retracted edges drop with them). Crash-safe via the
-    * two-marker protocol (the commit marker rolls BOTH dirs forward,
-    * the start marker rolls both back); returns the consolidated batch
-    * id — resume folding with batch ids above it. */
+    * [[DeltaChains.commit]] window (the commit marker rolls BOTH dirs
+    * forward, the start marker rolls both back); returns the
+    * consolidated batch id — resume folding with batch ids above it. */
   def compact(spark: SparkSession, base: String): Long = {
     val c = nextBatchId(spark, base) // heals on entry
     // A trackEdges=false index holds NO edges dir — and compacting must
@@ -528,8 +435,7 @@ object ClusterIndex {
     // (splitting every touched cluster into singletons) instead of
     // refusing loudly. Edge state exists after compact IFF it existed
     // before.
-    val edgesTracked =
-      fs(spark).exists(new org.apache.hadoop.fs.Path(s"$base/edges"))
+    val edgesTracked = DeltaChains.exists(spark, base, "edges")
     // the membership and edge latest-wins folds are independent reads of
     // the two chains — materialized concurrently (§2.6)
     val Seq(Some(folded), foldedEdges) =
@@ -542,17 +448,17 @@ object ClusterIndex {
               .withColumn("alive", lit(true)).localCheckpoint())
           else None)))
     try {
-      writeMarker(spark, startMarker(base), c)
       // both snapshot writes happen strictly inside the marker window —
       // heal rolls batch c forward/back in BOTH dirs regardless of which
       // write finished first, so the two (distinct-dir) writes overlap
       // (§2.6) without changing any crash outcome
-      graft.exec.Concurrent.labeled[Unit](Seq(
-        "cluster: members snapshot" -> (() => writeDelta(base, c, folded)),
-        "cluster: edges snapshot" -> (() =>
-          foldedEdges.foreach(writeEdges(base, c, _)))))
-      writeMarker(spark, commitMarker(base), c)
-      heal(spark, base)
+      DeltaChains.commit(spark, base, c, Chains, retire = Nil) {
+        graft.exec.Concurrent.labeled[Unit](Seq(
+          "cluster: members snapshot" -> (() =>
+            DeltaChains.write(base, "members", c, folded)),
+          "cluster: edges snapshot" -> (() =>
+            foldedEdges.foreach(DeltaChains.write(base, "edges", c, _)))))
+      }
     } finally {
       graft.exec.Partitioning.unpersistCheckpoint(folded)
       foldedEdges.foreach(graft.exec.Partitioning.unpersistCheckpoint)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * matrix on demand: K items bound the fit at K², independent of how
   * many billions of judgments ever streamed.
   *
-  * Layout (same delta/tombstone discipline as [[ChunkIndex]], whose
-  * two-marker compaction protocol this index reuses verbatim):
+  * Layout (same delta/tombstone discipline as [[ChunkIndex]]; the chains,
+  * heal and two-marker compaction commit are [[DeltaChains]]):
   *
   *   base/edges/batch_id=N/  (winner, loser, n)  per-batch win counts
   *   base/ties/batch_id=N/   (a, b, n), a < b    per-batch draw counts
@@ -57,31 +57,15 @@ object PreferenceIndex {
   private val tombsSchema = StructType(Seq(
     StructField("item", StringType), StructField("batch_id", LongType)))
 
-  // Empty ONLY for a genuinely absent path; any other read failure must
-  // propagate. Swallowing a transient listing error here would let
-  // compact() fold against a phantom-empty matrix, write the commit
-  // marker, and retire tombstones without having masked their edges —
-  // silently resurrecting withdrawn items (a delete-wins breach).
-  private def readOr(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    if (!fs(spark).exists(new org.apache.hadoop.fs.Path(path)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(path)
-
-  private def writeDelta(base: String, table: String, batchId: Long,
-                         df: DataFrame): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$base/$table")
+  private val Chains = Seq("edges", "ties")
+  private val Retired = Seq("tombs")
 
   /** Ingest one batch of judgments: aggregate (winner, loser) rows to
     * counts and land them as this batch's own delta partition. */
   def append(spark: SparkSession, base: String, batch: DataFrame,
              winnerCol: String, loserCol: String, batchId: Long): Unit = {
     heal(spark, base)
-    writeDelta(base, "edges", batchId,
+    DeltaChains.write(base, "edges", batchId,
       batch.select(col(winnerCol).cast(StringType).as("winner"),
           col(loserCol).cast(StringType).as("loser"))
         .groupBy("winner", "loser").agg(count(lit(1)).as("n")))
@@ -105,19 +89,19 @@ object PreferenceIndex {
           lit("appendJudgments: outcome must be 'a'|'b'|'tie', got "),
           coalesce(col(outcomeCol).cast(StringType), lit("NULL")))))
         .as("oc"))
-      // localCheckpoint: both writeDelta jobs read this frame — without
+      // localCheckpoint: both delta writes read this frame — without
       // it every micro-batch re-scans its source (and re-runs the
       // outcome validation) twice in the streaming hot path
       .localCheckpoint()
     // independent sinks over the checkpointed frame — overlapped (§2.6)
     graft.exec.Concurrent.run(
-      () => writeDelta(base, "edges", batchId,
+      () => DeltaChains.write(base, "edges", batchId,
         typed.filter(col("oc") =!= "tie")
           .select(
             when(col("oc") === "a", col("ia")).otherwise(col("ib")).as("winner"),
             when(col("oc") === "a", col("ib")).otherwise(col("ia")).as("loser"))
           .groupBy("winner", "loser").agg(count(lit(1)).as("n"))),
-      () => writeDelta(base, "ties", batchId,
+      () => DeltaChains.write(base, "ties", batchId,
         typed.filter(col("oc") === "tie")
           .select(least(col("ia"), col("ib")).as("a"),
             greatest(col("ia"), col("ib")).as("b"))
@@ -131,7 +115,7 @@ object PreferenceIndex {
   def appendCounts(spark: SparkSession, base: String, counts: DataFrame,
                    batchId: Long): Unit = {
     heal(spark, base)
-    writeDelta(base, "edges", batchId,
+    DeltaChains.write(base, "edges", batchId,
       counts.select(col("winner").cast(StringType).as("winner"),
           col("loser").cast(StringType).as("loser"),
           col("n").cast(LongType).as("n"))
@@ -144,29 +128,15 @@ object PreferenceIndex {
     * batches are time-ordered, so when each window appends as its own
     * batch the leaderboard's nonstationarity reads straight off the
     * index with no batch recompute over the judgment log. */
-  def matrixByBatch(spark: SparkSession, base: String): DataFrame = {
-    heal(spark, base)
-    val tombs = readOr(spark, s"$base/tombs", tombsSchema)
-      .select(col("item")).distinct()
-    readOr(spark, s"$base/edges", edgesSchema)
-      .join(tombs.select(col("item").as("winner")), Seq("winner"), "left_anti")
-      .join(tombs.select(col("item").as("loser")), Seq("loser"), "left_anti")
-      .groupBy("batch_id", "winner", "loser").agg(sum("n").as("n"))
-  }
+  def matrixByBatch(spark: SparkSession, base: String): DataFrame =
+    live(spark, base, "edges", edgesSchema, byBatch = true)
 
   /** The live TIE matrix resolved per batch — (batch_id, a, b, n) under
     * the same delete-wins masking as [[ties]]: the standing-index feed
     * for tie-aware windowed drift fits (batch id ≡ window id, exactly
     * like [[matrixByBatch]]). Empty for win-only indexes. */
-  def tiesByBatch(spark: SparkSession, base: String): DataFrame = {
-    heal(spark, base)
-    val tombs = readOr(spark, s"$base/tombs", tombsSchema)
-      .select(col("item")).distinct()
-    readOr(spark, s"$base/ties", tiesSchema)
-      .join(tombs.select(col("item").as("a")), Seq("a"), "left_anti")
-      .join(tombs.select(col("item").as("b")), Seq("b"), "left_anti")
-      .groupBy("batch_id", "a", "b").agg(sum("n").as("n"))
-  }
+  def tiesByBatch(spark: SparkSession, base: String): DataFrame =
+    live(spark, base, "ties", tiesSchema, byBatch = true)
 
   /** Retire the pending tombstones while PRESERVING per-batch history —
     * the drift-probe sibling of [[compact]] (which folds everything
@@ -197,7 +167,7 @@ object PreferenceIndex {
   def compactBatched(spark: SparkSession, base: String,
                      discoveryInListMax: Int = 10000): Unit = {
     heal(spark, base)
-    val tombs = readOr(spark, s"$base/tombs", tombsSchema)
+    val tombs = DeltaChains.read(spark, base, "tombs", tombsSchema)
       .select(col("item")).distinct().localCheckpoint()
     try {
       // delta-sized by contract: collect once so the discovery scan can
@@ -205,12 +175,12 @@ object PreferenceIndex {
       val tombItems: Array[String] =
         tombs.limit(discoveryInListMax + 1).collect().map(_.getString(0))
       if (tombItems.isEmpty) {
-        fs(spark).delete(new org.apache.hadoop.fs.Path(s"$base/tombs"), true)
+        DeltaChains.dropChain(spark, base, "tombs")
         return
       }
       def retire(table: String, schema: StructType,
                  maskCols: Seq[String]): Unit = {
-        val all = readOr(spark, s"$base/$table", schema)
+        val all = DeltaChains.read(spark, base, table, schema)
         // the REWRITE SET: batches holding at least one withdrawn row.
         // IN-literal discovery reads footers on clean partitions (the
         // predicate reaches row-group min/max stats); the broadcast
@@ -235,20 +205,12 @@ object PreferenceIndex {
         try {
           val after = masked.select("batch_id").distinct()
             .collect().map(_.getLong(0)).toSet
-          masked.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(s"$base/$table")
+          DeltaChains.overwrite(base, table, masked)
           // a batch whose every row was withdrawn writes no partition —
           // drop its stale dir, or clearing the tombstones would
           // resurrect it
-          val dead = dirty -- after
-          if (dead.nonEmpty) {
-            val f = fs(spark)
-            dead.foreach { b =>
-              f.delete(new org.apache.hadoop.fs.Path(
-                s"$base/$table/batch_id=$b"), true)
-            }
-          }
+          (dirty -- after).foreach(b => DeltaChains.fs(spark)
+            .delete(DeltaChains.batchDir(base, table, b), true))
         } finally graft.exec.Partitioning.unpersistCheckpoint(masked)
       }
       // independent tables, tombstones deleted only after BOTH retire —
@@ -257,7 +219,7 @@ object PreferenceIndex {
       graft.exec.Concurrent.run(
         () => retire("edges", edgesSchema, Seq("winner", "loser")),
         () => retire("ties", tiesSchema, Seq("a", "b")))
-      fs(spark).delete(new org.apache.hadoop.fs.Path(s"$base/tombs"), true)
+      DeltaChains.dropChain(spark, base, "tombs")
       ()
     } finally graft.exec.Partitioning.unpersistCheckpoint(tombs)
   }
@@ -267,35 +229,37 @@ object PreferenceIndex {
   def withdraw(spark: SparkSession, base: String, items: DataFrame,
                itemCol: String, batchId: Long): Unit = {
     heal(spark, base)
-    writeDelta(base, "tombs", batchId,
+    DeltaChains.write(base, "tombs", batchId,
       items.select(col(itemCol).cast(StringType).as("item")).distinct())
   }
 
   /** The live outcome matrix: delta counts summed, edges touching a
     * withdrawn item masked on BOTH endpoints regardless of batch order
     * (see the delete-wins contract above). */
-  def matrix(spark: SparkSession, base: String): DataFrame = {
-    heal(spark, base)
-    val tombs = readOr(spark, s"$base/tombs", tombsSchema)
-      .select(col("item")).distinct()
-    readOr(spark, s"$base/edges", edgesSchema)
-      .join(tombs.select(col("item").as("winner")), Seq("winner"), "left_anti")
-      .join(tombs.select(col("item").as("loser")), Seq("loser"), "left_anti")
-      .groupBy("winner", "loser").agg(sum("n").as("n"))
-  }
+  def matrix(spark: SparkSession, base: String): DataFrame =
+    live(spark, base, "edges", edgesSchema, byBatch = false)
 
   /** The live tie matrix (a, b, n), a < b — delta counts summed under
     * the SAME delete-wins masking as [[matrix]]: a draw touching a
     * withdrawn item is dead regardless of batch order. Empty for
     * win-only indexes. */
-  def ties(spark: SparkSession, base: String): DataFrame = {
+  def ties(spark: SparkSession, base: String): DataFrame =
+    live(spark, base, "ties", tiesSchema, byBatch = false)
+
+  /** One count chain (its first two columns are the item pair) with every
+    * row touching a withdrawn item masked on BOTH endpoints, summed per
+    * pair — and per batch when `byBatch`. */
+  private def live(spark: SparkSession, base: String, chain: String,
+                   schema: StructType, byBatch: Boolean): DataFrame = {
     heal(spark, base)
-    val tombs = readOr(spark, s"$base/tombs", tombsSchema)
+    val Array(x, y) = schema.fieldNames.take(2)
+    val keys = (if (byBatch) Seq("batch_id") else Nil) ++ Seq(x, y)
+    val tombs = DeltaChains.read(spark, base, "tombs", tombsSchema)
       .select(col("item")).distinct()
-    readOr(spark, s"$base/ties", tiesSchema)
-      .join(tombs.select(col("item").as("a")), Seq("a"), "left_anti")
-      .join(tombs.select(col("item").as("b")), Seq("b"), "left_anti")
-      .groupBy("a", "b").agg(sum("n").as("n"))
+    DeltaChains.read(spark, base, chain, schema)
+      .join(tombs.select(col("item").as(x)), Seq(x), "left_anti")
+      .join(tombs.select(col("item").as(y)), Seq(y), "left_anti")
+      .groupBy(keys.head, keys.tail: _*).agg(sum("n").as("n"))
   }
 
   /** Takedown-SLO watermark: distinct withdrawn items whose tombstones
@@ -303,7 +267,7 @@ object PreferenceIndex {
     * away. Delta-sized read by the tombstone contract. */
   def pendingTombstones(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    readOr(spark, s"$base/tombs", tombsSchema)
+    DeltaChains.read(spark, base, "tombs", tombsSchema)
       .select(col("item")).distinct().count()
   }
 
@@ -314,20 +278,7 @@ object PreferenceIndex {
     * (driver metadata, no row reads). */
   def tombBatchLag(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    def batchIds(chain: String): Seq[Long] = {
-      val dir = new org.apache.hadoop.fs.Path(s"$base/$chain")
-      val f = fs(spark)
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).toSeq.collect {
-        case st if st.isDirectory &&
-            st.getPath.getName.startsWith("batch_id=") =>
-          st.getPath.getName.stripPrefix("batch_id=").toLong
-      }
-    }
-    val tombs = batchIds("tombs")
-    if (tombs.isEmpty) 0L
-    else (batchIds("edges") ++ batchIds("ties")).distinct
-      .count(_ > tombs.min).toLong
+    DeltaChains.tombBatchLag(spark, base, Chains, oldestTomb(spark, base))
   }
 
   /** Wall-clock twin of [[tombBatchLag]]: milliseconds since the OLDEST
@@ -338,31 +289,26 @@ object PreferenceIndex {
     * listing + one status read. */
   def oldestTombstoneAgeMs(spark: SparkSession, base: String): Option[Long] = {
     heal(spark, base)
-    val f = fs(spark)
-    val dir = new org.apache.hadoop.fs.Path(s"$base/tombs")
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_id="))
-      .sortBy(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      .headOption
-      .map(st => System.currentTimeMillis() - st.getModificationTime)
+    DeltaChains.tombstoneAgeMs(spark, base, "tombs", oldestTomb(spark, base))
   }
+
+  private def oldestTomb(spark: SparkSession, base: String): Option[Long] =
+    DeltaChains.batchIds(spark, base, "tombs").minOption
 
   /** Observability: physical layout vs logical content, and whether read
     * amplification has drifted enough to fold. One row. */
   def stats(spark: SparkSession, base: String): DataFrame = {
     heal(spark, base)
     import spark.implicits._
-    val all = readOr(spark, s"$base/edges", edgesSchema)
-    val allTies = readOr(spark, s"$base/ties", tiesSchema)
+    val all = DeltaChains.read(spark, base, "edges", edgesSchema)
+    val allTies = DeltaChains.read(spark, base, "ties", tiesSchema)
     // deltas across BOTH tables drive the compaction signal — a tie-heavy
     // arena fragments the ties table just as fast as edges
     val nBatches = all.select("batch_id")
       .unionAll(allTies.select("batch_id")).distinct().count()
     val nRows = all.count()
     val nTieRows = allTies.count()
-    val nTombs = readOr(spark, s"$base/tombs", tombsSchema)
+    val nTombs = DeltaChains.read(spark, base, "tombs", tombsSchema)
       .select("item").distinct().count()
     val live = matrix(spark, base)
     val nEdges = live.count()
@@ -385,16 +331,14 @@ object PreferenceIndex {
     * serve batch readers; Structured Streaming contributes exactly-once
     * batch boundaries and restart bookkeeping via the checkpoint).
     * `baseBatch` offsets a later leg's ids above earlier versions; see
-    * [[ChunkIndex.run]] for the renumbering contract. */
+    * [[DeltaChains.stream]] and [[ChunkIndex.delete]] for the
+    * renumbering contract. */
   def run(stream: DataFrame, base: String, winnerCol: String,
           loserCol: String, checkpoint: String, baseBatch: Long = 0L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        append(batch.sparkSession, base, batch, winnerCol, loserCol,
-          baseBatch + batchId)
-      }
+    DeltaChains.stream(stream, checkpoint, baseBatch) { (batch, batchId) =>
+      append(batch.sparkSession, base, batch, winnerCol, loserCol, batchId)
+    }
 
   /** [[run]] for judgment streams that may contain draws — each
     * micro-batch goes through [[appendJudgments]] (edges + ties deltas
@@ -403,70 +347,17 @@ object PreferenceIndex {
                    bCol: String, outcomeCol: String, checkpoint: String,
                    baseBatch: Long = 0L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendJudgments(batch.sparkSession, base, batch, aCol, bCol,
-          outcomeCol, baseBatch + batchId)
-      }
+    DeltaChains.stream(stream, checkpoint, baseBatch) { (batch, batchId) =>
+      appendJudgments(batch.sparkSession, base, batch, aCol, bCol,
+        outcomeCol, batchId)
+    }
 
   // ------------------------------------------------------------- compaction
 
-  private def fs(spark: SparkSession) = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
-  private def startMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_start")
-  private def commitMarker(base: String) =
-    new org.apache.hadoop.fs.Path(s"$base/_compact_commit")
-
-  private def writeMarker(spark: SparkSession,
-                          p: org.apache.hadoop.fs.Path, c: Long): Unit = {
-    val out = fs(spark).create(p, true)
-    try out.write(c.toString.getBytes("UTF-8")) finally out.close()
-  }
-  private def readMarker(spark: SparkSession,
-                         p: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs(spark).exists(p)) None
-    else {
-      val in = fs(spark).open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-
-  private def dropBatches(spark: SparkSession, base: String,
-                          pred: Long => Boolean): Unit = {
-    val f = fs(spark)
-    Seq("edges", "ties").foreach { table =>
-      val dir = new org.apache.hadoop.fs.Path(s"$base/$table")
-      if (f.exists(dir))
-        f.listStatus(dir).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith("batch_id=") &&
-              pred(name.stripPrefix("batch_id=").toLong))
-            f.delete(st.getPath, true)
-        }
-    }
-  }
-
   /** Roll an interrupted compaction forward (commit marker present) or
-    * back (only the start marker) — the [[ChunkIndex.heal]] protocol. */
+    * back (only the start marker) — [[DeltaChains.heal]]. */
   def heal(spark: SparkSession, base: String): Unit =
-    readMarker(spark, commitMarker(base)) match {
-      case Some(c) =>
-        dropBatches(spark, base, _ < c)
-        fs(spark).delete(new org.apache.hadoop.fs.Path(s"$base/tombs"), true)
-        fs(spark).delete(startMarker(base), false)
-        fs(spark).delete(commitMarker(base), false)
-      case None => readMarker(spark, startMarker(base)) match {
-        case Some(c) =>
-          dropBatches(spark, base, _ == c)
-          fs(spark).delete(startMarker(base), false)
-        case None => ()
-      }
-    }
+    DeltaChains.heal(spark, base, Chains, Retired)
 
   /** Fold every delta minus the withdrawn edges into one consolidated
     * batch and retire the tombstones. Single writer; crash-safe via the
@@ -474,25 +365,21 @@ object PreferenceIndex {
     * streaming with `baseBatch` above it. */
   def compact(spark: SparkSession, base: String): Long = {
     heal(spark, base)
-    val c = math.max(
-      readOr(spark, s"$base/edges", edgesSchema)
-        .agg(coalesce(max("batch_id"), lit(-1L))).head.getLong(0),
-      readOr(spark, s"$base/ties", tiesSchema)
-        .agg(coalesce(max("batch_id"), lit(-1L))).head.getLong(0)) + 1L
+    val c = DeltaChains.nextBatchId(spark, base, Chains)
     val folded = matrix(spark, base).localCheckpoint()
     val foldedTies = ties(spark, base).localCheckpoint()
-    writeMarker(spark, startMarker(base), c)
-    writeDelta(base, "edges", c, folded)
-    // A win-only index never materializes base/ties (the documented layout
-    // contract) — writing an empty folded batch here would create it on the
-    // first compaction. Only skip when the dir is ALSO absent: an index
-    // whose ties were all withdrawn still needs the folded (empty) batch so
-    // heal() can retire the old deltas it is about to drop.
-    if (foldedTies.limit(1).count() > 0 ||
-        fs(spark).exists(new org.apache.hadoop.fs.Path(s"$base/ties")))
-      writeDelta(base, "ties", c, foldedTies)
-    writeMarker(spark, commitMarker(base), c)
-    heal(spark, base)
+    DeltaChains.commit(spark, base, c, Chains, Retired) {
+      DeltaChains.write(base, "edges", c, folded)
+      // A win-only index never materializes base/ties (the documented
+      // layout contract) — writing an empty folded batch here would create
+      // it on the first compaction. Only skip when the dir is ALSO absent:
+      // an index whose ties were all withdrawn still needs the folded
+      // (empty) batch so heal() can retire the old deltas it is about to
+      // drop.
+      if (foldedTies.limit(1).count() > 0 ||
+          DeltaChains.exists(spark, base, "ties"))
+        DeltaChains.write(base, "ties", c, foldedTies)
+    }
     c
   }
 }
