@@ -1,6 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
@@ -68,13 +70,17 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   * recompute): after every fold, each tracked node's cid is the min id
   * of its connected component in the union of all edges folded so far.
   * Trivially true at the empty state (every node a singleton = its own
-  * min). Inductively: a new batch's edges connect components; mapping
-  * each edge endpoint to its current cid yields a REPRESENTATIVE graph
-  * whose components are exactly the groups of old components being
-  * merged, and [[Dedup.clusters]] over that graph labels each rep with
-  * the min rep — which is the min member id, since each old cid was
-  * already its component's min. Re-asserting members of relabeled
-  * clusters (and the new nodes) restores the invariant. */
+  * min). Inductively: a fold feeds one union-find task (the kernel at
+  * the end of this object) the batch's edges, an `id -> cid` link for
+  * every touched id the state already tracks, and the touched ids
+  * themselves. Its components are exactly the groups of old clusters
+  * (plus new nodes) that the batch merges, and union by min root
+  * labels each with its min id — the min member id, since each old cid
+  * was already its cluster's min. Re-asserting the members of every
+  * old cid whose root moved, and every new node at its root, restores
+  * the invariant. [[withdraw]] re-labels survivors with the same
+  * kernel. [[Dedup.clusters]] is the corpus-scale batch CC both must
+  * agree with. */
 object ClusterIndex {
 
   private val membersSchema = StructType(Seq(
@@ -147,12 +153,18 @@ object ClusterIndex {
     * id — are dropped); `ids` carries the batch's document ids (every
     * ingested document becomes a node even when it matched nothing).
     *
-    * Cost shape: the rep-graph CC runs over the batch's edges mapped
-    * to current cluster ids — delta-sized, not corpus-sized; the
-    * membership re-assert joins the (two-long-column) state against
-    * the relabel map and writes only touched rows. The one full pass
-    * over the membership table is the latest-wins read — columnar ids,
-    * no text, no shingles — which is the part [[compact]] keeps flat.
+    * Cost shape: one union-find task over the batch's edges, the
+    * touched ids and their `id -> cid` links — delta-sized, not
+    * corpus-sized. The links come out of the state through a broadcast
+    * semi-join on the touched ids (inside the kernel's task, which so
+    * streams the state once), and the membership re-assert joins
+    * the (two-long-column) state against the broadcast map of moved
+    * roots, so the state is never shuffled and only touched rows are
+    * written. The one full pass over the membership table is the
+    * latest-wins read — columnar ids, no text, no shingles — which is
+    * the part [[compact]] keeps flat. About six Spark jobs per fold:
+    * the edge delta, the touched-id broadcast and the kernel, the
+    * moved-root broadcast and the members delta.
     *
     * `trackEdges` persists the batch's verified edge delta — the state
     * [[withdraw]] re-labels over (~20% of lifecycle cost at 100×,
@@ -167,65 +179,50 @@ object ClusterIndex {
     heal(spark, base)
     val cur = precomputedCur.getOrElse(
       current(spark, base, excludeBatchId = batchId).localCheckpoint())
+    @volatile var uf: DataFrame = null
     try {
       val e = edges.select(col("id_a").cast(LongType).as("id_a"),
           col("id_b").cast(LongType).as("id_b"))
         .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-        .distinct()
-      val nodes = ids.select(col(ids.columns.head).cast(LongType).as("id"))
+      // touched = the batch's ids and both endpoints of its edges; their
+      // current (id, cid) rows come out of `cur` through a broadcast
+      // semi-join, so the membership table streams once, unshuffled.
+      // Duplicates are harmless to both the join and the kernel.
+      val touched = ids.select(col(ids.columns.head).cast(LongType).as("id"))
+        .filter(col("id").isNotNull)
         .unionAll(e.select(col("id_a").as("id")))
         .unionAll(e.select(col("id_b").as("id")))
-        .distinct()
-      val newNodes = nodes.join(cur, Seq("id"), "left_anti")
-      val all0 = cur
-        .unionByName(newNodes.select(col("id"), col("id").as("cid")))
-        .localCheckpoint()
-      try {
-        // representative graph: each edge between current cluster ids
-        val repEdges = e
-          .join(all0.select(col("id").as("id_a"), col("cid").as("__ca")),
-            Seq("id_a"))
-          .join(all0.select(col("id").as("id_b"), col("cid").as("__cb")),
-            Seq("id_b"))
-          .select(col("__ca").as("id_a"), col("__cb").as("id_b"))
-          .filter(col("id_a") =!= col("id_b")).distinct()
-        val reps = repEdges.select(col("id_a").as("id"))
-          .unionAll(repEdges.select(col("id_b").as("id"))).distinct()
-        // The edge-delta write (the state a later withdrawal re-labels
-        // over) and the rep-graph CC consume only the caller's
-        // checkpointed edges / the materialized state above — they are
-        // independent and overlap (§2.6). The MEMBERS delta still lands
-        // strictly after the edge delta, so the serial order's crash
-        // states are preserved: members-without-edges cannot occur.
-        // min-label propagation over the (delta-sized) rep graph is the
-        // same CC as the batch path, on a graph of merging clusters;
-        // Dedup.clusters' iterations materialize inside its leg.
-        @volatile var relabel: DataFrame = null
-        graft.exec.Concurrent.labeled[Unit](Seq(
-          "cluster: edge delta" -> (() =>
-            if (trackEdges)
-              DeltaChains.write(base, "edges", batchId,
-                e.filter(col("id_a") =!= col("id_b"))
-                  .select(least(col("id_a"), col("id_b")).as("a"),
-                    greatest(col("id_a"), col("id_b")).as("b"))
-                  .distinct().withColumn("alive", lit(true)))),
-          "cluster: rep cc" -> (() =>
-            relabel = Dedup.clusters(reps, repEdges))))
-        val remap = relabel.filter(col("cluster") =!= col("id"))
-          .select(col("id").as("cid"), col("cluster").as("__new"))
-        // touched clusters only: members whose cid was relabeled...
-        val changedOld = cur.join(remap, Seq("cid"))
+      val links = cur.join(broadcast(touched), Seq("id"), "left_semi")
+      // The edge-delta write (the state a later withdrawal re-labels
+      // over) and the union-find consume only the caller's checkpointed
+      // edges and the materialized state — they are independent and
+      // overlap (§2.6). The MEMBERS delta still lands strictly after the
+      // edge delta, so the serial order's crash states are preserved:
+      // members-without-edges cannot occur.
+      graft.exec.Concurrent.labeled[Unit](Seq(
+        "cluster: edge delta" -> (() =>
+          if (trackEdges)
+            DeltaChains.write(base, "edges", batchId,
+              e.filter(col("id_a") =!= col("id_b"))
+                .select(least(col("id_a"), col("id_b")).as("a"),
+                  greatest(col("id_a"), col("id_b")).as("b"))
+                .distinct().withColumn("alive", lit(true)))),
+        "cluster: rep cc" -> (() =>
+          uf = unionFind(kernelRows(Link, e, "id_a", "id_b")
+            .unionAll(kernelRows(Known, links, "id", "cid"))
+            .unionAll(kernelRows(Node, touched, "id", "id"))))))
+      // touched clusters only: every member of an old cluster whose root
+      // moved, plus the batch's new nodes asserted at their root
+      val remap = uf.filter(col("moved"))
+        .select(col("id").as("cid"), col("cid").as("__new"))
+      DeltaChains.write(base, "members", batchId,
+        cur.join(broadcast(remap), Seq("cid"))
           .select(col("id"), col("__new").as("cid"))
-        // ...plus the batch's new nodes (first assertion, possibly
-        // straight into a merged cluster)
-        val newAsserts = newNodes
-          .select(col("id"), col("id").as("cid"))
-          .join(remap, Seq("cid"), "left")
-          .select(col("id"), coalesce(col("__new"), col("cid")).as("cid"))
-        DeltaChains.write(base, "members", batchId,
-          changedOld.unionByName(newAsserts))
-      } finally graft.exec.Partitioning.unpersistCheckpoint(all0)
-    } finally graft.exec.Partitioning.unpersistCheckpoint(cur)
+          .unionByName(uf.filter(!col("moved")).select(col("id"), col("cid"))))
+    } finally {
+      if (uf != null) graft.exec.Partitioning.unpersistCheckpoint(uf)
+      graft.exec.Partitioning.unpersistCheckpoint(cur)
+    }
   }
 
   /** Materialized live-membership snapshot for a fold that will run with
@@ -252,16 +249,21 @@ object ClusterIndex {
     *     (alive=false — a later re-admission of the id must judge
     *     against the LIVE corpus, not resurrect pre-takedown
     *     relations);
-    *  3. [[Dedup.clusters]] re-labels the survivors over their
-    *     surviving edges (splits and min-id moves fall out of the CC);
+    *  3. the union-find kernel ([[fold]]'s) re-labels the survivors
+    *     over their surviving edges in one task: each survivor a
+    *     self-link, each surviving edge a link (splits and min-id moves
+    *     fall out of the min-root labels);
     *  4. the delta asserts every survivor's (possibly unchanged) label
     *     and a [[RetractedCid]] row per withdrawn-and-tracked id.
     *
     * Ids the index never tracked are implicit singletons and withdraw
     * to nothing (no assertion needed — they hold no row). Cost is
-    * bounded by |touched components| + one latest-wins pass over each
-    * chain; replay-idempotent like [[fold]] (state reads exclude
-    * `batchId`, the delta write is a dynamic partition overwrite).
+    * bounded by |touched components| — their members and edges, in ONE
+    * union-find task — plus one latest-wins pass over each chain; past
+    * those passes neither chain is shuffled again (the withdrawn ids,
+    * touched cids and survivors are the broadcast sides). Replay-
+    * idempotent like [[fold]] (state reads exclude `batchId`, the delta
+    * write is a dynamic partition overwrite).
     * Claim `batchId` with [[nextBatchId]] — between stream epochs it
     * lands in the [[StreamBatchStride]] gap. Pair with
     * [[DedupIndex.delete]] on the corpus index: this call updates
@@ -289,17 +291,20 @@ object ClusterIndex {
       "cluster: edges read" -> (() =>
         liveEdges(spark, base, excludeBatchId = batchId)
           .localCheckpoint()))) // two consumers: retraction + CC restrict
+    @volatile var relabel: DataFrame = null
     try {
-      val w = ids.select(col(ids.columns.head).cast(LongType).as("id"))
-        .filter(col("id").isNotNull).distinct()
-        .join(cur, Seq("id"), "left_semi")
-        .localCheckpoint() // takedowns are request-driven: delta-sized
+      // takedowns are request-driven: delta-sized, so the request side
+      // is the broadcast one and `cur` streams once, unshuffled
+      val w = cur.join(broadcast(
+          ids.select(col(ids.columns.head).cast(LongType).as("id"))),
+          Seq("id"), "left_semi")
+        .select(col("id")).localCheckpoint()
       try {
         // every requested id is an implicit singleton: nothing to
         // retract or re-label — skip the re-label work entirely
         if (w.isEmpty) return
         val touched = cur.join(broadcast(w), Seq("id"), "left_semi")
-          .select(col("cid")).distinct()
+          .select(col("cid"))
         val members = cur.join(broadcast(touched), Seq("cid"), "left_semi")
         val survivors = members.join(broadcast(w), Seq("id"), "left_anti")
           .select(col("id"))
@@ -312,8 +317,10 @@ object ClusterIndex {
         // survive (edges never cross components, so restricting to
         // survivor endpoints IS the touched-component restriction)
         val ccEdges = e
-          .join(survivors.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(survivors.select(col("id").as("b")), Seq("b"), "left_semi")
+          .join(broadcast(survivors.select(col("id").as("a"))), Seq("a"),
+            "left_semi")
+          .join(broadcast(survivors.select(col("id").as("b"))), Seq("b"),
+            "left_semi")
         // EDGE RETRACTIONS STRICTLY BEFORE THE MEMBERSHIP DELTA: a crash
         // between the two writes followed by a re-run under a FRESH
         // batch id (the documented id-claim procedure) still finds the
@@ -324,22 +331,26 @@ object ClusterIndex {
         // that a LATER withdraw of the same component would count as
         // surviving connectivity. (Same-batch-id replays were always
         // safe either way: excludeBatchId hides the first attempt.)
-        // The survivor re-labeling (CC over the touched components) only
-        // READS the checkpointed chains, so it overlaps the retraction
-        // write (§2.6); the membership delta lands after both settle.
-        @volatile var relabel: DataFrame = null
+        // The survivor re-labeling (the union-find kernel over the
+        // touched components) only READS the checkpointed chains, so it
+        // overlaps the retraction write (§2.6); the membership delta
+        // lands after both settle.
         graft.exec.Concurrent.labeled[Unit](Seq(
           "cluster: edge retractions" -> (() =>
             DeltaChains.write(base, "edges", batchId,
               retract.withColumn("alive", lit(false)))),
           "cluster: survivor cc" -> (() =>
-            relabel = Dedup.clusters(survivors,
-              ccEdges.select(col("a").as("id_a"), col("b").as("id_b"))))))
+            relabel = unionFind(kernelRows(Node, survivors, "id", "id")
+              .unionAll(kernelRows(Link, ccEdges, "a", "b"))))))
         DeltaChains.write(base, "members", batchId,
-          relabel.select(col("id"), col("cluster").as("cid"))
+          relabel.select(col("id"), col("cid"))
             .unionByName(
               w.select(col("id"), lit(RetractedCid).as("cid"))))
-      } finally graft.exec.Partitioning.unpersistCheckpoint(w)
+      } finally {
+        if (relabel != null)
+          graft.exec.Partitioning.unpersistCheckpoint(relabel)
+        graft.exec.Partitioning.unpersistCheckpoint(w)
+      }
     } finally {
       graft.exec.Partitioning.unpersistCheckpoint(e)
       graft.exec.Partitioning.unpersistCheckpoint(cur)
@@ -409,6 +420,74 @@ object ClusterIndex {
   def stats(spark: SparkSession, base: String): DataFrame =
     current(spark, base).groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"), min(col("id")).as("min_id"))
+
+  // ------------------------------------------------------ union-find kernel
+
+  // Kernel row kinds (column `kind`; `a` and `b` are never NULL):
+  private final val Link = 0  // union a and b; emits nothing
+  private final val Node = 1  // a needs a label (b = a): emits
+                              // (a, label(a), moved = false) unless a is Known
+  private final val Known = 2 // tracked id a, asserted at cid b: union a and
+                              // b; emits (b, label(b), moved = true) once if
+                              // label(b) != b
+
+  private val kernelOut = StructType(Seq(
+    StructField("id", LongType), StructField("cid", LongType),
+    StructField("moved", BooleanType)))
+
+  private def kernelRows(kind: Int, df: DataFrame, a: String,
+                         b: String): DataFrame =
+    df.select(lit(kind).as("kind"), col(a).as("a"), col(b).as("b"))
+
+  /** Union-find over `rows` (see the row kinds above) in ONE task:
+    * `coalesce(1)` + `mapPartitions`, no shuffle, no driver-side rows.
+    * Ids map to dense indices by binary search over their sorted distinct
+    * array, so index order is id order; union hangs the larger root under
+    * the smaller and find halves the path it walks, so every root is its
+    * component's min id — the [[Dedup.clusters]] label. All state is
+    * primitive arrays sized by the input rows. Materialized once
+    * (localCheckpoint); the caller unpersists it. */
+  private def unionFind(rows: DataFrame): DataFrame =
+    rows.coalesce(1).mapPartitions { it =>
+      val kb = new mutable.ArrayBuilder.ofInt
+      val ab = new mutable.ArrayBuilder.ofLong
+      val bb = new mutable.ArrayBuilder.ofLong
+      it.foreach { r => kb += r.getInt(0); ab += r.getLong(1); bb += r.getLong(2) }
+      val (kind, a, b) = (kb.result(), ab.result(), bb.result())
+      val ids = {
+        val all = a ++ b
+        java.util.Arrays.sort(all)
+        var n = 0
+        for (x <- all) if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 }
+        java.util.Arrays.copyOf(all, n)
+      }
+      val ia = a.map(java.util.Arrays.binarySearch(ids, _))
+      val ib = b.map(java.util.Arrays.binarySearch(ids, _))
+      val parent = Array.range(0, ids.length)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      for (i <- kind.indices) {
+        val ra = find(ia(i)); val rb = find(ib(i))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      val known = new Array[Boolean](ids.length)
+      for (i <- kind.indices if kind(i) == Known) known(ia(i)) = true
+      val emitted = new Array[Boolean](ids.length)
+      kind.indices.iterator.flatMap { i =>
+        val x = if (kind(i) == Known) ib(i) else ia(i)
+        val r = find(x)
+        val emit = kind(i) match {
+          case Node => !known(x)
+          case Known => r != x
+          case _ => false
+        }
+        if (!emit || emitted(x)) None
+        else { emitted(x) = true; Some(Row(ids(x), ids(r), kind(i) == Known)) }
+      }
+    }(Encoders.row(kernelOut)).localCheckpoint()
 
   // ------------------------------------------------------------- compaction
 

@@ -1826,8 +1826,8 @@ object ExtQueries {
     *     BOTH standing structures: [[graft.ext.DedupIndex.delete]]
     *     masks the corpus rows, [[graft.ext.ClusterIndex.withdraw]]
     *     retracts memberships and incident edges and re-labels ONLY the
-    *     touched components' survivors ([[graft.ext.Dedup.clusters]]
-    *     over the surviving edges — splits and min-id moves fall out);
+    *     touched components' survivors (one union-find task over the
+    *     surviving edges — splits and min-id moves fall out);
     *  5. [[graft.ext.DedupIndex.compactPartial]] retires the tombstones
     *     (file-granular: only tombstone-dirty buckets rewrite) — the
     *     re-ingestion precondition;

@@ -122,8 +122,9 @@ object IngestDedup {
       // append — all derive from the CHECKPOINTED edges and write to
       // DISTINCT state (the verdict path, the cluster base, the index
       // tables), so they run as concurrent driver-submitted jobs
-      // (guide §2.6): the fold's tiny rep-graph stages back-fill the
-      // append's bucketed-write tail instead of waiting behind it.
+      // (guide §2.6): the fold — a handful of small jobs around one
+      // union-find task — finishes inside the append's bucketed write
+      // instead of waiting behind it.
       // Replay safety is per-leg and order-free — each leg was already
       // individually idempotent (dynamic partition overwrite / strided
       // fold id / stamped append), so a crash after ANY subset of legs

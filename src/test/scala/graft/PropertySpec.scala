@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean}
 
 import org.apache.spark.sql.functions._
 
@@ -378,6 +378,59 @@ object PropertySpec extends Properties("graft") {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       standing == oneShot
     }
+
+  property("cluster index: any fold/withdraw interleaving == Dedup.clusters over live nodes and alive edges") = {
+    import graft.ext.{ClusterIndex, Dedup}
+    // random steps use ids 1..9: 0 is held back for the tail's new node
+    // below every cid, and -1 is the retraction sentinel
+    val id = Gen.choose(1L, 9L)
+    val end = Gen.frequency(8 -> id.map(Option(_)), 1 -> Gen.const(Option.empty[Long]))
+    val edge = Gen.frequency(5 -> Gen.zip(end, end), 1 -> id.map(x => (Option(x), Option(x))))
+    // (kind, edges, ids): 0 = fold, 1 = withdraw, 2 = replay the previous
+    // step under its own batch id; every edge list repeats its first edge
+    val step = for {
+      kind <- Gen.frequency(5 -> 0, 2 -> 1, 1 -> 2)
+      es <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, edge))
+      ids <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, id))
+    } yield (kind, es ++ es.take(1), ids)
+    // no shrinking: shrunk ids leave the generator's range (down to the
+    // sentinel), so only the generated case is a valid counterexample
+    forAllNoShrink(Gen.listOfN(5, step), id) { (random, anchor) =>
+      // the tail folds node 0 (smaller than every cid) onto `anchor`,
+      // then replays that fold
+      val steps = random :+ ((0, List((Option(0L), Option(anchor))), List(0L))) :+
+        ((2, Nil, Nil))
+      val base = java.nio.file.Files.createTempDirectory("graft_pcc").toString + "/cc"
+      var live = Set.empty[Long]
+      var alive = Set.empty[(Long, Long)]
+      var prev: Option[(Int, List[(Option[Long], Option[Long])], List[Long])] = None
+      var batch = -1L
+      val failure = steps.iterator.zipWithIndex.map { case (s, i) =>
+        val (kind, es, ids) = if (s._1 == 2) prev.getOrElse(s) else { batch += 1; s }
+        prev = Some((kind, es, ids))
+        if (kind == 0) {
+          ClusterIndex.fold(spark, base, es.toDF("id_a", "id_b"), ids.toDF("id"), batch)
+          val full = es.collect { case (Some(a), Some(b)) => (a, b) }
+          live ++= ids ++ full.flatMap(p => Seq(p._1, p._2))
+          alive ++= full.collect { case (a, b) if a != b => (a min b, a max b) }
+        } else if (kind == 1) {
+          ClusterIndex.withdraw(spark, base, ids.toDF("id"), batch)
+          val gone = ids.toSet & live
+          live --= gone
+          alive = alive.filterNot { case (a, b) => gone(a) || gone(b) }
+        }
+        val got = ClusterIndex.current(spark, base).as[(Long, Long)].collect().toMap
+        val want =
+          if (live.isEmpty) Map.empty[Long, Long]
+          else Dedup.clusters(live.toSeq.toDF("id"), alive.toSeq.toDF("id_a", "id_b"))
+            .as[(Long, Long)].collect().toMap
+        if (got == want) None
+        else Some(s"step $i (kind $kind, batch $batch, edges $es, ids $ids): " +
+          s"current $got, Dedup.clusters $want")
+      }.collectFirst { case Some(msg) => msg }
+      failure.isEmpty :| failure.getOrElse("")
+    }
+  }
 
   property("epoch shuffle: gap-free token intervals; a shard skips only under a straddling doc") =
     forAll(Gen.choose(1L, 500L), Gen.listOfN(12, Gen.choose(0, 8))) { (budget, lens) =>
