@@ -17,7 +17,22 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *    catalog ops (DROP + RENAME); a crash between them is healed by
   *    [[heal]], which every index API calls on entry;
   *  - every publish prunes version dirs outside its keep-set, so
-  *    repeated rebuilds cannot leak one full snapshot per call. */
+  *    repeated rebuilds cannot leak one full snapshot per call.
+  *
+  * It also owns the TOMBSTONE LIFECYCLE both indexes share, so each
+  * step exists once and never branches on which index calls it:
+  *  - stamp: [[stampTombs]] appends deletions stamped with the anchor
+  *    table's snapshot epoch;
+  *  - read: [[liveTombIds]] holds the epoch-first read order every probe
+  *    mask and fold depends on;
+  *  - dispatch: [[chooseCompaction]] picks full vs partial and hands its
+  *    dirty-file scan on;
+  *  - partial fold: [[planPartial]] splits each table into rewrite and
+  *    carry sets, [[writePartial]] writes the subset and carries the rest;
+  *  - commit: [[commitSnapshots]] swaps the anchor LAST, then
+  *    [[clearTombs]] garbage-collects the now-inert tombstones.
+  * The indexes keep only what is their own: table lists, sidecars,
+  * preconditions and how their post-commit steps overlap. */
 private[graft] object BucketedTables {
 
   /** External-table location root as a Hadoop filesystem URI: taken from
@@ -98,29 +113,48 @@ private[graft] object BucketedTables {
   def snapshotEpoch(spark: SparkSession, table: String): String =
     new Path(location(spark, table)).getName
 
-  /** The ACTIVE tombstone ids of a standing index, for the snapshot
-    * identified by `epoch` — shared by both indexes' probe masks and
-    * compaction folds. None = no tombstone table = nothing deleted.
-    * Rows from a pre-epoch tombstone table (no `ep` column) are
-    * treated as ALWAYS active: over-masking is the safe direction for
-    * a takedown, and [[upgradeLegacyTombs]] rewrites such a table on
-    * the next delete.
+  /** The ACTIVE tombstone ids of a standing index: the rows of `tombs`
+    * stamped with the live snapshot epoch of `anchor` — shared by both
+    * indexes' probe masks and compaction folds. None = no tombstone
+    * table = nothing deleted. Rows from a pre-epoch tombstone table (no
+    * `ep` column) are treated as ALWAYS active: over-masking is the safe
+    * direction for a takedown, and [[stampTombs]] rewrites such a table
+    * on the next delete.
     *
-    * READ ORDER MATTERS for the caller: compute `epoch` BEFORE
-    * resolving the corpus scan it will mask. A compaction/rebuild swap
+    * READ ORDER is the contract this helper holds: the epoch is read
+    * FIRST, then the tombstones, and the caller resolves the corpus scan
+    * it will mask only after this returns. A compaction/rebuild swap
     * racing between the two then gives (old epoch, NEW scan) — the
     * tombstones stay active against already-clean rows, a harmless
     * over-mask — whereas the scan-first order could give (new epoch,
     * OLD scan): inert tombstones against a snapshot that still holds
     * the deleted rows, a transient resurrect. */
-  def activeTombIds(spark: SparkSession, tombs: String,
-                    epoch: String): Option[DataFrame] =
+  def liveTombIds(spark: SparkSession, anchor: String,
+                  tombs: String): Option[DataFrame] = {
+    val epoch = snapshotEpoch(spark, anchor)
     if (!spark.catalog.tableExists(tombs)) None
     else {
       val t = spark.table(tombs)
       Some((if (t.columns.contains("ep")) t.filter(col("ep") === lit(epoch))
             else t).select(col("id")))
     }
+  }
+
+  /** Mark `ids(idCol)` deleted against the live snapshot of `anchor`:
+    * read its epoch, upgrade a pre-epoch tombstone table, then append
+    * one epoch-stamped row per distinct id to `tombs` in ONE table write
+    * (no partial-deletion window). Tombstones are IDEMPOTENT, so a
+    * failed delete is safely re-issued. The caller holds the writer
+    * lease — a delete racing a compaction swap would stamp an epoch the
+    * swap just retired — and has healed both tables. */
+  def stampTombs(spark: SparkSession, anchor: String, tombs: String,
+                 ids: DataFrame, idCol: String): Unit = {
+    val epoch = snapshotEpoch(spark, anchor)
+    upgradeLegacyTombs(spark, tombs, epoch)
+    writeBucketed(
+      ids.select(col(idCol).as("id")).distinct().withColumn("ep", lit(epoch)),
+      tombs, Seq("id"), buckets = 4, SaveMode.Append)
+  }
 
   /** Anti-join `df` against the active tombstones (no-op when there is
     * no tombstone table, or when `df` cannot be masked by id — the
@@ -137,26 +171,26 @@ private[graft] object BucketedTables {
     * every row with `epoch` — they were active, they stay active. A
     * crash-safe scratch-then-rename overwrite; no-op on a current
     * table. */
-  def upgradeLegacyTombs(spark: SparkSession, tombs: String,
-                         epoch: String): Unit =
+  private def upgradeLegacyTombs(spark: SparkSession, tombs: String,
+                                 epoch: String): Unit =
     if (spark.catalog.tableExists(tombs) &&
         !spark.table(tombs).columns.contains("ep"))
       writeBucketed(
         spark.table(tombs).withColumn("ep", lit(epoch)),
         tombs, Seq("id"), bucketsOf(spark, tombs), SaveMode.Overwrite)
 
-  /** Truncate a bucketed table via a crash-safe overwrite — the
-    * tombstone GC both indexes run after a compaction's swaps. An
-    * already-empty table skips the rewrite: the one-row existence probe
-    * costs far less than the overwrite's write job + two catalog ops +
-    * prune, and empty-tombstone compactions are the steady state of a
-    * takedown-light index. */
-  def truncateBucketed(spark: SparkSession, table: String,
-                       keys: Seq[String]): Unit =
-    if (spark.catalog.tableExists(table) &&
-        !spark.table(table).limit(1).isEmpty)
-      writeBucketed(spark.table(table).limit(0), table, keys,
-        bucketsOf(spark, table), SaveMode.Overwrite)
+  /** Truncate the tombstone table via a crash-safe overwrite — the GC
+    * both indexes run after a compaction's [[commitSnapshots]]: the
+    * anchor swap changed the epoch, so the folded tombstones are inert
+    * already. An already-empty table skips the rewrite: the one-row
+    * existence probe costs far less than the overwrite's write job + two
+    * catalog ops + prune, and empty-tombstone compactions are the steady
+    * state of a takedown-light index. */
+  def clearTombs(spark: SparkSession, tombs: String): Unit =
+    if (spark.catalog.tableExists(tombs) &&
+        !spark.table(tombs).limit(1).isEmpty)
+      writeBucketed(spark.table(tombs).limit(0), tombs, Seq("id"),
+        bucketsOf(spark, tombs), SaveMode.Overwrite)
 
   /** Drop a table (and its crash-marker scratch entry) from the catalog
     * and delete every snapshot dir under its root — the shared cleanup
@@ -575,6 +609,31 @@ private[graft] object BucketedTables {
       Set(new Path(newPath).getName, new Path(oldLoc).getName))
   }
 
+  /** The order of a compaction's catalog commits: every non-anchor
+    * `(table, snapshot)` in the caller's order, the ANCHOR LAST. The
+    * anchor's swap changes the tombstone epoch, so it must land after
+    * every other table's fold: a crash before it leaves the tombstones
+    * active and every table, folded or not, still masked. Anchor-first
+    * would retire the tombstones while unfolded tables still hold the
+    * deleted rows — a resurrect. */
+  def commitOrder(anchor: String,
+                  snaps: Seq[(String, String)]): Seq[(String, String)] = {
+    val (last, first) = snaps.partition(_._1 == anchor)
+    first ++ last
+  }
+
+  /** Publish a compaction: the liveness heartbeat at the phase boundary
+    * (snapshots written, about to swap — what [[leaseInfo]]'s staleness
+    * check observes), then each snapshot's single-catalog-op
+    * [[swapLocation]] in [[commitOrder]]. */
+  def commitSnapshots(spark: SparkSession, anchor: String,
+                      snaps: Seq[(String, String)]): Unit = {
+    renewLease(spark, anchor)
+    commitOrder(anchor, snaps).foreach { case (table, snap) =>
+      swapLocation(spark, table, snap)
+    }
+  }
+
   /** The per-bucket compaction frame: a SHUFFLE-FREE dedup of one table.
     * The bucketed scan is forced to one partition per bucket (the caller
     * disables `autoBucketedScan`), identical rows co-bucket by
@@ -666,6 +725,104 @@ private[graft] object BucketedTables {
     else if (dirtyFiles > maxDirtyShare * totalFiles) "full"
     else "partial"
 
+  /** The compaction dispatch of both indexes' `compactAuto`: the cheap
+    * file-count gate on `anchor` first (below `minFiles` the answer is
+    * "full" and no scan is paid), then the anchor's [[dirtyFiles]] scan,
+    * then [[compactionChoice]]. Returns the choice with the scan, which
+    * the partial fold takes as the anchor's dirty set ([[planPartial]])
+    * so it is never paid twice. */
+  def chooseCompaction(spark: SparkSession, anchor: String, tombs: String,
+                       minFiles: Int, maxDirtyShare: Double)
+      : (String, Option[Set[String]]) = {
+    val totalFiles = bucketFilePaths(spark, anchor).size
+    val dirty =
+      if (totalFiles < minFiles) None
+      else Some(dirtyFiles(spark, anchor, liveTombIds(spark, anchor, tombs)))
+    (compactionChoice(totalFiles, dirty.fold(0)(_.size), minFiles,
+      maxDirtyShare), dirty)
+  }
+
+  /** One table's partial-compaction plan ([[planPartial]]): its live
+    * files split into the `rewrite` and `carried` sets, the `raw` read of
+    * the rewrite files (None when nothing is carried) and the masked,
+    * deduped `subset` the new snapshot is written from. */
+  final case class PartialFold(table: String, keys: Seq[String],
+                               rewrite: Seq[Path], carried: Seq[Path],
+                               raw: Option[DataFrame], subset: DataFrame)
+
+  /** Plan the PARTIAL compaction of `table` (bucket keys `keys`): the
+    * live files physically holding a tombstoned row rewrite, every other
+    * file carries into the new snapshot unchanged. `dirty` is that file
+    * set when the caller already knows it (the dispatch's scan, or empty
+    * for a table whose deletions scatter and which never rewrites on
+    * them); None runs [[dirtyFiles]] here.
+    *
+    * None when the table is UNTOUCHED (nothing to rewrite, something to
+    * carry): its snapshot would be byte-identical to the live one, so
+    * writing, re-linking and swapping it is pure overhead. Skipping does
+    * not change the tombstone story — retirement is the ANCHOR table's
+    * epoch change, and an untouched table has no physical rows for its
+    * tombstones to mask.
+    *
+    * Otherwise the subset: with nothing to carry, the full fold's
+    * shuffle-free [[compactionFrame]]; else ONLY the rewrite files, read
+    * raw (clean files never decode). The raw read loses the bucketed
+    * partitioning, so the deletion-bounded subset pays ONE repartition
+    * on the bucket keys — Spark's repartition hash IS the bucket
+    * assignment, and the partition count is sized to the rewrite set,
+    * not the bucket count — then the shuffle-free [[adjacentDedup]]
+    * (identical rows share their bucket keys, so the repartition
+    * already co-located them). Replay duplicates fold WITHIN the subset;
+    * cross-file ones against carried files wait for a full compaction
+    * (probe-neutral). */
+  def planPartial(spark: SparkSession, table: String, keys: Seq[String],
+                  tombIds: Option[DataFrame],
+                  dirty: Option[Set[String]]): Option[PartialFold] = {
+    val isDirty = dirty.getOrElse(dirtyFiles(spark, table, tombIds))
+    val (rewrite, carried) = bucketFilePaths(spark, table).map(_._2)
+      .partition(p => isDirty(p.toUri.getPath))
+    if (rewrite.isEmpty && carried.nonEmpty) {
+      System.err.println(s"[compactPartial] $table: untouched " +
+        s"(carry=${carried.size} files in place) — skipped")
+      None
+    } else {
+      val raw =
+        if (carried.isEmpty) None
+        else Some(spark.read.schema(spark.table(table).schema)
+          .parquet(rewrite.map(_.toString): _*))
+      val subset = raw match {
+        case None => maskByTombs(compactionFrame(spark, table), tombIds)
+        case Some(r) => adjacentDedup(maskByTombs(r, tombIds)
+          .repartition(math.min(bucketsOf(spark, table), rewrite.size),
+            keys.map(col): _*))
+      }
+      Some(PartialFold(table, keys, rewrite, carried, raw, subset))
+    }
+  }
+
+  /** Write `fold`'s subset as its table's next snapshot
+    * ([[writeSnapshot]], `sidecar` and `maxRecordsPerFile` passed on),
+    * run `beforeCarry` on the new dir while it holds only the rewritten
+    * files, then carry the clean files in ([[copyBucketFiles]]). Returns
+    * the snapshot path; publication is [[commitSnapshots]]. */
+  def writePartial(spark: SparkSession, fold: PartialFold,
+                   sidecar: Seq[(String, Array[Byte])] = Nil,
+                   maxRecordsPerFile: Long = 0L,
+                   beforeCarry: String => Unit = _ => ()): String = {
+    val t0 = System.nanoTime()
+    val snap = writeSnapshot(spark, fold.table, fold.keys, fold.subset,
+      sidecar, maxRecordsPerFile)
+    beforeCarry(snap)
+    val t1 = System.nanoTime()
+    if (fold.carried.nonEmpty)
+      copyBucketFiles(spark, fold.table, fold.carried, snap)
+    System.err.println(f"[compactPartial] ${fold.table}: rewrite=" +
+      f"${fold.rewrite.size} carry=${fold.carried.size} files; " +
+      f"write=${(t1 - t0) / 1e9}%.2fs " +
+      f"carry=${(System.nanoTime() - t1) / 1e9}%.2fs")
+    snap
+  }
+
   /** The live files of `table` physically holding a tombstoned row —
     * partial compaction's rewrite set, shared by both standing indexes.
     * Discovery reads the id column + `input_file_name` only (parquet
@@ -674,11 +831,12 @@ private[graft] object BucketedTables {
     * list, which parquet's row-group min/max stats then prune against —
     * on a mostly-clean corpus the scan reads footers, not rows; a
     * degenerate tombstone set (> `inListMax`) falls back to the
-    * broadcast semi-join. */
+    * broadcast semi-join. Prints the scan's time and file count. */
   def dirtyFiles(spark: SparkSession, table: String,
                  tombIds: Option[DataFrame],
-                 inListMax: Int = 10000): Set[String] =
-    tombIds match {
+                 inListMax: Int = 10000): Set[String] = {
+    val t0 = System.nanoTime()
+    val out: Set[String] = tombIds match {
       case Some(t) if !spark.table(table).columns.contains("id") =>
         // a table that cannot be deletion-scanned (legacy schema, no id
         // column) must not read as CLEAN while tombstones are pending:
@@ -695,29 +853,22 @@ private[graft] object BucketedTables {
         val scan = spark.table(table)
           .select(col("id"), input_file_name().as("f"))
         val ids = t.limit(inListMax + 1).collect().map(_.get(0))
-        val matched =
-          if (ids.isEmpty) return Set.empty
-          else if (ids.length <= inListMax)
-            scan.filter(col("id").isin(ids.toIndexedSeq: _*))
-          else scan.join(broadcast(t), Seq("id"), "left_semi")
-        matched.select(col("f")).distinct().collect()
-          .map(r => new Path(r.getString(0)).toUri.getPath).toSet
-      case _ => Set.empty
+        if (ids.isEmpty) Set.empty[String]
+        else {
+          val matched =
+            if (ids.length <= inListMax)
+              scan.filter(col("id").isin(ids.toIndexedSeq: _*))
+            else scan.join(broadcast(t), Seq("id"), "left_semi")
+          matched.select(col("f")).distinct().collect()
+            .map(r => new Path(r.getString(0)).toUri.getPath).toSet
+        }
+      case _ => Set.empty[String]
     }
+    System.err.println(f"[compactPartial] $table: dirty-file scan " +
+      f"${(System.nanoTime() - t0) / 1e9}%.2fs (${out.size} files)")
+    out
+  }
 
-  /** Carry the parquet files of `buckets` from `table`'s LIVE snapshot
-    * dir into `destDir` unchanged (names preserved — the bucket id is
-    * encoded in the file name, and Spark's bucketed reader groups files
-    * by that suffix, tolerating several files per bucket). This
-    * carry-over is what makes PARTIAL compaction partial: an untouched
-    * file moves to the new snapshot without decode / dedup / sort /
-    * re-encode — and without moving bytes where the store allows it:
-    * on `file://` each carry is a HARD LINK (parquet files are
-    * immutable and version pruning only unlinks, so shared inodes are
-    * safe); elsewhere a filesystem copy (object stores would serve
-    * this as a server-side copy; HDFS streams it). Collision-free by
-    * construction: every Spark write stamps fresh job UUIDs into its
-    * file names. */
   /** The live snapshot's parquet files keyed by the bucket id parsed
     * from Spark's bucketed file naming (`..._<bucket id>.c…`) — driver
     * metadata (one dir listing), shared by partial compaction's
@@ -734,6 +885,18 @@ private[graft] object BucketedTables {
       })
   }
 
+  /** Carry `srcFiles` from `table`'s LIVE snapshot dir into `destDir`
+    * unchanged (names preserved — the bucket id is encoded in the file
+    * name, and Spark's bucketed reader groups files by that suffix,
+    * tolerating several files per bucket). This carry-over is what makes
+    * PARTIAL compaction partial: an untouched file moves to the new
+    * snapshot without decode / dedup / sort / re-encode — and without
+    * moving bytes where the store allows it: on `file://` each carry is
+    * a HARD LINK (parquet files are immutable and version pruning only
+    * unlinks, so shared inodes are safe); elsewhere a filesystem copy
+    * (object stores would serve this as a server-side copy; HDFS streams
+    * it). Collision-free by construction: every Spark write stamps fresh
+    * job UUIDs into its file names. */
   def copyBucketFiles(spark: SparkSession, table: String,
                       srcFiles: Seq[Path], destDir: String): Unit = {
     val fs = fsFor(spark, new Path(location(spark, table)))

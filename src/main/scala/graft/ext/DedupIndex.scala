@@ -196,17 +196,19 @@ object DedupIndex {
       // not per distinct text): per-document deletion must retire
       // exactly one holder's witness — a text shared by several live
       // documents keeps witnessing the exact rule for the others.
-      val exactWrite = () => writeBucketed(
+      val exactWrite = () => BucketedTables.writeBucketed(
         art.select(col("h"), col("t"), col("bid"), col("id")).distinct(),
         exactTable(base), Seq("h", "t"), buckets, mode)
       val others = Seq[(String, () => Unit)](
-        "dedup: pref write" -> (() => writeBucketed(prefixRows(art, threshold),
-          prefTable(base), Seq("bk"), buckets, mode)),
+        "dedup: pref write" -> (() => BucketedTables.writeBucketed(
+          prefixRows(art, threshold), prefTable(base), Seq("bk"), buckets, mode)),
         "dedup: sh write" -> (() =>
-          writeBucketed(art.select(col("id"), col("blk"), col("sh"), col("bid")),
+          BucketedTables.writeBucketed(
+            art.select(col("id"), col("blk"), col("sh"), col("bid")),
             shTable(base), Seq("id"), buckets, mode)),
         "dedup: band write" -> (() =>
-          writeBucketed(bandRows(art), bandTable(base), Seq("bk"), buckets, mode)))
+          BucketedTables.writeBucketed(bandRows(art), bandTable(base), Seq("bk"),
+            buckets, mode)))
       // append-pressure sidecar input: counted from the checkpointed
       // artifact blocks (one doc per row, no second corpus pass) — a
       // read-only leg riding the concurrent group instead of a serial
@@ -248,11 +250,6 @@ object DedupIndex {
       BucketedTables.dropTable(corpus.sparkSession, tombsTable(base))
   }
 
-  // lifecycle machinery shared with every standing index
-  private def writeBucketed(df: DataFrame, table: String, keys: Seq[String],
-                            buckets: Int, mode: SaveMode): Unit =
-    BucketedTables.writeBucketed(df, table, keys, buckets, mode)
-
   /** [[BucketedTables.heal]] over this index's tables (the four corpus
     * tables plus the tombstone table, which goes through the same
     * scratch-then-rename overwrites during compaction) — called on
@@ -260,28 +257,30 @@ object DedupIndex {
   private def healInterrupted(spark: SparkSession, base: String,
                               refresh: Boolean = true): Unit =
     BucketedTables.heal(spark,
-      Seq(exactTable(base), prefTable(base), shTable(base), bandTable(base),
-        tombsTable(base)),
-      refresh)
+      corpusTables(base).map(_._1) :+ tombsTable(base), refresh)
+
+  /** The four corpus tables with their bucket keys, the exact table —
+    * the tombstone epoch anchor — last. Each table keeps its own catalog
+    * bucket spec through every rewrite: re-bucketing on different keys
+    * or counts would break the probes' exchange-free scans. */
+  private def corpusTables(base: String): Seq[(String, Seq[String])] = Seq(
+    prefTable(base)  -> Seq("bk"),
+    shTable(base)    -> Seq("id"),
+    bandTable(base)  -> Seq("bk"),
+    exactTable(base) -> Seq("h", "t"))
 
   /** Mark documents deleted by id — the dedup twin of
-    * [[SimilarityIndex.delete]]: an O(|ids|) tombstone append in ONE
-    * table write (no partial-deletion window), the corpus tables are
-    * never rewritten. Probes mask tombstoned ids with broadcast
-    * anti-joins — the exact table stores each holder's id, so a
-    * deleted document stops witnessing the exact rule while other
+    * [[SimilarityIndex.delete]]: [[BucketedTables.stampTombs]] against
+    * the exact table's snapshot epoch (which every rebuild commit
+    * changes LAST), so the corpus tables are never rewritten and a
+    * crash anywhere can only over-mask. Probes mask tombstoned ids with
+    * broadcast anti-joins — the exact table stores each holder's id, so
+    * a deleted document stops witnessing the exact rule while other
     * holders of the same text keep witnessing it — and the next
     * [[compact]] folds the deletions into the rewritten snapshots.
-    * Each tombstone is stamped with the current snapshot EPOCH (the
-    * exact table's dir name, which every rebuild commit changes LAST):
-    * a crash anywhere can only over-mask (the old corpus stays live
-    * with its tombstones active — a takedown never silently
-    * resurfaces), never resurrect, and a completed rebuild retires
-    * pending tombstones atomically with its commit. Tombstones are
-    * IDEMPOTENT — a failed delete() is safely re-issued. DELETE WINS
-    * over re-ingestion: the deleted document's OLD artifact rows stay
-    * physically in the corpus tables until a compaction, so a document
-    * re-ingested while its tombstone is pending stays masked
+    * DELETE WINS over re-ingestion: the deleted document's OLD artifact
+    * rows stay physically in the corpus tables until a compaction, so a
+    * document re-ingested while its tombstone is pending stays masked
     * (unmasking would resurrect the old content too), and the next
     * [[compact]] removes old and re-appended rows alike. Re-ingest a
     * deleted document AFTER a compact (or a rebuild) has retired its
@@ -312,44 +311,25 @@ object DedupIndex {
       s"$base: the exact table carries legacy rows with no holder id — " +
         "run backfillHolderIds (with the original corpus) or rebuild " +
         "the index (write) before deleting documents")
-    val epoch = BucketedTables.snapshotEpoch(spark, exactTable(base))
-    BucketedTables.upgradeLegacyTombs(spark, tombsTable(base), epoch)
-    BucketedTables.writeBucketed(
-      ids.select(col(idCol).as("id")).distinct()
-        .withColumn("ep", lit(epoch)),
-      tombsTable(base), Seq("id"), buckets = 4, SaveMode.Append)
+    BucketedTables.stampTombs(spark, exactTable(base), tombsTable(base),
+      ids, idCol)
    }
-
-  // snapshot write / atomic swap / shuffle-free per-bucket dedup are
-  // shared standing-index machinery ([[BucketedTables]]); aliased here
-  // for this index's tests and call sites
-  private[graft] def writeSnapshot(spark: SparkSession, table: String,
-                                   keys: Seq[String], df: DataFrame): String =
-    BucketedTables.writeSnapshot(spark, table, keys, df)
-
-  private[graft] def swapLocation(spark: SparkSession, table: String,
-                                  newPath: String): Unit =
-    BucketedTables.swapLocation(spark, table, newPath)
-
-  private[graft] def compactionFrame(spark: SparkSession, table: String): DataFrame =
-    BucketedTables.compactionFrame(spark, table)
 
   /** Compact the standing index: fold each bucket's accumulated append
     * files back to one file, drop exact-duplicate rows a replayed
     * append may have left, and physically remove tombstoned documents.
-    * Each table keeps its own catalog bucket spec — re-bucketing on
-    * different keys/counts would break the probes' exchange-free scans.
-    * The rewrite is per-bucket and shuffle-free ([[compactionFrame]];
-    * the tombstone anti-joins broadcast their tiny side, so the corpus
-    * never exchanges), lands in a fresh snapshot dir, and goes live
-    * only at [[swapLocation]]'s single catalog op — a compaction that
-    * dies mid-write leaves probes on the old snapshot, and one that
-    * dies between table swaps leaves the unfolded tables still masked
-    * by their tombstones (cleared only after ALL four fold). Run it
-    * OFFLINE relative to WRITERS (probes racing the swap re-plan
-    * safely; a concurrent append could land in the dir being
-    * replaced) — ENFORCED by the writer lease: a racing append/delete
-    * fails loudly instead of losing rows. */
+    * The rewrite is per-bucket and shuffle-free
+    * ([[BucketedTables.compactionFrame]]; the tombstone anti-joins
+    * broadcast their tiny side, so the corpus never exchanges), lands
+    * in fresh snapshot dirs, and goes live only at
+    * [[BucketedTables.commitSnapshots]]' single-catalog-op swaps, exact
+    * LAST — a compaction that dies mid-write leaves probes on the old
+    * snapshots, and one that dies between table swaps leaves the
+    * unfolded tables still masked by their tombstones. Run it OFFLINE
+    * relative to WRITERS (probes racing the swap re-plan safely; a
+    * concurrent append could land in the dir being replaced) — ENFORCED
+    * by the writer lease: a racing append/delete fails loudly instead
+    * of losing rows. */
   def compact(spark: SparkSession, base: String): Unit =
    BucketedTables.withWriterLease(spark, exactTable(base), "compaction") {
     healInterrupted(spark, base)
@@ -359,41 +339,23 @@ object DedupIndex {
   /** [[compact]] body, unleased and pre-healed — [[compactAuto]] calls
     * it while already holding the writer lease (not reentrant). */
   private def compactImpl(spark: SparkSession, base: String): Unit = {
-    // epoch + tombstones read BEFORE any scan resolves (read-order
-    // contract in BucketedTables.activeTombIds)
-    val tombIds = BucketedTables.activeTombIds(spark, tombsTable(base),
-      BucketedTables.snapshotEpoch(spark, exactTable(base)))
-    // the EXACT table swaps LAST: its snapshot dir is the tombstone
-    // epoch anchor, so a compaction that dies mid-way leaves the
-    // tombstones active and every unfolded table still masked; the
-    // final swap retires them atomically with the fold's completion
-    val tables = Seq(
-      prefTable(base)  -> Seq("bk"),
-      shTable(base)    -> Seq("id"),
-      bandTable(base)  -> Seq("bk"),
-      exactTable(base) -> Seq("h", "t"))
+    val tombIds = BucketedTables.liveTombIds(spark, exactTable(base),
+      tombsTable(base))
+    val tables = corpusTables(base)
     BucketedTables.withForcedBucketedScan(spark) {
       // the four snapshot writes are scratch-dir work on independent
       // tables — overlapped (§2.6); every snapshot reads the PRE-swap
       // state it would have read serially (no snapshot depends on a
-      // sibling table). The SWAPS stay serial and ordered below: all
-      // commits happen after all writes, exact last — the same crash
-      // states as before, minus the interleaved partial ones.
+      // sibling table). All commits happen after all writes.
       val snaps = graft.exec.Concurrent.all[String](
         tables.map { case (table, keys) => () =>
-          writeSnapshot(spark, table, keys,
+          BucketedTables.writeSnapshot(spark, table, keys,
             BucketedTables.maskByTombs(
-              compactionFrame(spark, table), tombIds))
+              BucketedTables.compactionFrame(spark, table), tombIds))
         })
-      // liveness heartbeat at the phase boundary (snapshots written,
-      // about to swap) — what leaseInfo's staleness check observes
-      BucketedTables.renewLease(spark, exactTable(base))
-      tables.zip(snaps).foreach { case ((table, _), snap) =>
-        swapLocation(spark, table, snap)
-      }
-      // the tombstones folded above are inert now (the anchor swap
-      // changed the epoch); clearing the table is garbage collection
-      BucketedTables.truncateBucketed(spark, tombsTable(base), Seq("id"))
+      BucketedTables.commitSnapshots(spark, exactTable(base),
+        tables.map(_._1).zip(snaps))
+      BucketedTables.clearTombs(spark, tombsTable(base))
       // re-base the append-pressure sidecar from the folded snapshot
       // (read by PATH — a write path must not prime the relation cache)
       val folded = spark.read.parquet(
@@ -403,162 +365,64 @@ object DedupIndex {
     }
   }
 
-  /** PARTIAL compaction: retire the pending tombstones and fold append
-    * pressure by REWRITING ONLY THE FILES THAT NEED IT, carrying every
-    * other file into the new snapshot by hard link / server-side copy
-    * ([[BucketedTables.copyBucketFiles]]) — the full [[compact]] is a
-    * linear corpus rewrite even when one document was deleted, and at
-    * 100 TB that rewrite IS the cost of a takedown.
+  /** PARTIAL compaction: retire the pending tombstones by REWRITING ONLY
+    * THE FILES THAT HOLD THEM, carrying every other file into the new
+    * snapshot by hard link / server-side copy
+    * ([[BucketedTables.planPartial]], [[BucketedTables.writePartial]]) —
+    * the full [[compact]] is a linear corpus rewrite even when one
+    * document was deleted, and at 100 TB that rewrite IS the cost of a
+    * takedown.
     *
     * Which files rewrite:
     *  - in `exact` and `sh` — deletions are LOCAL here (one row per
     *    holder / per document), so exactly the files physically
     *    holding a tombstoned row rewrite (discovered by an id-column +
-    *    `input_file_name` scan — no text decode); plus every file of a
-    *    bucket whose file count exceeds `rewriteFileThreshold`.
-    *  - in `pref` and `band` — one document's rows SCATTER across
+    *    `input_file_name` scan — no text decode).
+    *  - in `pref` and `band` — none: one document's rows SCATTER across
     *    buckets (each prefix shingle / band key hashes independently),
-    *    so deletion-dirty tracking would mark everything; these rewrite
-    *    on append pressure only. A deleted document's stale pref/band
-    *    rows are VERIFY-NEUTRAL: every near candidate joins the sh
-    *    table (the source of truth) by holder id before it can judge,
-    *    and the compacted sh table no longer holds the deleted id — so
-    *    stale accelerator rows cost a dead candidate row at probe time,
-    *    never a verdict. They are physically dropped whenever their
-    *    bucket rewrites for pressure, or by the next full [[compact]].
+    *    so deletion-dirty tracking would mark everything. A deleted
+    *    document's stale pref/band rows are VERIFY-NEUTRAL: every near
+    *    candidate joins the sh table (the source of truth) by holder id
+    *    before it can judge, and the compacted sh table no longer holds
+    *    the deleted id — so stale accelerator rows cost a dead candidate
+    *    row at probe time, never a verdict. The next full [[compact]]
+    *    drops them physically, and folds append fragmentation.
     *
     * The rewrite unit is the FILE: rewrite cost is bounded by (files
     * holding deleted rows) × (file size), independent of corpus size.
-    * File-count pressure folding is OFF by default
-    * (`rewriteFileThreshold = Int.MaxValue`): a fresh parallel build
-    * legitimately writes many files per bucket (the same cry-wolf
-    * [[needsCompact]] documents), so a count-triggered rewrite right
-    * after a rebuild would silently turn the partial fold back into a
-    * full one — fold fragmentation with the full [[compact]], or set a
-    * threshold when the layout's file counts are actually append-driven.
     *
     * Same crash contract as [[compact]]: per-table scratch snapshot +
-    * single-catalog-op swap, exact table LAST (the epoch anchor — a
-    * compaction dying mid-way leaves every tombstone active and every
-    * unfolded table still masked), writer lease held throughout.
-    * Verdict-equivalence with the full fold (same probes, same masked
-    * state) is asserted in ExtSpec. */
-  def compactPartial(spark: SparkSession, base: String,
-                     rewriteFileThreshold: Int = Int.MaxValue): Unit =
+    * [[BucketedTables.commitSnapshots]] (exact LAST), writer lease held
+    * throughout. Verdict-equivalence with the full fold (same probes,
+    * same masked state) is asserted in ExtSpec. */
+  def compactPartial(spark: SparkSession, base: String): Unit =
    BucketedTables.withWriterLease(spark, exactTable(base), "compaction") {
     healInterrupted(spark, base)
-    compactPartialImpl(spark, base, rewriteFileThreshold,
-      precomputedExactDirty = None)
+    compactPartialImpl(spark, base, exactDirty = None)
    }
 
-  /** [[compactPartial]] body, unleased and pre-healed;
-    * `precomputedExactDirty` lets [[compactAuto]] hand over the exact
-    * table's dirty-file scan its dispatch decision already paid for
-    * (the sh table still discovers its own). */
-  private def compactPartialImpl(
-      spark: SparkSession, base: String, rewriteFileThreshold: Int,
-      precomputedExactDirty: Option[Set[String]]): Unit = {
-    val tombIds = BucketedTables.activeTombIds(spark, tombsTable(base),
-      BucketedTables.snapshotEpoch(spark, exactTable(base)))
-    // the FILES physically holding a tombstoned row — file precision,
-    // not bucket precision: deletions are request-driven and sparse, so
-    // the rewrite unit must be as small as the store's layout allows.
-    // Discovery ([[BucketedTables.dirtyFiles]]) is one id-column +
-    // file-name scan (parquet prunes every other column — in particular
-    // the exact table's text is never decoded) against the tiny
-    // tombstone set as an IN-literal list, so parquet row-group stats
-    // prune clean files to footer reads.
-    def tombDirtyFiles(table: String): Set[String] = {
-      val t0 = System.nanoTime()
-      val out = BucketedTables.dirtyFiles(spark, table, tombIds)
-      System.err.println(f"[compactPartial] $table: dirty-file scan " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2fs (${out.size} files)")
-      out
-    }
-    val tables = Seq(
-      shTable(base)    -> Seq("id"),
-      prefTable(base)  -> Seq("bk"),
-      bandTable(base)  -> Seq("bk"),
-      exactTable(base) -> Seq("h", "t"))
+  /** [[compactPartial]] body, unleased and pre-healed; `exactDirty` lets
+    * [[compactAuto]] hand over the exact table's dirty-file scan its
+    * dispatch already paid for (the sh table still discovers its own). */
+  private def compactPartialImpl(spark: SparkSession, base: String,
+                                 exactDirty: Option[Set[String]]): Unit = {
+    val tombIds = BucketedTables.liveTombIds(spark, exactTable(base),
+      tombsTable(base))
     BucketedTables.withForcedBucketedScan(spark) {
-      // Per-table discovery + snapshot write + carry-over run as
-      // concurrent legs (§2.6) — independent tables doing scratch-dir
-      // work; every leg reads the PRE-swap state it would have read
-      // serially. The SWAPS stay serial and ordered below (all commits
-      // after all writes, exact last), so the crash contract is the
-      // same as before minus the interleaved partial states.
-      val prepped: Seq[Option[String]] = graft.exec.Concurrent.all(
-        tables.map { case (table, keys) => () =>
-        val n = bucketsOf(spark, table)
-        val files = BucketedTables.bucketFilePaths(spark, table)
-        val counts = files.groupBy(_._1).view.mapValues(_.size).toMap
-        val pressure = counts.filter(_._2 > rewriteFileThreshold).keySet
-        val deletionLocal =
-          table == shTable(base) || table == exactTable(base)
-        val dirty =
-          if (!deletionLocal) Set.empty[String]
-          else if (table == exactTable(base) && precomputedExactDirty.isDefined)
-            precomputedExactDirty.get
-          else tombDirtyFiles(table)
-        val rewriteFiles = files.collect {
-          case (b, p) if pressure(b) || dirty(p.toUri.getPath) => p }
-        val carried = files.map(_._2).filterNot(rewriteFiles.toSet)
-        if (rewriteFiles.isEmpty && carried.nonEmpty) {
-          // UNTOUCHED table: no dirty rows, no pressure — the snapshot
-          // would be byte-identical to the live one, so writing +
-          // re-linking + swapping it is pure overhead (two tables per
-          // fold in the common sparse-takedown case: pref/band never
-          // rewrite on deletion). Skipping does not change the
-          // tombstone story — retirement is the ANCHOR table's epoch
-          // change, and an anchor with no dirty rows has no physical
-          // rows for its tombstones to mask.
-          System.err.println(s"[compactPartial] $table: untouched " +
-            s"(carry=${carried.size} files in place) — skipped")
-          None
-        } else {
-        val subset =
-          if (carried.isEmpty)
-            // nothing worth carrying: the full fold's shuffle-free
-            // partition-per-bucket dedup
-            BucketedTables.maskByTombs(compactionFrame(spark, table), tombIds)
-          else
-            // READ ONLY THE FILES THAT NEED REWRITING — clean files are
-            // never decoded (the full-table scan was the last linear
-            // cost in the fold). The raw file read loses the bucketed
-            // partitioning, so the (deletion-bounded) subset pays ONE
-            // repartition on the bucket keys (Spark's repartition hash
-            // IS the bucket assignment, so each task holds
-            // exactly one bucket) and a shuffle-free adjacent dedup
-            // (identical rows share their bucket keys, so the
-            // repartition already co-located them) — folding replay
-            // duplicates WITHIN the subset; cross-file duplicates
-            // against carried files keep waiting for a full compact
-            // (verdict-neutral).
-            BucketedTables.adjacentDedup(
-              BucketedTables.maskByTombs(
-                spark.read.schema(spark.table(table).schema)
-                  .parquet(rewriteFiles.map(_.toString): _*), tombIds)
-                .repartition(math.min(n, rewriteFiles.size),
-                  keys.map(col): _*))
-        val t0 = System.nanoTime()
-        val snap = writeSnapshot(spark, table, keys, subset)
-        val t1 = System.nanoTime()
-        if (carried.nonEmpty)
-          BucketedTables.copyBucketFiles(spark, table, carried, snap)
-        System.err.println(f"[compactPartial] $table: rewrite=" +
-          f"${rewriteFiles.size} carry=${carried.size} files; " +
-          f"write=${(t1 - t0) / 1e9}%.2fs " +
-          f"carry=${(System.nanoTime() - t1) / 1e9}%.2fs")
-        Some(snap)
-        }
-      })
-      // liveness heartbeat, then the ordered commits (exact LAST — the
-      // epoch anchor retires the tombstones atomically with its swap)
-      BucketedTables.renewLease(spark, exactTable(base))
-      tables.zip(prepped).foreach {
-        case ((table, _), Some(snap)) => swapLocation(spark, table, snap)
-        case _ => ()
-      }
+      // per-table plan + snapshot write + carry-over run as concurrent
+      // legs (§2.6) — independent tables doing scratch-dir work; every
+      // leg reads the PRE-swap state it would have read serially. All
+      // commits happen after all writes.
+      val snaps = graft.exec.Concurrent.all(corpusTables(base).map {
+        case (table, keys) => () =>
+          val dirty =
+            if (table == exactTable(base)) exactDirty
+            else if (table == shTable(base)) None
+            else Some(Set.empty[String]) // pref/band: deletions scatter
+          BucketedTables.planPartial(spark, table, keys, tombIds, dirty)
+            .map(fold => table -> BucketedTables.writePartial(spark, fold))
+      }).flatten
+      BucketedTables.commitSnapshots(spark, exactTable(base), snaps)
       val t3 = System.nanoTime()
       // tombstone GC (tombs table) and the folded-count read (exact
       // table's new location) are independent post-swap steps —
@@ -566,10 +430,9 @@ object DedupIndex {
       @volatile var folded = 0L
       graft.exec.Concurrent.labeled[Unit](Seq(
         "dedup: tomb gc" -> (() =>
-          BucketedTables.truncateBucketed(spark, tombsTable(base), Seq("id"))),
-        // append pressure is folded (or deliberately carried): re-base
-        // the sidecar so needsCompact stops firing on mass already
-        // handled
+          BucketedTables.clearTombs(spark, tombsTable(base))),
+        // re-base the sidecar so needsCompact stops firing on append
+        // mass this fold handled or deliberately carried
         "dedup: folded count" -> (() =>
           folded = spark.read.parquet(
             BucketedTables.location(spark, exactTable(base)).toString)
@@ -582,33 +445,18 @@ object DedupIndex {
   }
 
   /** Fold the standing index choosing full vs partial compaction
-    * AUTOMATICALLY ([[BucketedTables.compactionChoice]], the
-    * [[SimilarityIndex.compactAuto]] twin): partial when the anchor
-    * (exact) table has enough files to amortize partial's fixed jobs
-    * AND the deletion-dirty share leaves most of them clean; full
-    * otherwise. The anchor's dirty-file scan is handed to the partial
-    * fold, never paid twice. Returns the strategy that ran. Threshold
-    * defaults come from the committed crossover experiments
-    * (compactbench: partial ≈ full at 4k docs / ~50 steady-state exact
-    * files, wins 1.4–2× above). */
+    * AUTOMATICALLY ([[BucketedTables.chooseCompaction]] on the exact
+    * table, the [[SimilarityIndex.compactAuto]] twin). Returns the
+    * strategy that ran. Threshold defaults come from the committed
+    * crossover experiments (compactbench: partial ≈ full at 4k docs /
+    * ~50 steady-state exact files, wins 1.4–2× above). */
   def compactAuto(spark: SparkSession, base: String,
-                  minFiles: Int = 48, maxDirtyShare: Double = 0.5,
-                  rewriteFileThreshold: Int = Int.MaxValue): String =
+                  minFiles: Int = 48, maxDirtyShare: Double = 0.5): String =
    BucketedTables.withWriterLease(spark, exactTable(base), "compaction") {
     healInterrupted(spark, base)
-    val totalFiles =
-      BucketedTables.bucketFilePaths(spark, exactTable(base)).size
-    // cheap gate first: below the crossover, decide without paying the
-    // dirty-file discovery scan the partial path would need
-    val dirty: Option[Set[String]] =
-      if (totalFiles < minFiles) None
-      else Some(BucketedTables.dirtyFiles(spark, exactTable(base),
-        BucketedTables.activeTombIds(spark, tombsTable(base),
-          BucketedTables.snapshotEpoch(spark, exactTable(base)))))
-    val choice = BucketedTables.compactionChoice(totalFiles,
-      dirty.map(_.size).getOrElse(0), minFiles, maxDirtyShare)
-    if (choice == "partial")
-      compactPartialImpl(spark, base, rewriteFileThreshold, dirty)
+    val (choice, dirty) = BucketedTables.chooseCompaction(spark,
+      exactTable(base), tombsTable(base), minFiles, maxDirtyShare)
+    if (choice == "partial") compactPartialImpl(spark, base, dirty)
     else compactImpl(spark, base)
     choice
    }
@@ -640,13 +488,12 @@ object DedupIndex {
     }
   }
 
-  /** ACTIVE pending deletions (epoch-matched tombstones the next
-    * compaction will fold) — the tombstone table is delta-sized by
-    * contract, so this count is never a corpus scan. */
+  /** Takedown-SLO watermark: the [[BucketedTables.liveTombIds]] count —
+    * the deletions the next compaction will fold. The tombstone table is
+    * delta-sized by contract, so this count is never a corpus scan. */
   def pendingTombstones(spark: SparkSession, base: String): Long = {
     healInterrupted(spark, base)
-    BucketedTables.activeTombIds(spark, tombsTable(base),
-        BucketedTables.snapshotEpoch(spark, exactTable(base)))
+    BucketedTables.liveTombIds(spark, exactTable(base), tombsTable(base))
       .map(_.count()).getOrElse(0L)
   }
 
@@ -678,14 +525,15 @@ object DedupIndex {
       ("sh",    shTable(base),    Seq("id")),
       ("band",  bandTable(base),  Seq("bk")))
     val perBucket = tables.map { case (label, table, keys) =>
-      val buckets = bucketsOf(spark, table)
+      val buckets = BucketedTables.bucketsOf(spark, table)
       spark.table(table)
         .groupBy(pmod(hash(keys.map(col): _*), lit(buckets)).as("bucket"))
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(label).as("tbl"), col("bucket"), col("n_rows"))
     }.reduce(_.unionByName(_))
     val fileCounts = tables.flatMap { case (label, table, _) =>
-      bucketFileCounts(spark, table).map { case (b, n) => (label, b, n) }
+      BucketedTables.bucketFilePaths(spark, table).groupBy(_._1).toSeq
+        .map { case (b, fs) => (label, b, fs.size.toLong) }
     }
     val filesDf = spark.createDataFrame(fileCounts)
       .toDF("tbl", "bucket", "files")
@@ -696,19 +544,6 @@ object DedupIndex {
       .withColumn("share", col("n_rows") / sum(col("n_rows")).over(byTbl))
       .select(col("tbl"), col("bucket"), col("n_rows"), col("share"),
         col("files"))
-  }
-
-  /** Parquet files per bucket in `table`'s live snapshot dir, parsed
-    * from Spark's bucketed file naming (`..._<bucket id>.c...`). */
-  private def bucketFileCounts(spark: SparkSession,
-                               table: String): Seq[(Int, Long)] = {
-    val loc = new org.apache.hadoop.fs.Path(
-      BucketedTables.location(spark, table))
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val pat = ".*_(\\d{5})(?:\\.c\\d+)?\\..*parquet$".r
-    fs.listStatus(loc).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .collect { case pat(b) => b.toInt }
-      .groupBy(identity).map { case (b, fs0) => (b, fs0.size.toLong) }.toSeq
   }
 
   /** Advisory compaction trigger: true when deletions are pending (the
@@ -792,12 +627,10 @@ object DedupIndex {
     healInterrupted(spark, base)
     // Tombstoned documents must witness no rule: every table masks by
     // holder id (the exact table stores one row per holder for exactly
-    // this purpose). Epoch + tombstones read ONCE, BEFORE any corpus
-    // table resolves (BucketedTables.activeTombIds' read-order
-    // contract: a racing compaction swap then over-masks, never
-    // exposes a stale snapshot unmasked).
-    val tombIds = BucketedTables.activeTombIds(spark, tombsTable(base),
-      BucketedTables.snapshotEpoch(spark, exactTable(base)))
+    // this purpose). Read ONCE, BEFORE any corpus table resolves
+    // (BucketedTables.liveTombIds' read-order contract).
+    val tombIds = BucketedTables.liveTombIds(spark, exactTable(base),
+      tombsTable(base))
     // Legacy (pre-bid) indexes read as all-bulk: no stamp, no exclusion.
     def tbl(name: String) = {
       val raw = spark.table(name)
@@ -871,9 +704,6 @@ object DedupIndex {
       .unionByName(nearEdges.withColumn("rule", lit("near")))
   }
 
-  private def bucketsOf(spark: SparkSession, table: String): Int =
-    BucketedTables.bucketsOf(spark, table)
-
   /** Upgrade a legacy standing index IN PLACE to the current schema —
     * probes read any era (missing columns just disable their feature),
     * but an APPEND needs the catalog schema to match, so mixed-era
@@ -885,7 +715,7 @@ object DedupIndex {
     *    shingle array — positions and sizes are derived, not guessed.
     * One-time rewrite per table, same bucket spec; a no-op on a
     * current-schema index. Each rewrite commits scratch-then-rename
-    * (see [[writeBucketed]]): the new snapshot is fully written before
+    * (see [[BucketedTables.writeBucketed]]): the new snapshot is fully written before
     * any catalog op, and a crash between the two catalog ops is healed
     * on the next index call by [[healInterrupted]].
     *
@@ -910,8 +740,8 @@ object DedupIndex {
     healInterrupted(spark, base)
     def rewrite(table: String, keys: Seq[String], df: DataFrame): Unit = {
       val snap = df.localCheckpoint()
-      try writeBucketed(snap, table, keys, bucketsOf(spark, table),
-        SaveMode.Overwrite)
+      try BucketedTables.writeBucketed(snap, table, keys,
+        BucketedTables.bucketsOf(spark, table), SaveMode.Overwrite)
       finally graft.exec.Partitioning.unpersistCheckpoint(snap)
     }
     Seq(shTable(base) -> Seq("id"), bandTable(base) -> Seq("bk"))
@@ -974,9 +804,8 @@ object DedupIndex {
     // deliberately preserves. delete() refuses on an index with
     // legacy rows, so this state should not arise; refuse rather than
     // trust that (run compact() to retire the tombstones first).
-    require(BucketedTables.activeTombIds(spark, tombsTable(base),
-        BucketedTables.snapshotEpoch(spark, exactTable(base)))
-      .forall(_.isEmpty),
+    require(BucketedTables.liveTombIds(spark, exactTable(base),
+        tombsTable(base)).forall(_.isEmpty),
       s"$base: tombstones pending — the backfill's snapshot commit " +
         "would retire them WITHOUT removing the rows (a resurrect); " +
         "run compact() first")
@@ -998,8 +827,8 @@ object DedupIndex {
       val snap = exact.filter(col("id").isNotNull)
         .select(col("h"), col("t"), col("bid"), col("id"))
         .unionByName(recovered).localCheckpoint()
-      try writeBucketed(snap, exactTable(base), Seq("h", "t"),
-        bucketsOf(spark, exactTable(base)), SaveMode.Overwrite)
+      try BucketedTables.writeBucketed(snap, exactTable(base), Seq("h", "t"),
+        BucketedTables.bucketsOf(spark, exactTable(base)), SaveMode.Overwrite)
       finally graft.exec.Partitioning.unpersistCheckpoint(snap)
     } finally graft.exec.Partitioning.unpersistCheckpoint(legacy)
    }
@@ -1058,7 +887,7 @@ object DedupIndex {
     if (!exactCols.contains("bid") || !exactCols.contains("id") ||
         !spark.table(prefTable(base)).columns.contains("pos"))
       migrateImpl(spark, base, threshold)
-    val buckets = bucketsOf(spark, exactTable(base))
+    val buckets = BucketedTables.bucketsOf(spark, exactTable(base))
     val kept = batch.join(
       verdicts.filter(col("keep")).select(col(idCol)), Seq(idCol), "left_semi")
     // a kept id with a PENDING tombstone lands but stays masked: delete

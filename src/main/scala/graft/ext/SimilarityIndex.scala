@@ -244,10 +244,7 @@ object SimilarityIndex {
     // OTHER sessions for any caller counting the table directly
     // (cross-session visibility is heal()'s job on the engine's own
     // read paths, but write() must not plant the trap).
-    val counts = spark.read.parquet(
-        BucketedTables.location(spark, cellsTable(base)).toString)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    val counts = scanOccupancy(spark, base)
     BucketedTables.addSidecar(spark, cellsTable(base), CellStatsSidecar,
       encodeCellStats(counts))
     // the running occupancy starts out identical to the baseline
@@ -297,24 +294,22 @@ object SimilarityIndex {
         Similarity.pqReconstruct(col("pqc"), pqBooks).as("v"))
     else cells
 
-  /** Mark `ids` deleted. Deletion is a TOMBSTONE append — O(|ids|), the
-    * corpus is never touched: probes anti-join their probed slice
-    * against the (broadcast-small) tombstone table, and the next
-    * [[compact]] folds the deletions into the rewritten snapshot and
-    * clears the tombstones it applied. Each tombstone is stamped with
-    * the CURRENT snapshot epoch and masks only while that snapshot is
-    * live: a rebuild/compaction commit retires it atomically (the
-    * masking direction cannot leak — a crash before the commit leaves
-    * the old snapshot live with its tombstones still active; the
-    * unmasking direction cannot resurrect — stale rows are inert).
-    * Tombstones are also IDEMPOTENT — re-excluding an absent id is a
-    * no-op — so a failed delete() is safely re-issued. DELETE WINS over
-    * re-ingestion: the deleted id's OLD rows stay physically in the
-    * corpus until a compaction, so an id re-appended while its
-    * tombstone is pending stays masked (unmasking it would resurrect
-    * the old content too), and the next [[compact]] removes old and
-    * re-appended rows alike. Re-ingest a deleted id AFTER a compact
-    * (or a rebuild) has retired its tombstone. */
+  /** Mark `ids` deleted: [[BucketedTables.stampTombs]] against the
+    * cells table's snapshot epoch — O(|ids|), the corpus is never
+    * touched: probes anti-join their probed slice against the
+    * (broadcast-small) tombstone table, and the next [[compact]] folds
+    * the deletions into the rewritten snapshot and clears the
+    * tombstones it applied. A tombstone masks only while the snapshot it
+    * was stamped against is live: a rebuild/compaction commit retires it
+    * atomically (the masking direction cannot leak — a crash before the
+    * commit leaves the old snapshot live with its tombstones still
+    * active; the unmasking direction cannot resurrect — stale rows are
+    * inert). DELETE WINS over re-ingestion: the deleted id's OLD rows
+    * stay physically in the corpus until a compaction, so an id
+    * re-appended while its tombstone is pending stays masked (unmasking
+    * it would resurrect the old content too), and the next [[compact]]
+    * removes old and re-appended rows alike. Re-ingest a deleted id
+    * AFTER a compact (or a rebuild) has retired its tombstone. */
   def delete(spark: SparkSession, base: String, ids: DataFrame,
              idCol: String = "vec_id"): Unit =
    // leased: a delete racing a compaction swap would stamp an epoch the
@@ -324,13 +319,26 @@ object SimilarityIndex {
     // its live snapshot identity
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)),
       refresh = false)
-    val epoch = BucketedTables.snapshotEpoch(spark, cellsTable(base))
-    BucketedTables.upgradeLegacyTombs(spark, tombsTable(base), epoch)
-    BucketedTables.writeBucketed(
-      ids.select(col(idCol).as("id")).distinct()
-        .withColumn("ep", lit(epoch)),
-      tombsTable(base), Seq("id"), buckets = 4, SaveMode.Append)
+    BucketedTables.stampTombs(spark, cellsTable(base), tombsTable(base),
+      ids, idCol)
    }
+
+  /** The sidecars every compaction snapshot carries over from the live
+    * one: the quantizer (required — a snapshot without it cannot be
+    * probed), then the drift baseline and PQ codebooks where present.
+    * The running occupancy is not carried: each fold re-derives it. */
+  private def carriedSidecars(spark: SparkSession,
+                              table: String): Seq[(String, Array[Byte])] =
+    Seq(QuantizerSidecar ->
+        BucketedTables.readSidecar(spark, table, QuantizerSidecar)) ++
+      Seq(CellStatsSidecar, PqSidecar).collect {
+        case sc if BucketedTables.sidecarExists(spark, table, sc) =>
+          sc -> BucketedTables.readSidecar(spark, table, sc)
+      }
+
+  private def perCellCounts(df: DataFrame): Seq[(Long, Long)] =
+    df.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
   /** Compact the standing index: fold each bucket's accumulated append
     * files back to one, drop exact-duplicate rows a replayed append
@@ -338,15 +346,15 @@ object SimilarityIndex {
     * is per-bucket and shuffle-free ([[BucketedTables.compactionFrame]];
     * the tombstone anti-join broadcasts its tiny side, so the corpus
     * never exchanges) and lands in a fresh snapshot dir with the
-    * CURRENT quantizer sidecar carried over BEFORE the
-    * single-catalog-op swap — so probes racing the compaction see a
-    * complete (cells + quantizer) snapshot on either side of the commit
-    * point, and a compaction that dies mid-write leaves probes on the
-    * old snapshot (with its tombstones still active and masking). The
-    * swap changes the snapshot EPOCH, which retires the folded
-    * tombstones atomically; the clear after it is garbage collection
-    * of rows that are already inert. Run OFFLINE relative to WRITERS,
-    * like [[DedupIndex.compact]]. */
+    * CURRENT sidecars carried over BEFORE the single-catalog-op swap
+    * ([[BucketedTables.commitSnapshots]]) — so probes racing the
+    * compaction see a complete (cells + quantizer) snapshot on either
+    * side of the commit point, and a compaction that dies mid-write
+    * leaves probes on the old snapshot (with its tombstones still active
+    * and masking). The swap changes the snapshot EPOCH, which retires
+    * the folded tombstones atomically; the clear after it is garbage
+    * collection of rows that are already inert. Run OFFLINE relative to
+    * WRITERS, like [[DedupIndex.compact]]. */
   def compact(spark: SparkSession, base: String): Unit =
    BucketedTables.withWriterLease(spark, cellsTable(base), "compaction") {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
@@ -356,34 +364,19 @@ object SimilarityIndex {
   /** [[compact]] body, unleased and pre-healed — [[compactAuto]] calls
     * it while already holding the writer lease (not reentrant). */
   private def compactImpl(spark: SparkSession, base: String): Unit = {
-    // epoch read FIRST (see BucketedTables.activeTombIds' read-order
-    // contract), then the tombstone set, then the corpus scan
-    val epoch = BucketedTables.snapshotEpoch(spark, cellsTable(base))
-    val tombIds =
-      BucketedTables.activeTombIds(spark, tombsTable(base), epoch)
-    val quantizer =
-      BucketedTables.readSidecar(spark, cellsTable(base), QuantizerSidecar)
-    // the drift BASELINE rides along unchanged (it describes what the
-    // quantizer was trained on, which a compaction does not change);
-    // absent on pre-baseline snapshots, and stays absent then
-    val carried = Seq(QuantizerSidecar -> quantizer) ++
-      Seq(CellStatsSidecar, PqSidecar).collect {
-        case sc if BucketedTables.sidecarExists(spark, cellsTable(base), sc) =>
-          sc -> BucketedTables.readSidecar(spark, cellsTable(base), sc)
-      }
+    val table = cellsTable(base)
+    val tombIds = BucketedTables.liveTombIds(spark, table, tombsTable(base))
+    val sidecars = carriedSidecars(spark, table)
     BucketedTables.withForcedBucketedScan(spark) {
       val masked = BucketedTables.maskByTombs(
-        BucketedTables.compactionFrame(spark, cellsTable(base)), tombIds)
+        BucketedTables.compactionFrame(spark, table), tombIds)
       // The snapshot write and the occupancy recount both read exactly
       // the masked pre-swap frame (the snapshot IS that frame written
-      // out), so the recount — previously a serial post-swap re-read of
-      // the written snapshot — overlaps the write (§2.6). Row content is
-      // identical by construction: writeSnapshot writes `masked`
-      // verbatim. The occupancy leg only reads (cell) — column-pruned —
-      // and the sidecar still lands AFTER the swap, preserving the
-      // crash contract (a crash before it leaves the sidecar MISSING,
-      // and needsRetrain self-heals with one establishing scan; never
-      // silently stale).
+      // out), so the recount overlaps the write (§2.6). The occupancy
+      // leg only reads (cell) — column-pruned — and the sidecar still
+      // lands AFTER the swap, preserving the crash contract (a crash
+      // before it leaves the sidecar MISSING, and needsRetrain
+      // self-heals with one establishing scan; never silently stale).
       @volatile var snap: String = null
       @volatile var occupancy: Seq[(Long, Long)] = null
       graft.exec.Concurrent.labeled[Unit](Seq(
@@ -391,48 +384,32 @@ object SimilarityIndex {
           // policy input: a columnar count of the standing table (id
           // column only decodes), lazily skipped when the conf pins the
           // cap
-          snap = BucketedTables.writeSnapshot(spark, cellsTable(base),
-            Seq("cell"), masked,
-            sidecar = carried,
-            maxRecordsPerFile =
-              rowsPerFile(spark, spark.table(cellsTable(base)).count()))),
+          snap = BucketedTables.writeSnapshot(spark, table, Seq("cell"),
+            masked, sidecar = sidecars,
+            maxRecordsPerFile = rowsPerFile(spark, spark.table(table).count()))),
         "ann: occupancy recount" -> (() =>
-          occupancy = masked
-            .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1))))
-      // liveness heartbeat at the phase boundary (snapshot written,
-      // about to swap) — what leaseInfo's staleness check observes
-      BucketedTables.renewLease(spark, cellsTable(base))
-      BucketedTables.swapLocation(spark, cellsTable(base), snap)
-      // the tombstones folded above are inert now (the swap changed the
-      // epoch); clearing the table is garbage collection
-      BucketedTables.truncateBucketed(spark, tombsTable(base), Seq("id"))
+          occupancy = perCellCounts(masked))))
+      BucketedTables.commitSnapshots(spark, table, Seq(table -> snap))
+      BucketedTables.clearTombs(spark, tombsTable(base))
       // re-base the running occupancy EXACTLY to the folded snapshot's
       // content (tombstoned + replay-duplicate rows just left; any
       // staleness an append-crash window accumulated is corrected too)
-      BucketedTables.addSidecar(spark, cellsTable(base), OccupancySidecar,
+      BucketedTables.addSidecar(spark, table, OccupancySidecar,
         encodeCellStats(occupancy))
     }
   }
 
   /** PARTIAL compaction of the standing ANN index: retire the pending
-    * tombstones and fold append pressure by REWRITING ONLY THE FILES
-    * THAT NEED IT, carrying every other file into the new snapshot by
-    * hard link / server-side copy — [[compact]] is a linear corpus
-    * rewrite even when one vector was deleted, and at 100 TB that
-    * rewrite IS the cost of a takedown
-    * ([[DedupIndex.compactPartial]]'s contract, applied to the cells
-    * table).
-    *
+    * tombstones by REWRITING ONLY THE FILES THAT HOLD THEM, carrying
+    * every other file into the new snapshot by hard link / server-side
+    * copy ([[BucketedTables.planPartial]], [[BucketedTables.writePartial]])
+    * — [[compact]] is a linear corpus rewrite even when one vector was
+    * deleted, and at 100 TB that rewrite IS the cost of a takedown.
     * Deletions are LOCAL here — each id holds exactly one (cell, id, …)
     * row — so the rewrite set is exactly the files physically holding a
-    * tombstoned row (discovered by an id-column + `input_file_name`
-    * scan; vectors/codes are never decoded for discovery), plus every
-    * file of a bucket whose file count exceeds `rewriteFileThreshold`
-    * (OFF by default — the same fresh-parallel-build cry-wolf note as
-    * the dedup twin). Sidecars (quantizer, PQ codebooks, drift
-    * baseline) ride the new snapshot dir BEFORE the single-catalog-op
-    * swap, exactly like [[compact]], so probes racing the commit see a
+    * tombstoned row. Sidecars (quantizer, PQ codebooks, drift baseline)
+    * ride the new snapshot dir BEFORE the single-catalog-op swap,
+    * exactly like [[compact]], so probes racing the commit see a
     * complete snapshot on either side.
     *
     * The running-occupancy sidecar is FOLDED, not re-scanned: partial
@@ -444,30 +421,20 @@ object SimilarityIndex {
     * establishing scan). Verdict-equivalence with the full fold is
     * asserted in MiningSpec and at the driver gate
     * (q_stream_ann_readmit). */
-  def compactPartial(spark: SparkSession, base: String,
-                     rewriteFileThreshold: Int = Int.MaxValue): Unit =
+  def compactPartial(spark: SparkSession, base: String): Unit =
    BucketedTables.withWriterLease(spark, cellsTable(base), "compaction") {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
-    compactPartialImpl(spark, base, rewriteFileThreshold,
-      precomputedDirty = None)
+    compactPartialImpl(spark, base, dirty = None)
    }
 
-  /** [[compactPartial]] body, unleased and pre-healed;
-    * `precomputedDirty` lets [[compactAuto]] reuse the dirty-file scan
-    * its dispatch decision already paid for. */
+  /** [[compactPartial]] body, unleased and pre-healed; `dirty` lets
+    * [[compactAuto]] reuse the dirty-file scan its dispatch already
+    * paid for. */
   private def compactPartialImpl(spark: SparkSession, base: String,
-                                 rewriteFileThreshold: Int,
-                                 precomputedDirty: Option[Set[String]]): Unit = {
+                                 dirty: Option[Set[String]]): Unit = {
     val table = cellsTable(base)
-    // epoch FIRST, then tombstones, then scans (activeTombIds contract)
-    val epoch = BucketedTables.snapshotEpoch(spark, table)
-    val tombIds =
-      BucketedTables.activeTombIds(spark, tombsTable(base), epoch)
-    val carriedSidecars =
-      Seq(QuantizerSidecar, CellStatsSidecar, PqSidecar).collect {
-        case sc if BucketedTables.sidecarExists(spark, table, sc) =>
-          sc -> BucketedTables.readSidecar(spark, table, sc)
-      }
+    val tombIds = BucketedTables.liveTombIds(spark, table, tombsTable(base))
+    val sidecars = carriedSidecars(spark, table)
     // the PRE-swap occupancy, read now: the new snapshot does not carry
     // this sidecar (it is re-derived, by fold below or by scan), so
     // after the swap it would read as missing
@@ -476,137 +443,60 @@ object SimilarityIndex {
         Some(decodeCellStats(BucketedTables.readSidecar(
           spark, table, OccupancySidecar)).toMap)
       else None
-    val tD = System.nanoTime()
-    val dirty: Set[String] = precomputedDirty.getOrElse(
-      BucketedTables.dirtyFiles(spark, table, tombIds))
-    System.err.println(f"[compactPartial] $table: dirty-file scan " +
-      f"${(System.nanoTime() - tD) / 1e9}%.2fs (${dirty.size} files)")
-    val n = BucketedTables.bucketsOf(spark, table)
-    val files = BucketedTables.bucketFilePaths(spark, table)
-    val counts = files.groupBy(_._1).view.mapValues(_.size).toMap
-    val pressure = counts.filter(_._2 > rewriteFileThreshold).keySet
-    val rewriteFiles = files.collect {
-      case (b, p) if pressure(b) || dirty(p.toUri.getPath) => p }
-    val carried = files.map(_._2).filterNot(rewriteFiles.toSet)
-    if (rewriteFiles.isEmpty && carried.nonEmpty) {
-      // UNTOUCHED corpus: no dirty rows, no pressure — a new snapshot
-      // would be byte-identical, so skip the write/carry/swap entirely.
-      // Tombstones (ids with no physical rows, or none at all) mask
-      // nothing; clearing them is still correct GC.
-      System.err.println(s"[compactPartial] $table: untouched " +
-        s"(carry=${carried.size} files in place) — skipped")
-      BucketedTables.truncateBucketed(spark, tombsTable(base), Seq("id"))
-      return
-    }
-    def perCell(df: DataFrame): Map[Long, Long] =
-      df.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-    BucketedTables.withForcedBucketedScan(spark) {
-      val (subset, occPre: Option[Map[Long, Long]]) =
-        if (carried.isEmpty)
-          // nothing worth carrying: the full fold's shuffle-free
-          // partition-per-bucket dedup; occupancy re-bases from the
-          // snapshot below (the full compact's behavior)
-          (BucketedTables.maskByTombs(
-            BucketedTables.compactionFrame(spark, table), tombIds), None)
-        else {
-          // read ONLY the rewrite set (clean files never decode); the
-          // subset pays one whole-row distinct (replay duplicates
-          // WITHIN it fold; cross-file ones wait for a full compact —
-          // probe-neutral, topK dedups its probed slice) and one
-          // repartition onto the bucket keys
-          val raw = spark.read.schema(spark.table(table).schema)
-            .parquet(rewriteFiles.map(_.toString): _*)
-          // one exchange total: repartition onto the bucket key, then
-          // the shuffle-free adjacent dedup (identical rows share their
-          // cell, so the repartition already co-located them). Partition
-          // count sized to the REWRITE SET, not the bucket count — the
-          // bucketed writer assigns buckets per row regardless of the
-          // incoming partitioning, so a 12-file rewrite does not need 64
-          // near-empty write tasks
-          (BucketedTables.adjacentDedup(
-            BucketedTables.maskByTombs(raw, tombIds)
-              .repartition(math.min(n, rewriteFiles.size), col("cell"))),
-            Some(perCell(raw)))
+    BucketedTables.planPartial(spark, table, Seq("cell"), tombIds, dirty) match {
+      // untouched: tombstones with no physical rows (or none at all)
+      // mask nothing; clearing them is still correct GC
+      case None => BucketedTables.clearTombs(spark, tombsTable(base))
+      case Some(fold) => BucketedTables.withForcedBucketedScan(spark) {
+        // nothing carried: occupancy re-bases from the snapshot below
+        // (the full compact's behavior); else the rewritten files'
+        // counts before the fold
+        val occPre = fold.raw.map(perCellCounts(_).toMap)
+        // post-fold occupancy of the rewritten subset, read back from
+        // the files the write just produced (the snap dir BEFORE the
+        // carry holds exactly them) — counting the subset FRAME instead
+        // would re-execute its whole plan, repartition exchange included
+        var occPost: Option[Map[Long, Long]] = None
+        val snap = BucketedTables.writePartial(spark, fold, sidecars,
+          maxRecordsPerFile = rowsPerFile(spark, spark.table(table).count()),
+          beforeCarry = dir => occPost = occPre.map(_ => perCellCounts(
+            spark.read.schema(spark.table(table).schema).parquet(dir)).toMap))
+        BucketedTables.commitSnapshots(spark, table, Seq(table -> snap))
+        BucketedTables.clearTombs(spark, tombsTable(base))
+        (occPre, occPost) match {
+          case (None, _) =>
+            // full-path occupancy re-base, exactly like compact()
+            BucketedTables.addSidecar(spark, table, OccupancySidecar,
+              encodeCellStats(perCellCounts(spark.read.parquet(snap))))
+          case (Some(pre), Some(post)) if occBefore.isDefined =>
+            val cur = occBefore.get
+            val folded = (cur.keySet ++ pre.keySet ++ post.keySet).toSeq.sorted
+              .map(c => (c, cur.getOrElse(c, 0L) - pre.getOrElse(c, 0L) +
+                post.getOrElse(c, 0L)))
+              .filter(_._2 != 0L)
+            BucketedTables.addSidecar(spark, table, OccupancySidecar,
+              encodeCellStats(folded))
+          case _ => () // legacy index without the sidecar: stays missing
         }
-      val t0 = System.nanoTime()
-      val snap = BucketedTables.writeSnapshot(spark, table, Seq("cell"),
-        subset, sidecar = carriedSidecars,
-        maxRecordsPerFile =
-          rowsPerFile(spark, spark.table(table).count()))
-      // post-fold occupancy of the rewritten subset, read back from the
-      // files the write just produced (the snap dir BEFORE the carry
-      // holds exactly them) — counting the subset FRAME instead would
-      // re-execute its whole plan, repartition exchange included
-      val occPost: Option[Map[Long, Long]] = occPre.map { _ =>
-        perCell(spark.read.schema(spark.table(table).schema).parquet(snap)) }
-      val t1 = System.nanoTime()
-      if (carried.nonEmpty)
-        BucketedTables.copyBucketFiles(spark, table, carried, snap)
-      val t2 = System.nanoTime()
-      BucketedTables.renewLease(spark, table)
-      BucketedTables.swapLocation(spark, table, snap)
-      val t3 = System.nanoTime()
-      BucketedTables.truncateBucketed(spark, tombsTable(base), Seq("id"))
-      System.err.println(f"[compactPartial] $table: rewrite=" +
-        f"${rewriteFiles.size} carry=${carried.size} files; " +
-        f"write=${(t1 - t0) / 1e9}%.2fs carry=${(t2 - t1) / 1e9}%.2fs " +
-        f"swap=${(t3 - t2) / 1e9}%.2fs " +
-        f"tombGC=${(System.nanoTime() - t3) / 1e9}%.2fs")
-      (occPre, occPost) match {
-        case (None, _) =>
-          // full-path occupancy re-base, exactly like compact()
-          BucketedTables.addSidecar(spark, table, OccupancySidecar,
-            encodeCellStats(
-              spark.read.parquet(snap)
-                .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-                .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)))
-        case (Some(pre), Some(post)) if occBefore.isDefined =>
-          val cur = occBefore.get
-          val folded = (cur.keySet ++ pre.keySet ++ post.keySet).toSeq.sorted
-            .map(c => (c, cur.getOrElse(c, 0L) - pre.getOrElse(c, 0L) +
-              post.getOrElse(c, 0L)))
-            .filter(_._2 != 0L)
-          BucketedTables.addSidecar(spark, table, OccupancySidecar,
-            encodeCellStats(folded))
-        case _ => () // legacy index without the sidecar: stays missing
       }
     }
   }
 
   /** Fold the standing index choosing full vs partial compaction
-    * AUTOMATICALLY from the live layout — the dispatch both controlled
-    * experiments bought ([[BucketedTables.compactionChoice]]): partial
-    * when the corpus has enough row-capped files to amortize the
-    * dirty-file discovery + carry links AND the deletion-dirty share
-    * leaves most files clean; full otherwise (a user calling
-    * compactPartial on a small index pays roughly double — the
-    * anncompactbench ratio-0.52 row). The dirty-file scan the decision
-    * needs is handed to the partial fold, never paid twice. Returns the
-    * strategy that ran ("full" | "partial") for operability and tests.
-    * Thresholds default from the committed crossover experiments
+    * AUTOMATICALLY from the live layout ([[BucketedTables.chooseCompaction]]
+    * on the cells table, the [[DedupIndex.compactAuto]] twin) — a user
+    * calling compactPartial on a small index pays roughly double (the
+    * anncompactbench ratio-0.52 row). Returns the strategy that ran
+    * ("full" | "partial") for operability and tests. Thresholds default
+    * from the committed crossover experiments
     * (anncompactbench/compactbench); both are overridable per call. */
   def compactAuto(spark: SparkSession, base: String,
-                  minFiles: Int = 48, maxDirtyShare: Double = 0.5,
-                  rewriteFileThreshold: Int = Int.MaxValue): String =
+                  minFiles: Int = 48, maxDirtyShare: Double = 0.5): String =
    BucketedTables.withWriterLease(spark, cellsTable(base), "compaction") {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
-    val table = cellsTable(base)
-    val totalFiles = BucketedTables.bucketFilePaths(spark, table).size
-    // cheap gate first: below the crossover, decide without paying the
-    // dirty-file discovery scan the partial path would need
-    val dirty: Option[Set[String]] =
-      if (totalFiles < minFiles) None
-      else {
-        val epoch = BucketedTables.snapshotEpoch(spark, table)
-        val tombIds =
-          BucketedTables.activeTombIds(spark, tombsTable(base), epoch)
-        Some(BucketedTables.dirtyFiles(spark, table, tombIds))
-      }
-    val choice = BucketedTables.compactionChoice(totalFiles,
-      dirty.map(_.size).getOrElse(0), minFiles, maxDirtyShare)
-    if (choice == "partial")
-      compactPartialImpl(spark, base, rewriteFileThreshold, dirty)
+    val (choice, dirty) = BucketedTables.chooseCompaction(spark,
+      cellsTable(base), tombsTable(base), minFiles, maxDirtyShare)
+    if (choice == "partial") compactPartialImpl(spark, base, dirty)
     else compactImpl(spark, base)
     choice
    }
@@ -655,9 +545,7 @@ object SimilarityIndex {
           BucketedTables.writeBucketed(enc, cellsTable(base), Seq("cell"),
             BucketedTables.bucketsOf(spark, cellsTable(base)),
             SaveMode.Append)),
-        "ann: cell counts" -> (() =>
-          counts = enc.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)))
+        "ann: cell counts" -> (() => counts = perCellCounts(enc))))
       foldOccupancy(spark, base, counts)
     } finally graft.exec.Partitioning.unpersistCheckpoint(enc)
   }
@@ -690,13 +578,10 @@ object SimilarityIndex {
            k: Int, nprobe: Int, idCol: String = "vec_id",
            vecCol: String = "embedding"): DataFrame = {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
-    // epoch + tombstones read BEFORE the corpus scan resolves (see
-    // BucketedTables.activeTombIds' read-order contract): a racing
-    // compaction swap then over-masks an already-clean snapshot
-    // instead of letting inert tombstones expose a stale one
-    val epoch = BucketedTables.snapshotEpoch(spark, cellsTable(base))
-    val tombIds =
-      BucketedTables.activeTombIds(spark, tombsTable(base), epoch)
+    // read BEFORE the corpus scan resolves (BucketedTables.liveTombIds'
+    // read-order contract)
+    val tombIds = BucketedTables.liveTombIds(spark, cellsTable(base),
+      tombsTable(base))
     val cents = decodeQuantizer(
       BucketedTables.readSidecar(spark, cellsTable(base), QuantizerSidecar))
     val probeFrame = Similarity.probeCells(queries, vecCol, idCol, cents, nprobe)
@@ -752,10 +637,9 @@ object SimilarityIndex {
                 k: Int, nprobe: Int, idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
-    // same read-order contract as topK: epoch, then tombstones, then scan
-    val epoch = BucketedTables.snapshotEpoch(spark, cellsTable(base))
-    val tombIds =
-      BucketedTables.activeTombIds(spark, tombsTable(base), epoch)
+    // same read-order contract as topK
+    val tombIds = BucketedTables.liveTombIds(spark, cellsTable(base),
+      tombsTable(base))
     val cents = decodeQuantizer(
       BucketedTables.readSidecar(spark, cellsTable(base), QuantizerSidecar))
     // repartition = the materialization point both consumers (the
@@ -819,6 +703,16 @@ object SimilarityIndex {
     Similarity.rerankExactShuffled(cands, rawCorpus, queries, k, idCol, vecCol)
   }
 
+  /** Takedown-SLO watermark: the [[BucketedTables.liveTombIds]] count —
+    * deletions awaiting physical retirement by the next compaction.
+    * Delta-sized read. */
+  def pendingTombstones(spark: SparkSession, base: String): Long = {
+    BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)),
+      refresh = false)
+    BucketedTables.liveTombIds(spark, cellsTable(base), tombsTable(base))
+      .map(_.count()).getOrElse(0L)
+  }
+
   /** Occupancy + bucket co-residency of the standing index — makes the
     * header's sizing contract ("probe I/O is the probed BUCKETS' total
     * rows, not the probed cells'") measurable. One row per cell:
@@ -836,17 +730,6 @@ object SimilarityIndex {
     *
     * One map-side-combinable aggregation over the cells table to k rows;
     * the window passes run over those k rows on one partition. */
-  /** Takedown-SLO watermark (the [[DedupIndex.pendingTombstones]] twin):
-    * tombstones aimed at the LIVE snapshot epoch — deletions awaiting
-    * physical retirement by the next compaction. Delta-sized read. */
-  def pendingTombstones(spark: SparkSession, base: String): Long = {
-    BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)),
-      refresh = false)
-    BucketedTables.activeTombIds(spark, tombsTable(base),
-        BucketedTables.snapshotEpoch(spark, cellsTable(base)))
-      .map(_.count()).getOrElse(0L)
-  }
-
   def stats(spark: SparkSession, base: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     BucketedTables.heal(spark, Seq(cellsTable(base)))
@@ -928,10 +811,8 @@ object SimilarityIndex {
     * path never primes the session relation cache. */
   private def scanOccupancy(spark: SparkSession,
                             base: String): Seq[(Long, Long)] =
-    spark.read.parquet(
-        BucketedTables.location(spark, cellsTable(base)).toString)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    perCellCounts(spark.read.parquet(
+      BucketedTables.location(spark, cellsTable(base)).toString))
 
   /** Upgrade a LEGACY standing ANN index in place so drift tracking
     * works without a full rebuild: synthesizes the missing baseline

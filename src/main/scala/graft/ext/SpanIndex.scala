@@ -47,9 +47,18 @@ object SpanIndex {
     Dedup.spanWindows(df, textCol, idCol, w)
       .groupBy("h").agg(count(lit(1)).as("cnt"))
 
+  /** [[BucketedTables.heal]] of the hash table, called on entry by every
+    * index API: a rebuild that died between its DROP and RENAME left the
+    * complete new snapshot under the scratch entry. `refresh = false`
+    * before an overwrite (nothing reads the old state). */
+  private def heal(spark: SparkSession, base: String,
+                   refresh: Boolean = true): Unit =
+    BucketedTables.heal(spark, Seq(hashTable(base)), refresh)
+
   /** Build the index over an already-deduped corpus. */
   def write(corpus: DataFrame, textCol: String, idCol: String, base: String,
             w: Int = 6, buckets: Int = 8): Unit = {
+    heal(corpus.sparkSession, base, refresh = false)
     val h = windowCounts(corpus, textCol, idCol, w)
       .withColumn("bid", lit(BulkBid))
     BucketedTables.writeBucketed(h, hashTable(base), Seq("h"), buckets,
@@ -58,9 +67,11 @@ object SpanIndex {
   }
 
   /** The window width the index was built with (sidecar-pinned). */
-  def windowWidth(spark: SparkSession, base: String): Int =
+  def windowWidth(spark: SparkSession, base: String): Int = {
+    heal(spark, base, refresh = false)
     new String(BucketedTables.readSidecar(spark, hashTable(base), WSidecar),
       "UTF-8").toInt
+  }
 
   /** The live hash set: positive summed refcount, optionally blind to one
     * batch stamp. The `distinct()` discards byte-identical rows a
@@ -86,6 +97,7 @@ object SpanIndex {
   def trimIncremental(spark: SparkSession, base: String, delta: DataFrame,
                       textCol: String, idCol: String,
                       excludeBid: Option[Long] = None): DataFrame = {
+    heal(spark, base)
     val w = windowWidth(spark, base)
     // h-keyed materialization point: the index probe, the canon
     // aggregation and the join-back all consume one exchange of the
@@ -120,6 +132,7 @@ object SpanIndex {
   def noveltyStats(spark: SparkSession, base: String, delta: DataFrame,
                    textCol: String, idCol: String,
                    excludeBid: Option[Long] = None): DataFrame = {
+    heal(spark, base)
     val w = windowWidth(spark, base)
     val we = Dedup.spanWindows(delta, textCol, idCol, w)
     val known = we.join(liveHashes(spark, base, excludeBid), Seq("h"), "left_semi")
@@ -142,6 +155,7 @@ object SpanIndex {
   def append(spark: SparkSession, base: String, trimmed: DataFrame,
              textCol: String, idCol: String, bid: Long = BulkBid): Unit =
     BucketedTables.withWriterLease(spark, hashTable(base), "append") {
+      heal(spark, base)
       val w = windowWidth(spark, base)
       val fresh = windowCounts(
           trimmed.filter(length(trim(col(textCol))) > 0), textCol, idCol, w)
@@ -166,6 +180,7 @@ object SpanIndex {
   def delete(spark: SparkSession, base: String, docs: DataFrame,
              textCol: String, idCol: String, bid: Long = BulkBid): Unit =
     BucketedTables.withWriterLease(spark, hashTable(base), "delete") {
+      heal(spark, base)
       val w = windowWidth(spark, base)
       val tomb = windowCounts(docs, textCol, idCol, w)
         .select(col("h"), (-col("cnt")).as("cnt"))
@@ -192,6 +207,7 @@ object SpanIndex {
   def compact(spark: SparkSession, base: String,
               preserveStamps: Boolean = false): Unit =
     BucketedTables.withWriterLease(spark, hashTable(base), "compaction") {
+      heal(spark, base)
       val w = windowWidth(spark, base)
       val keys = if (preserveStamps) Seq(col("h"), col("bid"))
                  else Seq(col("h"))
@@ -221,7 +237,7 @@ object SpanIndex {
     * stats prune the scan to the delete-batch files (bulk/append files
     * hold only positive counts), so the read is deletion-bounded. */
   def pendingTombstoneRows(spark: SparkSession, base: String): Long = {
-    BucketedTables.heal(spark, Seq(hashTable(base)), refresh = false)
+    heal(spark, base, refresh = false)
     spark.table(hashTable(base)).filter(col("cnt") < 0).count()
   }
 
@@ -229,6 +245,7 @@ object SpanIndex {
     * bucket count — pure file listing, never scans rows. */
   def needsCompact(spark: SparkSession, base: String,
                    maxFilesPerBucket: Int = 4): Boolean = {
+    heal(spark, base, refresh = false)
     val loc = new org.apache.hadoop.fs.Path(
       BucketedTables.location(spark, hashTable(base)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -248,6 +265,7 @@ object SpanIndex {
     * driver-sized by construction. */
   def stats(spark: SparkSession, base: String): DataFrame = {
     import spark.implicits._
+    heal(spark, base)
     val live = liveHashes(spark, base, excludeBid = None).count()
     val row = spark.table(hashTable(base)).agg(
       count(lit(1)).as("rows"),

@@ -207,7 +207,7 @@ class IOSpec extends AnyFunSuite {
   }
 
   test("index compaction folds appended files back and preserves verdicts") {
-    import graft.ext.DedupIndex
+    import graft.ext.{BucketedTables, DedupIndex}
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
@@ -242,7 +242,7 @@ class IOSpec extends AnyFunSuite {
     val crashSafeLoc = loc("t_compact_idx_sh")
     try {
       spark.conf.set(confKey, "false")
-      val frame = DedupIndex.compactionFrame(spark, "t_compact_idx_sh")
+      val frame = BucketedTables.compactionFrame(spark, "t_compact_idx_sh")
       val plan = frame.queryExecution.executedPlan
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
@@ -252,7 +252,7 @@ class IOSpec extends AnyFunSuite {
 
       // 2) a compaction that dies AFTER the snapshot write but BEFORE the
       // location swap leaves probes reading the old snapshot
-      DedupIndex.writeSnapshot(spark, "t_compact_idx_sh", Seq("id"), frame)
+      BucketedTables.writeSnapshot(spark, "t_compact_idx_sh", Seq("id"), frame)
       assert(loc("t_compact_idx_sh").getAbsolutePath == crashSafeLoc.getAbsolutePath,
         "an unpublished snapshot must not move the live table")
       val midCrash = rows(DedupIndex.dedupIncremental(spark, "t_compact_idx",
@@ -1238,10 +1238,103 @@ class IOSpec extends AnyFunSuite {
     val exactRows = spark.table("t_heal_idx_exact").count()
     assert(exactRows == corpus.count() + 1,
       s"append after heal must keep the corpus: $exactRows rows")
+
+    // the span index heals on entry too: after the same interrupted
+    // rebuild, a trim and an append each adopt the scratch snapshot and
+    // match an uninterrupted twin
+    import graft.ext.SpanIndex
+    Seq("t_heal_span", "t_heal_span_ref").foreach(b =>
+      SpanIndex.write(corpus, "text", "doc_id", b, w = 6, buckets = 2))
+    def interrupt(): Unit =
+      spark.sql("ALTER TABLE t_heal_span_spanh RENAME TO t_heal_span_spanh__next")
+    def trimRows(b: String) = SpanIndex.trimIncremental(spark, b, delta,
+      "text", "doc_id").collect().map(_.toSeq.mkString("|")).toSet
+    def hashRows(b: String) = spark.table(s"${b}_spanh")
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    interrupt()
+    assert(trimRows("t_heal_span") == trimRows("t_heal_span_ref"))
+    assert(spark.catalog.tableExists("t_heal_span_spanh"))
+    interrupt()
+    Seq("t_heal_span", "t_heal_span_ref").foreach(b =>
+      SpanIndex.append(spark, b, delta, "text", "doc_id", bid = 5L))
+    assert(hashRows("t_heal_span") == hashRows("t_heal_span_ref"))
+    assert(trimRows("t_heal_span") == trimRows("t_heal_span_ref"))
+  }
+
+  test("dedup compaction killed before the exact (anchor) swap: deletions " +
+       "stay masked and a re-run converges to the uninterrupted fold") {
+    import graft.ext.{BucketedTables, DedupIndex}
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "lang", "text")
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    val victims = corpus.filter(length(col("text")) > 40)
+      .select("doc_id").orderBy("doc_id").limit(3)
+    val gone = victims.as[Long].collect().toSet
+    // the taken-down documents resubmitted under fresh ids: while live,
+    // each one is a near (and exact) duplicate of its original
+    val probe = corpus.filter(col("doc_id").isin(gone.toSeq: _*))
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+    def edges(base: String) = DedupIndex.matchEdges(spark, base, probe,
+        "text", "doc_id", "lang", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    def nearPartners(base: String) =
+      edges(base).collect { case (a, _, "near") => a }
+    Seq("t_cwin_a", "t_cwin_b").foreach(b => DedupIndex.write(corpus,
+      "text", "doc_id", "lang", b, threshold = 0.5, buckets = 4))
+    assert(gone.subsetOf(nearPartners("t_cwin_a")),
+      "the probe must witness every victim while it is live")
+    Seq("t_cwin_a", "t_cwin_b").foreach(b =>
+      DedupIndex.delete(spark, b, victims, "doc_id"))
+    DedupIndex.compactPartial(spark, "t_cwin_b") // the uninterrupted fold
+
+    // t_cwin_a: the partial fold by hand — plan and write the snapshots
+    // of the deletion-dirty tables (pref/band never rewrite on
+    // deletions), then commit in the shared order and die before the
+    // last swap
+    val exact = DedupIndex.exactTable("t_cwin_a")
+    val tombIds = BucketedTables.liveTombIds(spark, exact,
+      DedupIndex.tombsTable("t_cwin_a"))
+    val snaps = BucketedTables.withForcedBucketedScan(spark) {
+      Seq(DedupIndex.shTable("t_cwin_a") -> Seq("id"), exact -> Seq("h", "t"))
+        .flatMap { case (t, keys) =>
+          BucketedTables.planPartial(spark, t, keys, tombIds, dirty = None)
+            .map(fold => t -> BucketedTables.writePartial(spark, fold))
+        }
+    }
+    assert(snaps.map(_._1).toSet ==
+      Set(DedupIndex.shTable("t_cwin_a"), exact))
+    val epoch = BucketedTables.snapshotEpoch(spark, exact)
+    BucketedTables.commitOrder(exact, snaps).init.foreach {
+      case (t, snap) => BucketedTables.swapLocation(spark, t, snap) }
+    // the window: sh is folded, exact still holds the victims, and the
+    // unmoved epoch keeps every tombstone active against all four tables
+    assert(nearPartners("t_cwin_a").intersect(gone).isEmpty &&
+      edges("t_cwin_a").map(_._1).intersect(gone).isEmpty,
+      "a taken-down id resurfaced in the crash window")
+    assert(BucketedTables.snapshotEpoch(spark, exact) == epoch)
+    assert(DedupIndex.pendingTombstones(spark, "t_cwin_a") == gone.size.toLong)
+
+    // a re-run converges: same tables, same verdicts as the uninterrupted
+    DedupIndex.compactPartial(spark, "t_cwin_a")
+    assert(DedupIndex.pendingTombstones(spark, "t_cwin_a") == 0L)
+    Seq(DedupIndex.exactTable _, DedupIndex.shTable _, DedupIndex.prefTable _,
+        DedupIndex.bandTable _).foreach { tbl =>
+      def rows(b: String) = spark.table(tbl(b))
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(rows("t_cwin_a") == rows("t_cwin_b"), tbl("t_cwin_a"))
+    }
+    assert(spark.table(exact).filter(col("id").isin(gone.toSeq: _*))
+      .count() == 0L)
+    assert(edges("t_cwin_a") == edges("t_cwin_b"))
+    val fresh = docs.filter(col("doc_id") % 7 === 0)
+    def verdicts(b: String) = DedupIndex.dedupIncremental(spark, b, fresh,
+        "text", "doc_id", "lang", threshold = 0.5)
+      .collect().map(_.toSeq.mkString("|")).toSet
+    assert(verdicts("t_cwin_a") == verdicts("t_cwin_b"))
   }
 
   test("legacy index (pre-bid, pre-PPJoin-payload) migrates and accepts stamped appends") {
-    import graft.ext.{Dedup, DedupIndex}
+    import graft.ext.{BucketedTables, Dedup, DedupIndex}
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
@@ -1259,7 +1352,7 @@ class IOSpec extends AnyFunSuite {
       // write the stripped rows as an unpublished snapshot, then recreate
       // the catalog entry with the LEGACY schema directly over it (DDL —
       // a writer-based recreate would clean the location dir)
-      val path = DedupIndex.writeSnapshot(spark, tbl, keys, legacy)
+      val path = BucketedTables.writeSnapshot(spark, tbl, keys, legacy)
       val bucketCols = keys.mkString(", ")
       spark.sql(s"DROP TABLE $tbl")
       spark.sql(s"""CREATE TABLE $tbl (${legacy.schema.toDDL}) USING parquet
@@ -1298,7 +1391,7 @@ class IOSpec extends AnyFunSuite {
 
   test("backfillHolderIds retires the legacy-exact class: delete refuses " +
        "before, works after, and partial compaction retires the tombstones") {
-    import graft.ext.DedupIndex
+    import graft.ext.{BucketedTables, DedupIndex}
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     DedupIndex.write(corpus, "text", "doc_id", "lang", "t_backfill_idx",
@@ -1306,7 +1399,7 @@ class IOSpec extends AnyFunSuite {
     // strip the exact table to the pre-holder-id era (the t_legacy_idx
     // simulation, exact table only)
     val legacy = spark.table("t_backfill_idx_exact").drop("bid", "id")
-    val path = DedupIndex.writeSnapshot(spark, "t_backfill_idx_exact",
+    val path = BucketedTables.writeSnapshot(spark, "t_backfill_idx_exact",
       Seq("h", "t"), legacy)
     spark.sql("DROP TABLE t_backfill_idx_exact")
     spark.sql(s"""CREATE TABLE t_backfill_idx_exact (${legacy.schema.toDDL})
