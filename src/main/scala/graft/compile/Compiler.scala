@@ -171,7 +171,7 @@ object Compiler {
         case None =>
           // Missing else ⇒ NULL, exactly the reference's None branch
           // (transformations.py:219-222).
-          TypedCol(when(p, thenC.col), asNullable(thenC.dt))
+          TypedCol(when(p, thenC.col), thenC.dt)
       }
 
     case Create(model) => compileCreate(model, in, ctx)
@@ -262,7 +262,7 @@ object Compiler {
           case Some(d) => coalesce(try_element_at(in.col, k), lit(d))
           case None    => element_at(in.col, k)
         }
-        TypedCol(out, asNullable(vt))
+        TypedCol(out, vt)
 
       case ArrayType(et, _) =>
         val i = key match {
@@ -278,7 +278,7 @@ object Compiler {
           case Some(d) => coalesce(try_element_at(in.col, idx), lit(d))
           case None    => element_at(in.col, idx)
         }
-        TypedCol(out, asNullable(et))
+        TypedCol(out, et)
 
       case StringType =>
         // JSON-string payload (the fixtures' `events.props` shape).
@@ -342,7 +342,6 @@ object Compiler {
   private def litType(v: Any): DataType =
     org.apache.spark.sql.catalyst.expressions.Literal(v).dataType
 
-  private def asNullable(dt: DataType): DataType = dt
   private def fail(msg: String): Nothing = throw new PlanException(msg)
 
   def opName(t: Transform): String = t match {

@@ -46,11 +46,14 @@ object Concurrent {
     * `spark.graft.concurrent.width` if profiling shows idle capacity. */
   val DefaultWidth = 4
 
-  private def confWidth(): Int =
+  /** The calling thread's active session, else the default one. */
+  private def session: Option[org.apache.spark.sql.SparkSession] =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .flatMap(s => Try(s.conf.get("spark.graft.concurrent.width").toInt)
-        .toOption)
+
+  private def confWidth(): Int =
+    session.flatMap(s =>
+        Try(s.conf.get("spark.graft.concurrent.width").toInt).toOption)
       .orElse(sys.env.get("SPARK_GRAFT_CONCURRENT_WIDTH")
         .flatMap(v => Try(v.toInt).toOption))
       .getOrElse(DefaultWidth)
@@ -68,19 +71,7 @@ object Concurrent {
   def labeled[A](legs: Seq[(String, () => A)]): Seq[A] = {
     if (legs.isEmpty) return Seq.empty
     def runLeg(label: String, leg: () => A): A =
-      if (label.isEmpty) leg()
-      else {
-        val sc = org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .map(_.sparkContext)
-        // nested groups compose labels left-to-right ("outer / inner")
-        val prev = sc.flatMap(c =>
-          Option(c.getLocalProperty("spark.job.description")))
-        val full = prev.fold(label)(p => s"$p / $label")
-        sc.foreach(_.setJobDescription(full))
-        try leg()
-        finally sc.foreach(_.setJobDescription(prev.orNull))
-      }
+      if (label.isEmpty) leg() else withDesc(label)(leg())
     if (legs.size == 1) {
       val (label, leg) = legs.head
       return Seq(runLeg(label, leg))
@@ -101,17 +92,13 @@ object Concurrent {
     // pool a reused thread would otherwise carry the previous leg's
     // properties. Capture the caller's properties once and restore them
     // at the start of every leg so reuse is invisible.
-    val callerDesc = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext)
+    val callerDesc = session.map(_.sparkContext)
       .flatMap(c => Option(c.getLocalProperty("spark.job.description")))
     try {
       val settled = Await.result(
         Future.sequence(legs.map { case (label, leg) =>
           Future {
-            org.apache.spark.sql.SparkSession.getActiveSession
-              .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-              .foreach(_.sparkContext.setJobDescription(callerDesc.orNull))
+            session.foreach(_.sparkContext.setJobDescription(callerDesc.orNull))
             runLeg(label, leg)
           }.transform(Try(_))
         }),
@@ -129,9 +116,8 @@ object Concurrent {
     * previous description on exit, so a labeled phase nests cleanly
     * inside foreachBatch and inside other labeled phases. */
   def withDesc[A](label: String)(body: => A): A = {
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext)
+    val sc = session.map(_.sparkContext)
+    // nested labels compose left-to-right ("outer / inner")
     val prev = sc.flatMap(c =>
       Option(c.getLocalProperty("spark.job.description")))
     val full = prev.fold(label)(p => s"$p / $label")

@@ -70,12 +70,14 @@ object DedupIndex {
   /** Advisory append-pressure sidecar on the anchor (exact) table:
     * payload `"<docs appended since last fold> <docs in the snapshot>"`.
     * [[write]] seeds `0 <n>`, each append folds its batch's doc count
-    * in, [[compact]] re-bases to `0 <folded n>` — so [[needsCompact]]
-    * can weigh accumulated append mass against the snapshot without
-    * scanning anything. Same crash contract as the ANN occupancy
-    * sidecar: a crash between an append's row commit and the sidecar
-    * fold leaves it stale-low; missing on a legacy index (appends then
-    * skip the fold and [[appendedSinceSnapshot]] reports unknown). */
+    * in, [[compact]] re-bases to `0 <folded n>`, and [[compactPartial]]
+    * to `<appended> <folded n>` (it carries the pref/band append files
+    * whole) — so [[needsCompact]] can weigh accumulated append mass
+    * against the snapshot without scanning anything. Same crash
+    * contract as the ANN occupancy sidecar: a crash between an append's
+    * row commit and the sidecar fold leaves it stale-low; missing on a
+    * legacy index (appends then skip the fold and
+    * [[appendedSinceSnapshot]] reports unknown). */
   private val AppendedSidecar = "_appended"
 
   /** The per-document index artifacts for one frame: id, block, text hash,
@@ -408,6 +410,10 @@ object DedupIndex {
                                  exactDirty: Option[Set[String]]): Unit = {
     val tombIds = BucketedTables.liveTombIds(spark, exactTable(base),
       tombsTable(base))
+    // a partial fold carries pref/band whole and clean exact/sh files by
+    // link, so the append fragmentation survives it: keep the PRE-swap
+    // appended count across the re-base
+    val appended = readAppended(spark, base).fold(0L)(_._1)
     BucketedTables.withForcedBucketedScan(spark) {
       // per-table plan + snapshot write + carry-over run as concurrent
       // legs (§2.6) — independent tables doing scratch-dir work; every
@@ -431,14 +437,13 @@ object DedupIndex {
       graft.exec.Concurrent.labeled[Unit](Seq(
         "dedup: tomb gc" -> (() =>
           BucketedTables.clearTombs(spark, tombsTable(base))),
-        // re-base the sidecar so needsCompact stops firing on append
-        // mass this fold handled or deliberately carried
+        // re-base the snapshot count; the carried append mass stays
         "dedup: folded count" -> (() =>
           folded = spark.read.parquet(
             BucketedTables.location(spark, exactTable(base)).toString)
             .count())))
       BucketedTables.addSidecar(spark, exactTable(base), AppendedSidecar,
-        s"0 $folded".getBytes("UTF-8"))
+        s"$appended $folded".getBytes("UTF-8"))
       System.err.println(f"[compactPartial] tomb GC + sidecar " +
         f"${(System.nanoTime() - t3) / 1e9}%.2fs")
     }
@@ -466,19 +471,14 @@ object DedupIndex {
     * base would record a lie; the next [[compact]] establishes it. */
   private def foldAppended(spark: SparkSession, base: String,
                            nDocs: Long): Unit =
-    if (BucketedTables.sidecarExists(spark, exactTable(base), AppendedSidecar)) {
-      val p = new String(BucketedTables.readSidecar(
-        spark, exactTable(base), AppendedSidecar), "UTF-8").split(" ")
+    readAppended(spark, base).foreach { case (appended, snap) =>
       BucketedTables.addSidecar(spark, exactTable(base), AppendedSidecar,
-        s"${p(0).toLong + nDocs} ${p(1)}".getBytes("UTF-8"))
+        s"${appended + nDocs} $snap".getBytes("UTF-8"))
     }
 
-  /** Docs appended since the last snapshot fold, with the snapshot's doc
-    * count — None on a legacy index that predates the sidecar (run a
-    * [[compact]] once to establish it). */
-  def appendedSinceSnapshot(spark: SparkSession,
-                            base: String): Option[(Long, Long)] = {
-    healInterrupted(spark, base)
+  /** The [[AppendedSidecar]] payload, None when it is missing. */
+  private def readAppended(spark: SparkSession,
+                           base: String): Option[(Long, Long)] =
     if (!BucketedTables.sidecarExists(spark, exactTable(base), AppendedSidecar))
       None
     else {
@@ -486,6 +486,14 @@ object DedupIndex {
         spark, exactTable(base), AppendedSidecar), "UTF-8").split(" ")
       Some((p(0).toLong, p(1).toLong))
     }
+
+  /** Docs appended since the last full [[compact]], with the snapshot's
+    * doc count — None on a legacy index that predates the sidecar (run a
+    * [[compact]] once to establish it). */
+  def appendedSinceSnapshot(spark: SparkSession,
+                            base: String): Option[(Long, Long)] = {
+    healInterrupted(spark, base)
+    readAppended(spark, base)
   }
 
   /** Takedown-SLO watermark: the [[BucketedTables.liveTombIds]] count —
@@ -548,9 +556,9 @@ object DedupIndex {
 
   /** Advisory compaction trigger: true when deletions are pending (the
     * fold is what physically applies a takedown) or when the appended
-    * doc mass since the last fold has reached `appendedRatio` of the
-    * snapshot (append files accumulate per batch — the fold restores
-    * one-file-per-bucket scans). An unknown append counter (legacy
+    * doc mass since the last full [[compact]] has reached
+    * `appendedRatio` of the snapshot (append files accumulate per batch
+    * — the full fold restores one-file-per-bucket scans). An unknown append counter (legacy
     * index, pre-sidecar) decides on tombstones alone. Deliberately NOT
     * triggered by [[stats]]' `files` column: a fresh parallel build
     * legitimately writes many files per bucket, and deciding on file

@@ -28,11 +28,6 @@ object TextAnalysis {
   def normalizeNfc(text: Column): Column =
     graft.functions.TextExpressions.normalize(text, "NFC")
 
-  /** Strip C0/C1 control characters (keeping \t \n \r) — the standard
-    * text-cleanup step; explicit class, identical in Java regex and RE2. */
-  def stripControl(text: Column): Column =
-    regexp_replace(text, "[\u0000-\u0008\u000B\u000C\u000E-\u001F\u007F]", "")
-
   /** Whitespace tokens of the lower-cased text. */
   def tokens(text: Column): Column = split(lower(trim(text)), WsPlus)
 

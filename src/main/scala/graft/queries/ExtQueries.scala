@@ -836,36 +836,26 @@ object ExtQueries {
     * exclusion, and the takedown all compose under checkpointed
     * restart. */
   def qStreamSpanLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Scratch.fresh(s, "streamspan", dir)
     val docs = Tables(s, dir, "documents").select("doc_id", "text")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val idx = "graft_idx_streamspan"
     SpanIndex.write(corpus, "text", "doc_id", idx, w = 6, buckets = 8)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestSpans.run(
-          s.readStream.schema(docs.schema).parquet(inDir), idx,
-          "text", "doc_id", outPath = s"$base/out",
-          checkpoint = s"$base/ckpt", updateIndex = true)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val stream = Scratch.stream(s, base, docs.schema) { (src, ckpt, _) =>
+      graft.streaming.IngestSpans.run(src, idx, "text", "doc_id",
+        outPath = s"$base/out", checkpoint = ckpt, updateIndex = true)
     }
-    docs.filter(col("doc_id") % 10 === 0)
+    stream.feed(docs.filter(col("doc_id") % 10 === 0)
       .unionAll(corpus.filter(col("doc_id") < 30)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .coalesce(1).write.mode("overwrite").parquet(inDir)
-    runToCompletion()
+        .select((col("doc_id") + 10000).as("doc_id"), col("text"))))
     // mid-stream takedown, between the two checkpointed runs
     SpanIndex.delete(s, idx, corpus.filter(col("doc_id") % 3 === 1),
       "text", "doc_id")
-    docs.filter(col("doc_id") % 10 === 5)
+    stream.feed(docs.filter(col("doc_id") % 10 === 5)
       .unionAll(docs.filter(col("doc_id") % 10 === 0 && col("doc_id") < 30)
         .select((col("doc_id") + 30000).as("doc_id"), col("text")))
       .unionAll(corpus.filter(col("doc_id") % 3 === 1 && col("doc_id") < 60)
-        .select((col("doc_id") + 40000).as("doc_id"), col("text")))
-      .coalesce(1).write.mode("append").parquet(inDir)
-    runToCompletion()
+        .select((col("doc_id") + 40000).as("doc_id"), col("text"))))
     s.read.parquet(s"$base/out")
       .select(col("doc_id"), col("kept_tokens"), col("trimmed_text"),
         col("batch_id").cast("int").as("batch_id"))
@@ -1419,6 +1409,53 @@ object ExtQueries {
       "text", "doc_id", "lang", threshold = 0.5)
   }
 
+  // --------------------------------------- dedup/cluster stream prefix
+
+  /** The dedup and cluster stream lifecycles' shared steps. Constructing
+    * one builds `idx` on the standing corpus (doc_id % 5 ≠ 0); [[legs]]
+    * streams the EVEN delta (doc_id % 10 = 0) through
+    * [[graft.streaming.IngestDedup]] (updateIndex), runs `midStream`,
+    * then streams the ODD delta (doc_id % 10 = 5) on the same
+    * checkpoint. With `trackEdges` set, every batch also folds into the
+    * cluster state at [[cc]] with that edge persistence. A further
+    * [[stream]] feed is the next leg on the same checkpoint. */
+  private final class DedupStream(s: SparkSession, dir: String, tag: String,
+      val idx: String, trackEdges: Option[Boolean] = None,
+      phase: Scratch.Phases = Scratch.bare) {
+    private val base = Scratch.fresh(s, tag, dir)
+    val docs: DataFrame =
+      Tables(s, dir, "documents").select("doc_id", "lang", "text")
+    val cc = s"$base/cc"
+    phase("build_corpus") {
+      DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
+        "text", "doc_id", "lang", idx, threshold = 0.5)
+    }
+    val stream: Scratch.FileStream =
+      Scratch.stream(s, base, docs.schema) { (src, ckpt, _) =>
+        graft.streaming.IngestDedup.run(src, base = idx, textCol = "text",
+          idCol = "doc_id", blockCol = "lang", threshold = 0.5,
+          verdictPath = s"$base/verdicts", checkpoint = ckpt,
+          updateIndex = true,
+          clusterBase = if (trackEdges.isEmpty) "" else cc,
+          clusterTrackEdges = trackEdges.getOrElse(true))
+      }
+
+    def legs(midStream: => Unit = ()): Unit = {
+      phase("b0_stream")(stream.feed(docs.filter(col("doc_id") % 10 === 0)))
+      midStream
+      phase("b1_stream")(stream.feed(docs.filter(col("doc_id") % 10 === 5)))
+    }
+
+    /** Every streamed verdict, one row per (document, batch). */
+    def verdicts: DataFrame = s.read.parquet(s"$base/verdicts")
+      .select(col("doc_id"), col("batch_id").cast("int").as("batch_id"),
+        col("keep"), col("reason"))
+
+    /** The live cluster membership. */
+    def members: DataFrame =
+      ClusterIndex.current(s, cc).select(col("id").as("doc_id"), col("cid"))
+  }
+
   // ------------------------------------------- q_stream_dedup_lifecycle
 
   /** The standing DEDUP index driven through a REAL Structured-Streaming
@@ -1445,35 +1482,12 @@ object ExtQueries {
     * batch 0's verdicts (written pre-delete) stand, and the streamed
     * index append makes batch 0's kept rows witness batch 1's rules. */
   def qStreamDedupLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamdedup", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamlife"
-    DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-      "text", "doc_id", "lang", idx, threshold = 0.5)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
+    val life = new DedupStream(s, dir, "streamdedup", "graft_idx_streamlife")
     // mid-stream takedown, between the two checkpointed runs
-    DedupIndex.delete(s, idx,
-      docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 1)
-        .select(col("doc_id")), "doc_id")
-    docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    s.read.parquet(s"$base/verdicts")
-      .select(col("doc_id"), col("batch_id").cast("int").as("batch_id"),
-        col("keep"), col("reason"))
+    life.legs(DedupIndex.delete(s, life.idx,
+      life.docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 1)
+        .select(col("doc_id")), "doc_id"))
+    life.verdicts
   }
 
   /** Two-batch closed-form replay: batch 0 = incremental dedup of the
@@ -1548,32 +1562,12 @@ object ExtQueries {
     * pref/band row, which must die at the rewritten sh verify join)
     * and re-admission is id-precise. */
   def qStreamDedupReadmit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamdedupre", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamre"
-    DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-      "text", "doc_id", "lang", idx, threshold = 0.5)
-    val takedown = docs
+    val life = new DedupStream(s, dir, "streamdedupre", "graft_idx_streamre")
+    val takedown = life.docs
       .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 1)
       .orderBy("doc_id").limit(40).localCheckpoint()
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    DedupIndex.delete(s, idx, takedown.select(col("doc_id")), "doc_id")
-    docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
+    life.legs(DedupIndex.delete(s, life.idx, takedown.select(col("doc_id")),
+      "doc_id"))
     // the compaction retires the tombstones and removes the taken-down
     // rows — only now may cleared documents re-enter. PARTIAL: only the
     // tombstone-dirty exact/sh buckets rewrite; every clean bucket and
@@ -1589,15 +1583,11 @@ object ExtQueries {
     // its own — the require makes the artifact say which branch ran.
     // The FULL branch is exercised under the same gate by
     // q_stream_ann_readmit (defaults, below-crossover corpus).
-    val choice = DedupIndex.compactAuto(s, idx)
+    val choice = DedupIndex.compactAuto(s, life.idx)
     require(choice == "partial",
       s"compactAuto must take the partial branch here, got $choice")
-    takedown.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    s.read.parquet(s"$base/verdicts")
-      .select(col("doc_id"), col("batch_id").cast("int").as("batch_id"),
-        col("keep"), col("reason"))
+    life.stream.feed(takedown.filter(col("doc_id") % 2 === 0))
+    life.verdicts
   }
 
   /** Three-batch closed-form replay: the lifecycle's two batches (the
@@ -1690,32 +1680,11 @@ object ExtQueries {
     * merges of min-id clusters) lands exactly the batch-CC labels over
     * the union of all discovered edges. */
   def qStreamClusterLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamcc", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamcc"
-    val cc = s"$base/cc"
-    DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-      "text", "doc_id", "lang", idx, threshold = 0.5)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true,
-          clusterBase = cc)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    ClusterIndex.compact(s, cc)
-    ClusterIndex.current(s, cc).select(col("id").as("doc_id"), col("cid"))
+    val life = new DedupStream(s, dir, "streamcc", "graft_idx_streamcc",
+      trackEdges = Some(true))
+    life.legs()
+    ClusterIndex.compact(s, life.cc)
+    life.members
   }
 
   /** Closed-form replay: batch 0's edges vs the corpus, batch 1's vs
@@ -1783,32 +1752,11 @@ object ExtQueries {
     * near-dup-dense corpus is corpus-scale storage) — priced at the
     * documented loss of withdraw capability. */
   def qStreamClusterAddonly(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamccao", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamccao"
-    val cc = s"$base/cc"
-    DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-      "text", "doc_id", "lang", idx, threshold = 0.5)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true,
-          clusterBase = cc, clusterTrackEdges = false)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    ClusterIndex.compact(s, cc)
-    ClusterIndex.current(s, cc).select(col("id").as("doc_id"), col("cid"))
+    val life = new DedupStream(s, dir, "streamccao", "graft_idx_streamccao",
+      trackEdges = Some(false))
+    life.legs()
+    ClusterIndex.compact(s, life.cc)
+    life.members
   }
 
   // ------------------------------------------- q_stream_cluster_readmit
@@ -1847,51 +1795,36 @@ object ExtQueries {
     * hash-pass proves withdrawal splits/relabels exactly, retraction
     * beats assertion, re-admission beats retraction, and no
     * pre-takedown edge survives into the re-admitted world. */
-  def qStreamClusterReadmit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamccre", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamccre"
-    val cc = s"$base/cc"
-    DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-      "text", "doc_id", "lang", idx, threshold = 0.5)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true,
-          clusterBase = cc)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
+  def qStreamClusterReadmit(s: SparkSession, dir: String): DataFrame =
+    clusterReadmit(s, dir, "streamccre", "graft_idx_streamccre", Scratch.bare)
+
+  /** [[qStreamClusterReadmit]]'s chain with every step named for `phase`
+    * — [[PhaseProbe]] replays it under its own tag and index. */
+  private[queries] def clusterReadmit(s: SparkSession, dir: String,
+      tag: String, idx: String, phase: Scratch.Phases): DataFrame = {
+    val life = new DedupStream(s, dir, tag, idx, trackEdges = Some(true),
+      phase = phase)
+    life.legs()
     // fixed-count takedown: the 40 smallest TRACKED node ids (tracked =
     // duplicate-involved — where withdrawal actually splits/relabels)
-    val takedown = ClusterIndex.current(s, cc)
-      .select(col("id").as("doc_id")).orderBy("doc_id").limit(40)
-      .localCheckpoint()
+    val takedown = phase("takedown_select") {
+      ClusterIndex.current(s, life.cc)
+        .select(col("id").as("doc_id")).orderBy("doc_id").limit(40)
+        .localCheckpoint()
+    }
     // the corpus-index tombstone append and the cluster-state withdrawal
     // touch distinct structures — overlapped (§2.6)
-    graft.exec.Concurrent.run(
+    phase("delete_withdraw")(graft.exec.Concurrent.run(
       () => DedupIndex.delete(s, idx, takedown, "doc_id"),
-      () => ClusterIndex.withdraw(s, cc, takedown,
-        ClusterIndex.nextBatchId(s, cc)))
+      () => ClusterIndex.withdraw(s, life.cc, takedown,
+        ClusterIndex.nextBatchId(s, life.cc))))
     // retire the tombstones (partial: only dirty buckets rewrite) —
     // only now may the cleared half re-enter
-    DedupIndex.compactPartial(s, idx)
-    docs.join(takedown.filter(col("doc_id") % 2 === 0),
-        Seq("doc_id"), "left_semi")
-      .coalesce(1).write.mode("append").parquet(inDir)
-    runToCompletion()
-    ClusterIndex.compact(s, cc)
-    ClusterIndex.current(s, cc).select(col("id").as("doc_id"), col("cid"))
+    phase("compact_partial")(DedupIndex.compactPartial(s, idx))
+    phase("b2_stream")(life.stream.feed(life.docs.join(
+      takedown.filter(col("doc_id") % 2 === 0), Seq("doc_id"), "left_semi")))
+    phase("cc_compact")(ClusterIndex.compact(s, life.cc))
+    life.members
   }
 
   /** Closed-form replay: the lifecycle's two batch edge sets, the

@@ -448,6 +448,34 @@ object MiningQueries {
       e.filter(col("vec_id") < 10), k = 5, nprobe = 2)
   }
 
+  // ------------------------------------------------- ANN stream prefix
+
+  /** The ANN stream lifecycles' shared steps. Constructing one builds
+    * `idx` on vec_id < 400 (the stored quantizer); [[legs]] streams
+    * vec_id ∈ [400, 450) through [[graft.streaming.IngestVectors]],
+    * tombstones every vec_id % 7 = 3 — ids not yet ingested included —
+    * then streams vec_id ≥ 450 on the same checkpoint. A further
+    * [[stream]] feed is the next leg on that checkpoint. */
+  private final class AnnStream(s: SparkSession, dir: String, tag: String,
+                                val idx: String) {
+    private val base = Scratch.fresh(s, tag, dir)
+    val e: DataFrame = Tables(s, dir, "embeddings")
+    graft.ext.SimilarityIndex.write(e.filter(col("vec_id") < 400),
+      "embedding", "vec_id", idx, k = 4, iters = 1, buckets = 4)
+    val stream: Scratch.FileStream =
+      Scratch.stream(s, base, e.schema) { (src, ckpt, _) =>
+        graft.streaming.IngestVectors.run(src, idx, checkpoint = ckpt)
+      }
+
+    def legs(): Unit = {
+      stream.feed(e.filter(col("vec_id") >= 400 && col("vec_id") < 450))
+      // mid-stream takedown, between the two checkpointed runs
+      graft.ext.SimilarityIndex.delete(s, idx,
+        e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
+      stream.feed(e.filter(col("vec_id") >= 450))
+    }
+  }
+
   // --------------------------------------------- q_stream_ann_lifecycle
 
   /** The standing ANN index driven through a REAL Structured-Streaming
@@ -476,32 +504,11 @@ object MiningQueries {
     * delete-wins masking, and the compaction swap together leave
     * EXACTLY the from-scratch index state. */
   def qStreamAnnLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamann", dir)
-    val e = Tables(s, dir, "embeddings")
-    val idx = "q_ann_streamlife"
-    graft.ext.SimilarityIndex.write(e.filter(col("vec_id") < 400),
-      "embedding", "vec_id", idx, k = 4, iters = 1, buckets = 4)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestVectors.run(
-          s.readStream.schema(e.schema).parquet(inDir), idx,
-          checkpoint = s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    e.filter(col("vec_id") >= 400 && col("vec_id") < 450).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    // mid-stream takedown, between the two checkpointed runs
-    graft.ext.SimilarityIndex.delete(s, idx,
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
-    e.filter(col("vec_id") >= 450).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    graft.ext.SimilarityIndex.compact(s, idx)
-    graft.ext.SimilarityIndex.topK(s, idx,
-      e.filter(col("vec_id") < 10), k = 5, nprobe = 2)
+    val life = new AnnStream(s, dir, "streamann", "q_ann_streamlife")
+    life.legs()
+    graft.ext.SimilarityIndex.compact(s, life.idx)
+    graft.ext.SimilarityIndex.topK(s, life.idx,
+      life.e.filter(col("vec_id") < 10), k = 5, nprobe = 2)
   }
 
   lazy val qStreamAnnLifecycleSql: String =
@@ -530,28 +537,8 @@ object MiningQueries {
     *     uncleared remainder stayed dead, i.e. re-admission is
     *     id-precise, not an accidental tombstone unmask. */
   def qStreamAnnReadmit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamannre", dir)
-    val e = Tables(s, dir, "embeddings")
-    val idx = "q_ann_readmit"
-    graft.ext.SimilarityIndex.write(e.filter(col("vec_id") < 400),
-      "embedding", "vec_id", idx, k = 4, iters = 1, buckets = 4)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestVectors.run(
-          s.readStream.schema(e.schema).parquet(inDir), idx,
-          checkpoint = s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    e.filter(col("vec_id") >= 400 && col("vec_id") < 450).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
-    graft.ext.SimilarityIndex.delete(s, idx,
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
-    e.filter(col("vec_id") >= 450).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
+    val life = new AnnStream(s, dir, "streamannre", "q_ann_readmit")
+    life.legs()
     // the compaction retires the tombstones — the precondition for
     // re-admission; a re-append BEFORE this line would stay masked.
     // PARTIAL: only the files physically holding tombstoned rows
@@ -565,14 +552,13 @@ object MiningQueries {
     // (the cheap gate fires first). The require makes the artifact say
     // which branch ran; the partial branch is exercised under the same
     // gate by q_stream_dedup_readmit (pinned) and the takedown capstone.
-    val annChoice = graft.ext.SimilarityIndex.compactAuto(s, idx)
+    val annChoice = graft.ext.SimilarityIndex.compactAuto(s, life.idx)
     require(annChoice == "full",
       s"compactAuto must take the full branch on this small corpus, got $annChoice")
-    e.filter(col("vec_id") % 7 === 3 && col("vec_id") < 420).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
-    graft.ext.SimilarityIndex.topK(s, idx,
-      e.filter(col("vec_id") < 10), k = 5, nprobe = 2)
+    life.stream.feed(
+      life.e.filter(col("vec_id") % 7 === 3 && col("vec_id") < 420))
+    graft.ext.SimilarityIndex.topK(s, life.idx,
+      life.e.filter(col("vec_id") < 10), k = 5, nprobe = 2)
   }
 
   lazy val qStreamAnnReadmitSql: String =
@@ -1063,37 +1049,15 @@ object MiningQueries {
     * survivors. The oracle replays the lifecycle-equivalent state plus
     * the whole metric pipeline. */
   def qRetrievalNdcgIdx(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamannndcg", dir)
-    val e = Tables(s, dir, "embeddings")
-    val idx = "q_ann_ndcg_life"
-    graft.ext.SimilarityIndex.write(e.filter(col("vec_id") < 400),
-      "embedding", "vec_id", idx, k = 4, iters = 1, buckets = 4)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val st = graft.streaming.IngestVectors.run(
-          s.readStream.schema(e.schema).parquet(inDir), idx,
-          checkpoint = s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      st.awaitTermination()
-    }
+    val life = new AnnStream(s, dir, "streamannndcg", "q_ann_ndcg_life")
+    val (e, idx) = (life.e, life.idx)
     // ground truth reads only the base embeddings — overlapped with the
     // index lifecycle (§2.6), exactly like [[qSimRecallIdx]]
     val q = e.filter(col("vec_id") < 50)
     val survivors = e.filter(col("vec_id") % 7 =!= 3)
     @volatile var rel: DataFrame = null
     graft.exec.Concurrent.run(
-      () => {
-        e.filter(col("vec_id") >= 400 && col("vec_id") < 450).coalesce(1)
-          .write.mode("overwrite").parquet(inDir)
-        runToCompletion()
-        graft.ext.SimilarityIndex.delete(s, idx,
-          e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
-        e.filter(col("vec_id") >= 450).coalesce(1)
-          .write.mode("append").parquet(inDir)
-        runToCompletion()
-        graft.ext.SimilarityIndex.compact(s, idx)
-      },
+      () => { life.legs(); graft.ext.SimilarityIndex.compact(s, idx) },
       () => { rel = ndcgGroundTruth(survivors, q) })
     val idxAll = Seq(1, 2, 4).map { np =>
       graft.ext.SimilarityIndex.topK(s, idx, q, k = 10, nprobe = np)
@@ -1126,20 +1090,8 @@ object MiningQueries {
     * state (train on vec_id < 400, search the corpus minus the
     * takedown) and the whole recall measurement end-to-end. */
   def qSimRecallIdx(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamannrecall", dir)
-    val e = Tables(s, dir, "embeddings")
-    val idx = "q_ann_recall_life"
-    graft.ext.SimilarityIndex.write(e.filter(col("vec_id") < 400),
-      "embedding", "vec_id", idx, k = 4, iters = 1, buckets = 4)
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val st = graft.streaming.IngestVectors.run(
-          s.readStream.schema(e.schema).parquet(inDir), idx,
-          checkpoint = s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      st.awaitTermination()
-    }
+    val life = new AnnStream(s, dir, "streamannrecall", "q_ann_recall_life")
+    val (e, idx) = (life.e, life.idx)
     // The brute-force ground truth reads only the base embeddings, never
     // the index, so it overlaps the WHOLE index lifecycle (build already
     // ran above; streams, takedown, compaction in the sibling leg) —
@@ -1150,18 +1102,7 @@ object MiningQueries {
     @volatile var exact: DataFrame = null
     @volatile var nq: Long = 0L
     graft.exec.Concurrent.run(
-      () => {
-        e.filter(col("vec_id") >= 400 && col("vec_id") < 450).coalesce(1)
-          .write.mode("overwrite").parquet(inDir)
-        runToCompletion()
-        // mid-stream takedown, between the two checkpointed runs
-        graft.ext.SimilarityIndex.delete(s, idx,
-          e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
-        e.filter(col("vec_id") >= 450).coalesce(1)
-          .write.mode("append").parquet(inDir)
-        runToCompletion()
-        graft.ext.SimilarityIndex.compact(s, idx)
-      },
+      () => { life.legs(); graft.ext.SimilarityIndex.compact(s, idx) },
       () => { exact = Similarity.bruteForceTopK(survivors, q, k = 5)
         .select(col("query_id"), col("cand_id")).localCheckpoint() },
       () => { nq = q.count() })

@@ -1,15 +1,12 @@
 package graft.queries
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.Tables
-import graft.ext.{ClusterIndex, DedupIndex}
+import org.apache.spark.sql.SparkSession
 
 /** Scratch phase profiler for the cluster streaming family — NOT part of
-  * the driver contract. Replays q_stream_cluster_readmit's exact phase
-  * chain with wall-clock + job-count attribution per phase, so the
+  * the driver contract. Runs q_stream_cluster_readmit's own chain
+  * ([[ExtQueries.clusterReadmit]], under a probe tag and index) with
+  * wall-clock + job-count attribution per phase, so the
   * optimization work on the bench's #1 entry starts from numbers instead
   * of guesses (guide §1). Run:
   *
@@ -65,20 +62,22 @@ object PhaseProbe {
       }
     })
 
-    def phase[A](name: String)(body: => A): A = {
-      bySite.clear()
-      val j0 = jobs.get(); val s0 = jobSecs.sum(); val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[phase] $name%-22s $dt%7.2fs  jobs=${jobs.get() - j0}%3d  jobSecSum=${jobSecs.sum() - s0}%7.2f")
-      if (verbose) {
-        import scala.jdk.CollectionConverters._
-        bySite.asScala.toSeq.sortBy(-_._2._2).take(20).foreach {
-          case (site, (n, sec)) =>
-            System.err.println(f"[site]    $site%-44s n=$n%3d  sum=$sec%6.2fs")
+    val phase: Scratch.Phases = new Scratch.Phases {
+      def apply[A](name: String)(body: => A): A = {
+        bySite.clear()
+        val j0 = jobs.get(); val s0 = jobSecs.sum(); val t0 = System.nanoTime()
+        val r = body
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[phase] $name%-22s $dt%7.2fs  jobs=${jobs.get() - j0}%3d  jobSecSum=${jobSecs.sum() - s0}%7.2f")
+        if (verbose) {
+          import scala.jdk.CollectionConverters._
+          bySite.asScala.toSeq.sortBy(-_._2._2).take(20).foreach {
+            case (site, (n, sec)) =>
+              System.err.println(f"[site]    $site%-44s n=$n%3d  sum=$sec%6.2fs")
+          }
         }
+        r
       }
-      r
     }
 
     // one warm pass + one measured pass: the bench reports best-of-2, so
@@ -86,69 +85,11 @@ object PhaseProbe {
     (1 to 2).foreach { pass =>
       System.err.println(s"=== q_stream_cluster_readmit pass $pass ===")
       val tt0 = System.nanoTime()
-      runReadmit(s, dir, phase[Unit])
+      val members = ExtQueries.clusterReadmit(s, dir, "streamccre_probe",
+        "graft_idx_streamccre_probe", phase)
+      phase("final_read")(members.count())
       System.err.println(f"[phase] TOTAL                  ${(System.nanoTime() - tt0) / 1e9}%7.2fs")
     }
     s.stop()
-  }
-
-  /** qStreamClusterReadmit, phase-instrumented, byte-for-byte the same
-    * operator calls (compare ExtQueries.qStreamClusterReadmit). */
-  private def runReadmit(s: SparkSession, dir: String,
-                         phase: String => (=> Unit) => Unit): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Scratch.fresh(s, "streamccre_probe", dir)
-    val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val idx = "graft_idx_streamccre_probe"
-    val cc = s"$base/cc"
-    phase("build_corpus") {
-      DedupIndex.write(docs.filter(col("doc_id") % 5 =!= 0),
-        "text", "doc_id", "lang", idx, threshold = 0.5)
-    }
-    val inDir = s"$base/in"
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestDedup.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          base = idx, textCol = "text", idCol = "doc_id", blockCol = "lang",
-          threshold = 0.5, verdictPath = s"$base/verdicts",
-          checkpoint = s"$base/ckpt", updateIndex = true,
-          clusterBase = cc)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    phase("b0_write_in") {
-      docs.filter(col("doc_id") % 10 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(inDir)
-    }
-    phase("b0_stream")(runToCompletion())
-    phase("b1_write_in") {
-      docs.filter(col("doc_id") % 10 === 5).coalesce(1)
-        .write.mode("append").parquet(inDir)
-    }
-    phase("b1_stream")(runToCompletion())
-    var takedown: DataFrame = null
-    phase("takedown_select") {
-      takedown = ClusterIndex.current(s, cc)
-        .select(col("id").as("doc_id")).orderBy("doc_id").limit(40)
-        .localCheckpoint()
-    }
-    phase("delete_withdraw") {
-      graft.exec.Concurrent.run(
-        () => DedupIndex.delete(s, idx, takedown, "doc_id"),
-        () => ClusterIndex.withdraw(s, cc, takedown,
-          ClusterIndex.nextBatchId(s, cc)))
-    }
-    phase("compact_partial")(DedupIndex.compactPartial(s, idx))
-    phase("b2_write_in") {
-      docs.join(takedown.filter(col("doc_id") % 2 === 0),
-          Seq("doc_id"), "left_semi")
-        .coalesce(1).write.mode("append").parquet(inDir)
-    }
-    phase("b2_stream")(runToCompletion())
-    phase("cc_compact") { ClusterIndex.compact(s, cc): Unit }
-    phase("final_read") {
-      ClusterIndex.current(s, cc)
-        .select(col("id").as("doc_id"), col("cid")).count(): Unit
-    }
   }
 }

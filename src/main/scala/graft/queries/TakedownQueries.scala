@@ -76,7 +76,6 @@ object TakedownQueries {
   }
 
   def qTakedownE2e(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Scratch.fresh(s, "takedown", dir)
     val docs = Tables(s, dir, "documents")
       .select("doc_id", "lang", "text", "n_chars")
@@ -160,33 +159,30 @@ object TakedownQueries {
 
     // ---- 2. the takedown REQUEST STREAM: one foreachBatch withdraws
     // the ids from all six standing structures
-    val reqDir = s"$base/requests"
-    td.coalesce(1).write.mode("overwrite").parquet(reqDir)
-    val q = s.readStream.schema(td.schema).parquet(reqDir).writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (req: DataFrame, _: Long) =>
-        val ids = req.localCheckpoint() // request-driven: delta-sized
-        try {
-          // six independent withdrawals (one per structure), all reading
-          // the same checkpointed request set — overlapped (§2.6)
-          graft.exec.Concurrent.run(
-            () => phase("wd_dedup")(
-              DedupIndex.delete(s, dedupIdx, ids, "doc_id")),
-            () => phase("wd_cluster")(ClusterIndex.withdraw(s, cc, ids,
-              ClusterIndex.nextBatchId(s, cc))),
-            () => phase("wd_ann")(
-              SimilarityIndex.delete(s, annIdx, ids, "doc_id")),
-            () => phase("wd_chunk")(ChunkIndex.delete(s, chunkB, ids,
-              "doc_id", cutMod = CutMod, batchId = 1L)),
-            () => phase("wd_span")(SpanIndex.delete(s, spanIdx,
-              docs.join(ids, "doc_id"), "text", "doc_id", bid = 1L)),
-            () => phase("wd_pref")(PreferenceIndex.withdraw(s, prefB,
-              ids.select(col("doc_id").cast("string").as("item")), "item",
-              batchId = 1L)))
-        } finally graft.exec.Partitioning.unpersistCheckpoint(ids)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    Scratch.stream(s, base, td.schema) { (src, ckpt, _) =>
+      src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (req: DataFrame, _: Long) =>
+          val ids = req.localCheckpoint() // request-driven: delta-sized
+          try {
+            // six independent withdrawals (one per structure), all reading
+            // the same checkpointed request set — overlapped (§2.6)
+            graft.exec.Concurrent.run(
+              () => phase("wd_dedup")(
+                DedupIndex.delete(s, dedupIdx, ids, "doc_id")),
+              () => phase("wd_cluster")(ClusterIndex.withdraw(s, cc, ids,
+                ClusterIndex.nextBatchId(s, cc))),
+              () => phase("wd_ann")(
+                SimilarityIndex.delete(s, annIdx, ids, "doc_id")),
+              () => phase("wd_chunk")(ChunkIndex.delete(s, chunkB, ids,
+                "doc_id", cutMod = CutMod, batchId = 1L)),
+              () => phase("wd_span")(SpanIndex.delete(s, spanIdx,
+                docs.join(ids, "doc_id"), "text", "doc_id", bid = 1L)),
+              () => phase("wd_pref")(PreferenceIndex.withdraw(s, prefB,
+                ids.select(col("doc_id").cast("string").as("item")), "item",
+                batchId = 1L)))
+          } finally graft.exec.Partitioning.unpersistCheckpoint(ids)
+        }
+    }.feed(td)
 
     // ---- 3. compactions retire every structure's tombstones — the
     // re-admission precondition (delete wins until here); six

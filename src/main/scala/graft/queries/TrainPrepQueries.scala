@@ -35,14 +35,6 @@ import graft.ext.{Sharding, TextAnalysis}
   * [[graft.ext.Sharding]]) — never a single-task window. */
 object TrainPrepQueries {
 
-  /** Scratch location for standing-state queries (chunk index, curation
-    * lifecycle). Derived from (query tag, data dir) so invocations
-    * against different scale factors never clobber each other's standing
-    * state, and each query owns a distinct namespace — the sequential-
-    * runner assumption stays out of the query code. */
-  private def scratchBase(tag: String, dir: String): String =
-    Scratch.base(tag, dir)
-
   // ------------------------------------------------------ q_epoch_shuffle
 
   /** Deterministic epoch order + shard assignment over `documents`. The
@@ -579,10 +571,7 @@ object TrainPrepQueries {
     * The oracle is the DIRECT one-shot chunk manifest — a hash-match
     * proves incremental maintenance is semantically invisible. */
   def qChunkIdx(s: SparkSession, dir: String): DataFrame = {
-    val base = scratchBase("chunkidx", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Scratch.fresh(s, "chunkidx", dir)
     val docs = Tables(s, dir, "documents").select("doc_id", "text")
     graft.ext.ChunkIndex.append(s, base, docs.filter(col("doc_id") % 2 === 0),
       "text", "doc_id", seed = 42L, cutMod = CdcCutMod, batchId = 0L)
@@ -601,10 +590,7 @@ object TrainPrepQueries {
     * SURVIVORS — a hash-match proves the tombstone path equals a rebuild
     * without the victims. */
   def qChunkDelete(s: SparkSession, dir: String): DataFrame = {
-    val base = scratchBase("chunkdel", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Scratch.fresh(s, "chunkdel", dir)
     val docs = Tables(s, dir, "documents").select("doc_id", "text")
     graft.ext.ChunkIndex.append(s, base, docs, "text", "doc_id",
       seed = 42L, cutMod = CdcCutMod, batchId = 0L)
@@ -643,21 +629,14 @@ object TrainPrepQueries {
     * chunk splitting, and the compaction fold together equal a
     * from-scratch build without the victims. */
   def qStreamChunkLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Scratch.fresh(s, "streamchunk", dir)
     val docs = Tables(s, dir, "documents").select("doc_id", "text")
-    val inDir = s"$base/in"
-    def runToCompletion(baseBatch: Long): Unit = {
-      val q = graft.ext.ChunkIndex.run(
-          s.readStream.schema(docs.schema).parquet(inDir),
-          s"$base/idx", "text", "doc_id", seed = 42L, cutMod = CdcCutMod,
-          checkpoint = s"$base/ckpt", baseBatch = baseBatch)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val stream = Scratch.stream(s, base, docs.schema) { (src, ckpt, leg) =>
+      graft.ext.ChunkIndex.run(src, s"$base/idx", "text", "doc_id",
+        seed = 42L, cutMod = CdcCutMod, checkpoint = ckpt,
+        baseBatch = leg.toLong)
     }
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion(baseBatch = 0L)
+    stream.feed(docs.filter(col("doc_id") % 2 === 0))
     // mid-stream takedown at batch 1: between the stream's batch 0 and
     // the restart's batch (1 + baseBatch 1 = 2). Safe against replay
     // collision because AvailableNow commits batch 0 before the first
@@ -668,9 +647,7 @@ object TrainPrepQueries {
       docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 23 === 5)
         .select("doc_id"),
       "doc_id", cutMod = CdcCutMod, batchId = 1L)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion(baseBatch = 1L)
+    stream.feed(docs.filter(col("doc_id") % 2 =!= 0))
     graft.ext.ChunkIndex.compact(s, s"$base/idx", cutMod = CdcCutMod)
     graft.ext.ChunkIndex.readManifest(s, s"$base/idx")
   }
@@ -1198,16 +1175,13 @@ object TrainPrepQueries {
     * recomputes features from the even half and scores the odd half,
     * and a hash-match proves the streaming plumbing changes nothing. */
   def qCurationIncr(s: SparkSession, dir: String): DataFrame =
-    curationLifecycle(s, dir, scratchBase("curation", dir))
+    curationLifecycle(s, dir, Scratch.fresh(s, "curation", dir))
 
+  /** `base` must start empty ([[Scratch.fresh]]): stale deltas from an
+    * aborted prior invocation would otherwise join the feature aggregate. */
   private def curationLifecycle(s: SparkSession, dir: String,
                                 base: String): DataFrame = {
     import graft.streaming.IngestCuration
-    // deterministic slate: stale deltas from an aborted prior invocation
-    // would otherwise join the feature aggregate
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
     IngestCuration.processBatch(docs.filter(col("doc_id") % 2 === 0),
       batchId = 0L, featPath = s"$base/feat", textCol = "text",
@@ -1310,34 +1284,22 @@ object TrainPrepQueries {
     * the batch formulation ("same plans under streaming", certified at
     * the driver gate rather than only in StreamSpec). */
   def qStreamLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val base = scratchBase("streamlife", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Scratch.fresh(s, "streamlife", dir)
     val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val inDir = s"$base/in"
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("text", StringType)))
-    def runToCompletion(): Unit = {
-      val q = graft.streaming.IngestCuration.run(
-          s.readStream.schema(docsSchema).parquet(inDir),
-          featPath = s"$base/feat", textCol = "text", idCol = "doc_id",
-          targetExpr = "lang = 'en'", minRatio = 4000L,
-          verdictPath = s"$base/verdicts", checkpoint = s"$base/ckpt",
-          updateFeatures = true)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val stream = Scratch.stream(s, base, docsSchema) { (src, ckpt, _) =>
+      graft.streaming.IngestCuration.run(src,
+        featPath = s"$base/feat", textCol = "text", idCol = "doc_id",
+        targetExpr = "lang = 'en'", minRatio = 4000L,
+        verdictPath = s"$base/verdicts", checkpoint = ckpt,
+        updateFeatures = true)
     }
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion()
+    stream.feed(docs.filter(col("doc_id") % 2 === 0))
     // late arrivals: a NEW file in the watched dir, same checkpoint
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion()
+    stream.feed(docs.filter(col("doc_id") % 2 =!= 0))
     s.read.parquet(s"$base/verdicts").filter(col("batch_id") === 1)
       .select("doc_id", "n_tokens", "score", "avg_ratio", "keep", "reason")
   }
@@ -1352,7 +1314,7 @@ object TrainPrepQueries {
   def qCurationStats(s: SparkSession, dir: String): DataFrame = {
     // own scratch base: this query drives its own lifecycle, so a
     // concurrently-running q_curation_incr can't clobber its state
-    val base = scratchBase("curationstats", dir)
+    val base = Scratch.fresh(s, "curationstats", dir)
     curationLifecycle(s, dir, base).count() // verdicts unused here
     graft.streaming.IngestCuration.readFeatures(s, s"$base/feat")
   }
@@ -3228,30 +3190,20 @@ object TrainPrepQueries {
     * 100 TB the matrix stays K²-bounded regardless of judgment volume —
     * ingestion cost is one pre-aggregated delta per micro-batch. */
   def qStreamPrefLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Scratch.fresh(s, "streampref", dir)
     val idx = s"$base/idx"
     val outs = prefOutcomes(s, dir).localCheckpoint()
-    val inDir = s"$base/in"
-    def runToCompletion(baseBatch: Long): Unit = {
-      val q = graft.ext.PreferenceIndex.run(
-          s.readStream.schema(outs.schema).parquet(inDir), idx,
-          "winner", "loser", checkpoint = s"$base/ckpt",
-          baseBatch = baseBatch)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val stream = Scratch.stream(s, base, outs.schema) { (src, ckpt, leg) =>
+      graft.ext.PreferenceIndex.run(src, idx, "winner", "loser",
+        checkpoint = ckpt, baseBatch = leg.toLong)
     }
-    outs.filter(col("user_id") % 2 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runToCompletion(baseBatch = 0L)
+    stream.feed(outs.filter(col("user_id") % 2 === 0))
     // mid-stream withdrawal between the two checkpointed legs; tombstones
     // live in their own table, so no replay can collide with this id
     graft.ext.PreferenceIndex.withdraw(s, idx,
       s.createDataFrame(Seq(Tuple1("error"))).toDF("item"), "item",
       batchId = 1L)
-    outs.filter(col("user_id") % 2 =!= 0).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runToCompletion(baseBatch = 1L)
+    stream.feed(outs.filter(col("user_id") % 2 =!= 0))
     graft.ext.PreferenceIndex.compact(s, idx)
     val rated = graft.ext.Preference.btRatings(
         graft.ext.PreferenceIndex.matrix(s, idx), iters = 3)
@@ -3304,37 +3256,30 @@ object TrainPrepQueries {
     * re-entry compose to a from-scratch leaderboard over exactly the
     * surviving judgments. */
   def qStreamPrefReadmit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Scratch.fresh(s, "streamprefre", dir)
     val idx = s"$base/idx"
     val js = prefOutcomesTies(s, dir)
       .select(col("user_id"), col("winner").as("x"), col("loser").as("y"),
         when(col("decided"), lit("a")).otherwise(lit("tie")).as("oc"))
       .localCheckpoint()
-    val inDir = s"$base/in"
-    def runLeg(baseBatch: Long): Unit = {
-      val q = graft.ext.PreferenceIndex.runJudgments(
-          s.readStream.schema(js.schema).parquet(inDir), idx,
-          "x", "y", "oc", checkpoint = s"$base/ckpt", baseBatch = baseBatch)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    // legs 0 and 1 resume at baseBatch = leg; the re-admission leg
+    // resumes above the compaction's folded batch
+    var folded = 0L
+    val stream = Scratch.stream(s, base, js.schema) { (src, ckpt, leg) =>
+      graft.ext.PreferenceIndex.runJudgments(src, idx, "x", "y", "oc",
+        checkpoint = ckpt,
+        baseBatch = if (leg < 2) leg.toLong else folded + 1L)
     }
-    js.filter(col("user_id") % 2 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(inDir)
-    runLeg(baseBatch = 0L)
+    stream.feed(js.filter(col("user_id") % 2 === 0))
     graft.ext.PreferenceIndex.withdraw(s, idx,
       s.createDataFrame(Seq(Tuple1("error"))).toDF("item"), "item",
       batchId = 1L)
-    js.filter(col("user_id") % 2 =!= 0).coalesce(1)
-      .write.mode("append").parquet(inDir)
-    runLeg(baseBatch = 1L)
-    val c = graft.ext.PreferenceIndex.compact(s, idx)
+    stream.feed(js.filter(col("user_id") % 2 =!= 0))
+    folded = graft.ext.PreferenceIndex.compact(s, idx)
     // tombstone retired — the withdrawn item's odd-leg judgments
     // re-enter through the same checkpointed stream, above the fold
-    js.filter(col("user_id") % 2 =!= 0 &&
-        (col("x") === "error" || col("y") === "error"))
-      .coalesce(1).write.mode("append").parquet(inDir)
-    runLeg(baseBatch = c + 1L)
+    stream.feed(js.filter(col("user_id") % 2 =!= 0 &&
+      (col("x") === "error" || col("y") === "error")))
     val rated = graft.ext.Preference.rkRatings(
         graft.ext.PreferenceIndex.matrix(s, idx),
         graft.ext.PreferenceIndex.ties(s, idx), iters = 3)

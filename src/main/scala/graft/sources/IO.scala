@@ -20,11 +20,6 @@ import graft.exec.Wrangle
   *    graft.exec.Wrangle, i.e. MERGE INTO expressed as joins. */
 object IO {
 
-  /** Schema-enforced parquet read: fails fast on drift instead of
-    * silently inferring. */
-  def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
   /** Schema-enforced newline-delimited JSON read (semi-structured intake —
     * the reference's native input shape, SURVEY §1.1). PERMISSIVE mode
     * plus a corrupt-record column: bad lines land in `_corrupt` instead of
@@ -128,16 +123,6 @@ object IO {
     * `incoming` whose key is absent from `existing`. */
   def insertNew(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
     Wrangle.newRecords(incoming, existing, keys)
-
-  /** Streaming parquet sink with checkpointing — the unbounded twin of
-    * [[writePartitioned]]. Caller starts/stops the returned query. */
-  def writeStreamPartitioned(df: DataFrame, path: String, checkpoint: String,
-                             partitionCols: Seq[String]) =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCols: _*)
 
   /** Streaming upsert sink: `foreachBatch` applies the MERGE-as-joins
     * [[upsert]] per micro-batch, so a stream maintains a keyed dimension —

@@ -1514,6 +1514,18 @@ class IOSpec extends AnyFunSuite {
         corpus.limit(1).select(col("doc_id")), "doc_id")
       assert(DedupIndex.pendingTombstones(spark, base) == 1L)
       assert(DedupIndex.needsCompact(spark, base))
+      // a partial fold retires the tombstone but carries every append
+      // file (pref/band whole, clean exact/sh files by link), so the
+      // append mass survives it and the ratio trigger keeps firing
+      DedupIndex.compactPartial(spark, base)
+      assert(DedupIndex.pendingTombstones(spark, base) == 0L)
+      val partialN = spark.table(s"${base}_exact").count()
+      assert(DedupIndex.appendedSinceSnapshot(spark, base)
+        .contains((deltaN, partialN)),
+        "a partial fold must keep the append mass it carried")
+      assert(DedupIndex.needsCompact(spark, base,
+        appendedRatio = deltaN.toDouble / corpusN / 2),
+        "the ratio trigger must still fire after a partial fold")
       // compaction re-bases: pressure back to zero, snapshot count folded
       DedupIndex.compact(spark, base)
       assert(DedupIndex.pendingTombstones(spark, base) == 0L)
