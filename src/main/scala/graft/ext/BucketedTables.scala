@@ -116,10 +116,7 @@ private[graft] object BucketedTables {
   /** The ACTIVE tombstone ids of a standing index: the rows of `tombs`
     * stamped with the live snapshot epoch of `anchor` — shared by both
     * indexes' probe masks and compaction folds. None = no tombstone
-    * table = nothing deleted. Rows from a pre-epoch tombstone table (no
-    * `ep` column) are treated as ALWAYS active: over-masking is the safe
-    * direction for a takedown, and [[stampTombs]] rewrites such a table
-    * on the next delete.
+    * table = nothing deleted.
     *
     * READ ORDER is the contract this helper holds: the epoch is read
     * FIRST, then the tombstones, and the caller resolves the corpus scan
@@ -134,50 +131,33 @@ private[graft] object BucketedTables {
     val epoch = snapshotEpoch(spark, anchor)
     if (!spark.catalog.tableExists(tombs)) None
     else {
-      val t = spark.table(tombs)
-      Some((if (t.columns.contains("ep")) t.filter(col("ep") === lit(epoch))
-            else t).select(col("id")))
+      Some(spark.table(tombs).filter(col("ep") === lit(epoch))
+        .select(col("id")))
     }
   }
 
   /** Mark `ids(idCol)` deleted against the live snapshot of `anchor`:
-    * read its epoch, upgrade a pre-epoch tombstone table, then append
-    * one epoch-stamped row per distinct id to `tombs` in ONE table write
-    * (no partial-deletion window). Tombstones are IDEMPOTENT, so a
-    * failed delete is safely re-issued. The caller holds the writer
-    * lease — a delete racing a compaction swap would stamp an epoch the
-    * swap just retired — and has healed both tables. */
+    * read its epoch, then append one epoch-stamped row per distinct id
+    * to `tombs` in ONE table write (no partial-deletion window).
+    * Tombstones are IDEMPOTENT, so a failed delete is safely retried.
+    * The caller holds the writer lease — a delete racing a compaction
+    * swap would stamp an epoch the swap just retired — and has healed
+    * both tables. */
   def stampTombs(spark: SparkSession, anchor: String, tombs: String,
                  ids: DataFrame, idCol: String): Unit = {
     val epoch = snapshotEpoch(spark, anchor)
-    upgradeLegacyTombs(spark, tombs, epoch)
     writeBucketed(
       ids.select(col(idCol).as("id")).distinct().withColumn("ep", lit(epoch)),
       tombs, Seq("id"), buckets = 4, SaveMode.Append)
   }
 
-  /** Anti-join `df` against the active tombstones (no-op when there is
-    * no tombstone table, or when `df` cannot be masked by id — the
-    * legacy exact schema). Broadcast by contract: the tombstone table
-    * holds deletions since the last compaction, never corpus rows. */
+  /** Anti-join `df` against the active tombstones on its `id` column
+    * (no-op when there is no tombstone table; a frame without `id` fails
+    * analysis rather than pass through unmasked). Broadcast by contract:
+    * the tombstone table holds deletions since the last compaction,
+    * never corpus rows. */
   def maskByTombs(df: DataFrame, tombIds: Option[DataFrame]): DataFrame =
-    tombIds match {
-      case Some(t) if df.columns.contains("id") =>
-        df.join(broadcast(t), Seq("id"), "left_anti")
-      case _ => df
-    }
-
-  /** Rewrite a pre-epoch tombstone table (no `ep` column) stamping
-    * every row with `epoch` — they were active, they stay active. A
-    * crash-safe scratch-then-rename overwrite; no-op on a current
-    * table. */
-  private def upgradeLegacyTombs(spark: SparkSession, tombs: String,
-                                 epoch: String): Unit =
-    if (spark.catalog.tableExists(tombs) &&
-        !spark.table(tombs).columns.contains("ep"))
-      writeBucketed(
-        spark.table(tombs).withColumn("ep", lit(epoch)),
-        tombs, Seq("id"), bucketsOf(spark, tombs), SaveMode.Overwrite)
+    tombIds.fold(df)(t => df.join(broadcast(t), Seq("id"), "left_anti"))
 
   /** Truncate the tombstone table via a crash-safe overwrite — the GC
     * both indexes run after a compaction's [[commitSnapshots]]: the
@@ -842,11 +822,11 @@ private[graft] object BucketedTables {
         // column) must not read as CLEAN while tombstones are pending:
         // the partial fold would skip it as untouched and then truncate
         // the tombstones, physically un-deleting the masked rows. Fail
-        // loudly; the full compact() retires legacy-schema tombstones.
+        // loudly.
         require(t.isEmpty,
           s"$table: tombstones pending but the table has no id column " +
             "(legacy schema) — partial compaction cannot locate deleted " +
-            "rows; run the full compact() instead")
+            "rows; rebuild the index (write)")
         Set.empty
       case Some(t) =>
         import org.apache.spark.sql.functions.input_file_name
@@ -918,8 +898,8 @@ private[graft] object BucketedTables {
   }
 
   /** Delete snapshot dirs not in `keep` — every publish path prunes, so
-    * repeated rebuilds/compactions/migrations cannot leak one full
-    * snapshot copy per call into the table root. */
+    * repeated rebuilds/compactions cannot leak one full snapshot copy
+    * per call into the table root. */
   def pruneVersions(spark: SparkSession, table: String,
                     keep: Set[String]): Unit =
     pruneVersionsAt(spark, versionRootOf(spark, table), keep)

@@ -149,9 +149,9 @@ object ClusterIndex {
 
   /** Fold one batch's verified duplicate edges into the standing
     * cluster state. `edges` carries (id_a, id_b) pairs (either
-    * orientation; NULL endpoints — legacy index rows with no holder
-    * id — are dropped); `ids` carries the batch's document ids (every
-    * ingested document becomes a node even when it matched nothing).
+    * orientation; a caller's NULL endpoints are dropped); `ids` carries
+    * the batch's document ids (every ingested document becomes a node
+    * even when it matched nothing).
     *
     * Cost shape: one union-find task over the batch's edges, the
     * touched ids and their `id -> cid` links — delta-sized, not
@@ -272,14 +272,16 @@ object ClusterIndex {
   def withdraw(spark: SparkSession, base: String, ids: DataFrame,
                batchId: Long): Unit = {
     heal(spark, base)
-    // A pre-edge-persistence index has memberships but no edge state —
-    // relabeling against a phantom-empty edge set would silently split
-    // every touched cluster into singletons. Refuse loudly instead.
+    // An index folded with trackEdges = false has memberships but no
+    // edge state — relabeling against a phantom-empty edge set would
+    // silently split every touched cluster into singletons. Refuse
+    // loudly instead.
     require(!DeltaChains.exists(spark, base, "members")
         || DeltaChains.exists(spark, base, "edges"),
-      s"$base: cluster index predates edge persistence — withdraw would " +
-        "re-label against an empty edge set and split every touched " +
-        "cluster; rebuild the index (re-fold its batches) first")
+      s"$base: cluster index was folded with trackEdges = false and holds " +
+        "no edge state — withdraw would re-label against an empty edge " +
+        "set and split every touched cluster; rebuild the index by " +
+        "re-folding its batches with trackEdges = true first")
     // the two chains are independent standing state (members vs edges):
     // their latest-wins reads overlap (§2.6). The edge read is wasted
     // only when every requested id is untracked (the early return below)

@@ -75,9 +75,11 @@ object DedupIndex {
     * whole) — so [[needsCompact]] can weigh accumulated append mass
     * against the snapshot without scanning anything. Same crash
     * contract as the ANN occupancy sidecar: a crash between an append's
-    * row commit and the sidecar fold leaves it stale-low; missing on a
-    * legacy index (appends then skip the fold and
-    * [[appendedSinceSnapshot]] reports unknown). */
+    * row commit and the sidecar fold leaves it stale-low; a crash between
+    * a build's or compaction's snapshot commit and its sidecar write
+    * leaves it missing (appends then skip the fold and
+    * [[appendedSinceSnapshot]] reports unknown until the next
+    * [[compact]]). */
   private val AppendedSidecar = "_appended"
 
   /** The per-document index artifacts for one frame: id, block, text hash,
@@ -286,11 +288,7 @@ object DedupIndex {
     * (unmasking would resurrect the old content too), and the next
     * [[compact]] removes old and re-appended rows alike. Re-ingest a
     * deleted document AFTER a compact (or a rebuild) has retired its
-    * tombstone.
-    *
-    * Requires a current-era index (exact table stores holder ids): a
-    * legacy index must be rebuilt before per-document deletion — its
-    * exact rows cannot be attributed to holders. */
+    * tombstone. */
   def delete(spark: SparkSession, base: String, ids: DataFrame,
              idCol: String): Unit =
    // leased: a delete racing a compaction swap would stamp an epoch the
@@ -300,19 +298,6 @@ object DedupIndex {
     // its live snapshot identity
     BucketedTables.heal(spark,
       Seq(exactTable(base), tombsTable(base)), refresh = false)
-    val exact = spark.table(exactTable(base))
-    require(exact.columns.contains("id"),
-      s"$base: the exact table predates holder-id storage — rebuild the " +
-        "index (write) before deleting documents")
-    // migrate() backfills legacy exact rows with NULL ids (their holder
-    // is unrecoverable); those rows cannot be retired per-document, so
-    // deletion on such an index would be silently incomplete — refuse.
-    // Parquet null-count stats prune this probe to metadata when the
-    // index has no legacy rows.
-    require(exact.filter(col("id").isNull).limit(1).count() == 0,
-      s"$base: the exact table carries legacy rows with no holder id — " +
-        "run backfillHolderIds (with the original corpus) or rebuild " +
-        "the index (write) before deleting documents")
     BucketedTables.stampTombs(spark, exactTable(base), tombsTable(base),
       ids, idCol)
    }
@@ -466,9 +451,10 @@ object DedupIndex {
     choice
    }
 
-  /** Fold an append's doc count into the [[AppendedSidecar]]. Missing
-    * sidecar (legacy index) stays missing — folding into an unknown
-    * base would record a lie; the next [[compact]] establishes it. */
+  /** Fold an append's doc count into the [[AppendedSidecar]]. A sidecar
+    * missing after a crash between a snapshot commit and its sidecar
+    * write stays missing — folding into an unknown base would record a
+    * lie; the next [[compact]] establishes it. */
   private def foldAppended(spark: SparkSession, base: String,
                            nDocs: Long): Unit =
     readAppended(spark, base).foreach { case (appended, snap) =>
@@ -488,8 +474,9 @@ object DedupIndex {
     }
 
   /** Docs appended since the last full [[compact]], with the snapshot's
-    * doc count — None on a legacy index that predates the sidecar (run a
-    * [[compact]] once to establish it). */
+    * doc count — None when a crash between a snapshot commit and its
+    * sidecar write left the sidecar missing (run a [[compact]] once to
+    * establish it). */
   def appendedSinceSnapshot(spark: SparkSession,
                             base: String): Option[(Long, Long)] = {
     healInterrupted(spark, base)
@@ -558,8 +545,9 @@ object DedupIndex {
     * fold is what physically applies a takedown) or when the appended
     * doc mass since the last full [[compact]] has reached
     * `appendedRatio` of the snapshot (append files accumulate per batch
-    * — the full fold restores one-file-per-bucket scans). An unknown append counter (legacy
-    * index, pre-sidecar) decides on tombstones alone. Deliberately NOT
+    * — the full fold restores one-file-per-bucket scans). An unknown
+    * append counter (the sidecar lost to a crash after a snapshot
+    * commit) decides on tombstones alone. Deliberately NOT
     * triggered by [[stats]]' `files` column: a fresh parallel build
     * legitimately writes many files per bucket, and deciding on file
     * counts would cry wolf right after every rebuild — the per-bucket
@@ -618,11 +606,10 @@ object DedupIndex {
     * one row per (index holder `id_a`, delta document `id_b`, rule ∈
     * 'exact' | 'near') — the same probes as [[dedupIncremental]] with
     * the matched partner's identity kept, feeding incremental
-    * connected components ([[ClusterIndex.fold]]). `id_a` is NULL for
-    * a legacy exact row with no stored holder id (the verdict is
-    * unaffected; cluster folding drops such edges). A pair matched by
-    * both rules appears twice with different `rule` tags. */
-  /** `precomputedArtifacts` (optional): the batch's [[batchArtifacts]]
+    * connected components ([[ClusterIndex.fold]]). A pair matched by
+    * both rules appears twice with different `rule` tags.
+    *
+    * `precomputedArtifacts` (optional): the batch's [[batchArtifacts]]
     * frame, typically checkpointed by the caller so the probe and the
     * later append share ONE shingle pass — content-identical to the
     * internal derivation by construction. */
@@ -639,57 +626,36 @@ object DedupIndex {
     // (BucketedTables.liveTombIds' read-order contract).
     val tombIds = BucketedTables.liveTombIds(spark, exactTable(base),
       tombsTable(base))
-    // Legacy (pre-bid) indexes read as all-bulk: no stamp, no exclusion.
-    def tbl(name: String) = {
-      val raw = spark.table(name)
-      val live =
-        if (raw.columns.contains("bid"))
-          raw.filter(col("bid") =!= lit(excludeBatchId)).drop("bid")
-        else raw
-      BucketedTables.maskByTombs(live, tombIds)
-    }
+    def tbl(name: String) = BucketedTables.maskByTombs(
+      spark.table(name).filter(col("bid") =!= lit(excludeBatchId)).drop("bid"),
+      tombIds)
     val d = precomputedArtifacts
       .getOrElse(artifacts(delta, textCol, idCol, blockCol, shingleN))
       .withColumn("bid", lit(BulkBid)) // probe-side stamp is never stored
       .repartition(col("id")) // one artifact pass shared by all three rules
     // Exact rule: equi-join on the 64-bit text hash (the bucket key),
     // settled by the residual full-text comparison. The index side's
-    // holder id is KEPT as the edge partner (`id_a`) — NULL on a legacy
-    // exact table that predates holder-id storage (the verdict needs
-    // only `id_b`; cluster folding drops NULL-partner edges).
-    val exactIdx = {
-      val raw = tbl(exactTable(base))
-      if (raw.columns.contains("id")) raw.withColumnRenamed("id", "id_a")
-      else raw.withColumn("id_a", lit(null)
-        .cast(spark.table(shTable(base)).schema("id").dataType))
-    }
+    // holder id is KEPT as the edge partner (`id_a`).
     val exactEdges = d.select(col("id").as("id_b"), col("h"),
         col("t").as("__dt"))
-      .join(exactIdx, Seq("h"))
+      .join(tbl(exactTable(base)).withColumnRenamed("id", "id_a"), Seq("h"))
       .filter(col("t") === col("__dt"))
       .select(col("id_a"), col("id_b")).distinct()
     // Near rule: candidates from the chosen generator, verified with
     // exact Jaccard on the stored shingle arrays — both generators are
     // single-key equi-joins against their bucketed table. The prefix
     // generator prunes each match with the PPJoin positional + length
-    // bounds when the stored table carries (pos, sz) — a legacy index
-    // built before those columns existed still probes correctly, just
-    // without the pruning (run [[migrate]] to backfill).
+    // bounds on the stored (pos, sz).
     val cand = candidates match {
       case "prefix" =>
-        val probe = prefixRows(d, threshold)
+        prefixRows(d, threshold)
           .select(col("bk"), col("id").as("id_b"),
             col("pos").as("__pb"), col("sz").as("__szb"))
-        val idx = tbl(prefTable(base))
-        val joined =
-          if (idx.columns.contains("pos") && idx.columns.contains("sz"))
-            probe.join(idx.select(col("bk"), col("id").as("id_a"),
-                col("pos").as("__pa"), col("sz").as("__sza")), Seq("bk"))
-              .filter(Dedup.ppFilter(
-                col("__sza"), col("__pa"), col("__szb"), col("__pb"), threshold))
-          else
-            probe.join(idx.select(col("bk"), col("id").as("id_a")), Seq("bk"))
-        joined.select(col("id_a"), col("id_b")).distinct()
+          .join(tbl(prefTable(base)).select(col("bk"), col("id").as("id_a"),
+            col("pos").as("__pa"), col("sz").as("__sza")), Seq("bk"))
+          .filter(Dedup.ppFilter(
+            col("__sza"), col("__pa"), col("__szb"), col("__pb"), threshold))
+          .select(col("id_a"), col("id_b")).distinct()
       case "lsh" =>
         bandRows(d).withColumnRenamed("id", "id_b")
           .join(tbl(bandTable(base)).withColumnRenamed("id", "id_a"), Seq("bk"))
@@ -712,141 +678,6 @@ object DedupIndex {
       .unionByName(nearEdges.withColumn("rule", lit("near")))
   }
 
-  /** Upgrade a legacy standing index IN PLACE to the current schema —
-    * probes read any era (missing columns just disable their feature),
-    * but an APPEND needs the catalog schema to match, so mixed-era
-    * ingestion migrates first:
-    *  - tables written before batch-id stamping gain `bid` = [[BulkBid]]
-    *    (their rows judge every probe, exactly as before);
-    *  - a pref table written before the PPJoin pruning payload is
-    *    rebuilt from the sh table, which holds every document's full
-    *    shingle array — positions and sizes are derived, not guessed.
-    * One-time rewrite per table, same bucket spec; a no-op on a
-    * current-schema index. Each rewrite commits scratch-then-rename
-    * (see [[BucketedTables.writeBucketed]]): the new snapshot is fully written before
-    * any catalog op, and a crash between the two catalog ops is healed
-    * on the next index call by [[healInterrupted]].
-    *
-    * `rebuildPref = true` rebuilds the pref table from the sh table even
-    * when its schema is current — run once when upgrading an index whose
-    * prefixes were cut by an engine version with a DIFFERENT prefix
-    * length for the same threshold (e.g. the pre-FP-guard formula could
-    * cut one element short): schema alone cannot reveal which formula
-    * cut the stored prefixes, and a too-short stored prefix silently
-    * weakens recall. */
-  def migrate(spark: SparkSession, base: String, threshold: Double,
-              rebuildPref: Boolean = false): Unit =
-    BucketedTables.withWriterLease(spark, exactTable(base), "migration") {
-      migrateImpl(spark, base, threshold, rebuildPref)
-    }
-
-  /** [[migrate]] body, unleased — [[appendKept]] calls it while already
-    * holding the writer lease (the lease is not reentrant). */
-  private def migrateImpl(spark: SparkSession, base: String,
-                          threshold: Double,
-                          rebuildPref: Boolean = false): Unit = {
-    healInterrupted(spark, base)
-    def rewrite(table: String, keys: Seq[String], df: DataFrame): Unit = {
-      val snap = df.localCheckpoint()
-      try BucketedTables.writeBucketed(snap, table, keys,
-        BucketedTables.bucketsOf(spark, table), SaveMode.Overwrite)
-      finally graft.exec.Partitioning.unpersistCheckpoint(snap)
-    }
-    Seq(shTable(base) -> Seq("id"), bandTable(base) -> Seq("bk"))
-      .foreach { case (table, keys) =>
-        val t = spark.table(table)
-        if (!t.columns.contains("bid"))
-          rewrite(table, keys, t.withColumn("bid", lit(BulkBid)))
-      }
-    // Legacy exact rows predate holder-id storage and their holder is
-    // unrecoverable (no id↔text mapping is stored anywhere): backfill
-    // NULL — probes work unchanged (the probe drops the id column), and
-    // [[delete]] refuses per-document deletion while any NULL-id row
-    // remains (rebuild to regain it).
-    val exact = spark.table(exactTable(base))
-    if (!exact.columns.contains("bid") || !exact.columns.contains("id")) {
-      val idType = spark.table(shTable(base)).schema("id").dataType
-      val withBid = if (exact.columns.contains("bid")) exact
-                    else exact.withColumn("bid", lit(BulkBid))
-      val withId = if (withBid.columns.contains("id")) withBid
-                   else withBid.withColumn("id", lit(null).cast(idType))
-      rewrite(exactTable(base), Seq("h", "t"), withId)
-    }
-    val pref = spark.table(prefTable(base))
-    if (rebuildPref ||
-        !pref.columns.contains("pos") || !pref.columns.contains("sz") ||
-        !pref.columns.contains("bid")) {
-      val sh = spark.table(shTable(base)) // already bid-stamped above
-      rewrite(prefTable(base), Seq("bk"), prefixRows(sh, threshold))
-    }
-  }
-
-  /** ONE-TIME BACKFILL retiring the legacy-exact class: recover each
-    * legacy exact row's holder ids from the ORIGINAL CORPUS and rewrite
-    * the exact table with them, after which per-document [[delete]]
-    * and partial compaction apply normally — the permanent "full fold
-    * forever" penalty for pre-holder-id indexes retires with it.
-    *
-    * Why the corpus must be supplied: the index never stored an
-    * id↔text mapping for legacy rows ([[migrate]] can only backfill
-    * NULL), but the exact table DOES store each row's full text — so
-    * joining it against the corpus's recomputed (text-hash, text, id)
-    * triples recovers every holder, one row per holding document,
-    * exactly the current write path's shape. The corpus is the data
-    * the index indexes; the operator has it by definition.
-    *
-    * A legacy text the supplied corpus does not cover would stay
-    * NULL-id — silently un-deletable — so the backfill REFUSES loudly
-    * instead (supply the corpus the index was built over). Extra
-    * corpus documents the index never held are ignored: this is a
-    * repair, not an ingest. Runs under the writer lease; the rewrite
-    * commits scratch-then-rename like every snapshot replacement and
-    * leaves probes bit-identical (probes don't read `id`). */
-  def backfillHolderIds(spark: SparkSession, base: String,
-                        corpus: DataFrame, textCol: String, idCol: String,
-                        threshold: Double): Unit =
-   BucketedTables.withWriterLease(spark, exactTable(base), "migration") {
-    migrateImpl(spark, base, threshold) // ensure the id column exists
-    // The rewrite below commits a NEW snapshot epoch, which would turn
-    // any pending tombstone inert — resurrecting rows the backfill
-    // deliberately preserves. delete() refuses on an index with
-    // legacy rows, so this state should not arise; refuse rather than
-    // trust that (run compact() to retire the tombstones first).
-    require(BucketedTables.liveTombIds(spark, exactTable(base),
-        tombsTable(base)).forall(_.isEmpty),
-      s"$base: tombstones pending — the backfill's snapshot commit " +
-        "would retire them WITHOUT removing the rows (a resurrect); " +
-        "run compact() first")
-    val exact = spark.table(exactTable(base))
-    val legacy = exact.filter(col("id").isNull).localCheckpoint()
-    try if (!legacy.isEmpty) {
-      val idType = exact.schema("id").dataType
-      val fresh = corpus.select(xxhash64(col(textCol)).as("h"),
-        col(textCol).as("t"), col(idCol).cast(idType).as("id"))
-      val orphans = legacy.select("h", "t").distinct()
-        .join(fresh, Seq("h", "t"), "left_anti").count()
-      require(orphans == 0L,
-        s"$base: $orphans legacy exact texts have no holder in the " +
-          "supplied corpus — backfilling them would leave NULL-id rows " +
-          "that stay silently un-deletable; supply the corpus the index " +
-          "was built over")
-      val recovered = legacy.drop("id").join(fresh, Seq("h", "t"))
-        .select(col("h"), col("t"), col("bid"), col("id")).distinct()
-      val snap = exact.filter(col("id").isNotNull)
-        .select(col("h"), col("t"), col("bid"), col("id"))
-        .unionByName(recovered).localCheckpoint()
-      try BucketedTables.writeBucketed(snap, exactTable(base), Seq("h", "t"),
-        BucketedTables.bucketsOf(spark, exactTable(base)), SaveMode.Overwrite)
-      finally graft.exec.Partitioning.unpersistCheckpoint(snap)
-    } finally graft.exec.Partitioning.unpersistCheckpoint(legacy)
-   }
-
-  /** Fold a judged batch's KEPT rows into the index (bucket-preserving
-    * appends) — the state transition of continuous ingestion. The bucket
-    * count is read from the existing table's spec: an append with a
-    * different count would be rejected by the catalog. A legacy-schema
-    * index is migrated first (appends resolve columns by name against
-    * the catalog schema, so a missing column would reject the append). */
   /** The index's live snapshot epoch (the exact table's snapshot-dir
     * name), healed first so a crash adoption cannot later read as a
     * foreign swap. Capture this BEFORE probing ([[matchEdges]]) and pass
@@ -860,7 +691,12 @@ object DedupIndex {
     BucketedTables.snapshotEpoch(spark, exactTable(base))
   }
 
-  /** `healRefresh = false` keeps the crash-adopt half of the entry heal
+  /** Fold a judged batch's KEPT rows into the index (bucket-preserving
+    * appends) — the state transition of continuous ingestion. The bucket
+    * count is read from the existing table's spec: an append with a
+    * different count would be rejected by the catalog.
+    *
+    * `healRefresh = false` keeps the crash-adopt half of the entry heal
     * but skips the per-table relation-cache refresh — for callers that
     * ALREADY refreshed this batch (streaming ingestion probes the index
     * with [[matchEdges]], which heals with refresh, right before
@@ -891,10 +727,6 @@ object DedupIndex {
           "compacted or rebuilt this index mid-batch; re-probe " +
           "(matchEdges) against the live snapshot before appending")
     }
-    val exactCols = spark.table(exactTable(base)).columns
-    if (!exactCols.contains("bid") || !exactCols.contains("id") ||
-        !spark.table(prefTable(base)).columns.contains("pos"))
-      migrateImpl(spark, base, threshold)
     val buckets = BucketedTables.bucketsOf(spark, exactTable(base))
     val kept = batch.join(
       verdicts.filter(col("keep")).select(col(idCol)), Seq(idCol), "left_semi")

@@ -204,7 +204,6 @@ object SimilarityIndex {
     val spark = corpus.sparkSession
     // refresh = false: this is an overwrite — nothing reads the old state
     BucketedTables.heal(spark, Seq(cellsTable(base)), refresh = false)
-    dropLegacyCentroids(spark, base)
     val (cids, cents) = Similarity.kmeansCentroids(
       corpus, vecCol, idCol, k, iters)
     val books =
@@ -251,14 +250,6 @@ object SimilarityIndex {
     BucketedTables.addSidecar(spark, cellsTable(base), OccupancySidecar,
       encodeCellStats(counts))
    }
-
-  /** An index built before the sidecar design stored its quantizer in a
-    * separate `<base>_centroids` table — superseded (and its separate
-    * commit was the torn-pairing hazard the sidecar removed). Rebuilds
-    * drop the stale entry, its crash marker, and its snapshot dirs so
-    * legacy state cannot linger. */
-  private def dropLegacyCentroids(spark: SparkSession, base: String): Unit =
-    BucketedTables.dropTable(spark, s"${base}_centroids")
 
   /** Storage codec for assigned (cell, id, v) rows. The stored SCHEMA is
     * the codec marker — `qb` present means sq8, `pqc` means pq — so
@@ -416,9 +407,10 @@ object SimilarityIndex {
     * compaction's promise is cost bounded by the rewrite set, and a
     * full per-cell recount would break it — occupancy' = occupancy −
     * (rewritten files' per-cell counts before) + (rewritten subset's
-    * counts after), both deletion-bounded. A missing sidecar (legacy
-    * index) stays missing ([[needsRetrain]] self-heals with one
-    * establishing scan). Verdict-equivalence with the full fold is
+    * counts after), both deletion-bounded. A sidecar missing after a
+    * crash between an earlier snapshot commit and its sidecar write
+    * stays missing ([[needsRetrain]] self-heals with one establishing
+    * scan). Verdict-equivalence with the full fold is
     * asserted in MiningSpec and at the driver gate
     * (q_stream_ann_readmit). */
   def compactPartial(spark: SparkSession, base: String): Unit =
@@ -476,7 +468,9 @@ object SimilarityIndex {
               .filter(_._2 != 0L)
             BucketedTables.addSidecar(spark, table, OccupancySidecar,
               encodeCellStats(folded))
-          case _ => () // legacy index without the sidecar: stays missing
+          // the sidecar was lost to a crash after an earlier commit:
+          // stays missing
+          case _ => ()
         }
       }
     }
@@ -551,9 +545,10 @@ object SimilarityIndex {
   }
 
   /** Merge `delta` per-cell counts into the [[OccupancySidecar]]. A
-    * missing sidecar (a pre-occupancy legacy index) is left missing —
-    * folding a delta into an unknown base would record a lie;
-    * [[needsRetrain]]'s establishing scan or [[migrate]] creates it. */
+    * sidecar missing after a crash between a snapshot commit and its
+    * sidecar write is left missing — folding a delta into an unknown
+    * base would record a lie; [[needsRetrain]]'s establishing scan or
+    * [[migrate]] creates it. */
   private def foldOccupancy(spark: SparkSession, base: String,
                             delta: Seq[(Long, Long)]): Unit =
     if (BucketedTables.sidecarExists(spark, cellsTable(base), OccupancySidecar)) {
@@ -762,17 +757,18 @@ object SimilarityIndex {
     * appends under the stored quantizer concentrating into few cells is
     * exactly how IVF degrades, and the fix is a rebuild ([[write]]
     * retrains; its snapshot swap keeps probes consistent throughout).
-    * Requires the build-time baseline sidecar — an index built before
-    * drift tracking reports loudly; [[migrate]] synthesizes a re-based
-    * one without a rebuild.
+    * Requires the build-time baseline sidecar — when a crash between
+    * the build commit and its post-commit sidecar write lost it, this
+    * reports loudly; [[migrate]] synthesizes a re-based one without a
+    * rebuild.
     *
     * The CURRENT occupancy comes from the [[OccupancySidecar]] the write
     * paths maintain — two sidecar reads, ZERO Spark jobs: at 100 TB an
     * advisory check must not cost a corpus scan when every append
     * already knew its own cell counts. Only when the sidecar is missing
-    * (pre-occupancy index that was appended to before upgrading; the
-    * compaction crash window) does ONE establishing scan run — and it
-    * writes the sidecar, so the scan never repeats. An EMPTY index
+    * (a crash between a build's or compaction's snapshot commit and its
+    * sidecar write) does ONE establishing scan run — and it writes the
+    * sidecar, so the scan never repeats. An EMPTY index
     * (either side) reports false: no rows is no drift evidence. */
   def needsRetrain(spark: SparkSession, base: String,
                    factor: Double = 2.0): Boolean = {
@@ -780,9 +776,9 @@ object SimilarityIndex {
     require(
       BucketedTables.sidecarExists(spark, cellsTable(base), CellStatsSidecar),
       s"$base: no build-time cell-stats baseline in the current snapshot " +
-        "(index predates drift tracking, or the post-commit stats write " +
-        "crashed) — rebuild with write(), or migrate() to synthesize a " +
-        "re-based baseline from the current occupancy")
+        "(a crash landed between the build commit and its post-commit " +
+        "stats write) — rebuild with write(), or migrate() to synthesize " +
+        "a re-based baseline from the current occupancy")
     val build = decodeCellStats(
       BucketedTables.readSidecar(spark, cellsTable(base), CellStatsSidecar))
     val current =
@@ -806,23 +802,26 @@ object SimilarityIndex {
   }
 
   /** One establishing per-cell count over the live snapshot — the only
-    * corpus scan in the drift machinery, run once per index that
-    * predates the occupancy sidecar. Reads by PATH so this (write-ish)
-    * path never primes the session relation cache. */
+    * corpus scan in the drift machinery: at build time, and once after a
+    * crash between a snapshot commit and its sidecar write lost the
+    * occupancy sidecar. Reads by PATH so this (write-ish) path never
+    * primes the session relation cache. */
   private def scanOccupancy(spark: SparkSession,
                             base: String): Seq[(Long, Long)] =
     perCellCounts(spark.read.parquet(
       BucketedTables.location(spark, cellsTable(base)).toString))
 
-  /** Upgrade a LEGACY standing ANN index in place so drift tracking
-    * works without a full rebuild: synthesizes the missing baseline
-    * and running-occupancy sidecars from the CURRENT per-cell counts
-    * (one scan). The synthesized baseline is RE-BASED — it describes
-    * the corpus at migration time, not what the quantizer was trained
-    * on, so [[needsRetrain]] measures drift relative to the migration
-    * point; an index that had already drifted badly will read as
-    * balanced until it drifts further (rebuild with [[write]] to get a
-    * true training-time baseline). A no-op on a current-era index. */
+  /** Repair the post-commit sidecar crash window in place: [[write]]
+    * and the compactions add the baseline and running-occupancy sidecars
+    * AFTER their snapshot commit, so a crash in between leaves a live
+    * snapshot without them. This synthesizes the missing ones from the
+    * CURRENT per-cell counts (one scan) so drift tracking works without
+    * a full rebuild. The synthesized baseline is RE-BASED — it describes
+    * the corpus at repair time, not what the quantizer was trained on,
+    * so [[needsRetrain]] measures drift relative to the repair point; an
+    * index that had already drifted badly will read as balanced until it
+    * drifts further (rebuild with [[write]] to get a true training-time
+    * baseline). A no-op when both sidecars are present. */
   def migrate(spark: SparkSession, base: String): Unit =
    BucketedTables.withWriterLease(spark, cellsTable(base), "migration") {
     BucketedTables.heal(spark, Seq(cellsTable(base)))

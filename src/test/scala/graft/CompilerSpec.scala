@@ -11,11 +11,31 @@ import graft.model.{Model, PipelineSpec}
 import graft.compile.PlanException
 
 object SparkTest {
+  /** This JVM's standing-index root, `<tmpdir>/graft_dedup_index_<nonce>`
+    * (nonce from pid@host, like `graft.queries.Scratch`'s), deleted at
+    * JVM exit: test indexes never outlive their run, so a schema change
+    * cannot meet a previous run's tables. */
+  private lazy val indexRoot: java.io.File = {
+    val raw = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+    val nonce = java.security.MessageDigest.getInstance("MD5")
+      .digest(raw.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val root = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft_dedup_index_$nonce").getAbsoluteFile
+    def deleteRecursively(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+      f.delete(): Unit
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      deleteRecursively(root), "graft-test-index-cleanup"))
+    root
+  }
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(graft.ext.BucketedTables.RootConfKey, "file://" + indexRoot)
     .getOrCreate()
 }
 

@@ -838,7 +838,7 @@ class ExtSpec extends AnyFunSuite {
     // is byte-identical in effect
     ClusterIndex.fold(spark, base, edges((2L, 3L)), Seq(3L).toDF("id"), 1L)
     assert(ccState(base) == before)
-    // NULL endpoints (legacy exact rows without holder ids) are dropped
+    // a caller's NULL endpoints are dropped
     ClusterIndex.fold(spark, base,
       Seq((Option.empty[Long], Option(2L))).toDF("id_a", "id_b"),
       spark.emptyDataFrame.select(lit(1L).as("id")).limit(0), 2L)

@@ -712,6 +712,19 @@ class IOSpec extends AnyFunSuite {
       Some(tombs.filter(col("id") < 0))) == Set.empty[String])
   }
 
+  test("maskByTombs fails on a frame with no id column while tombstones " +
+       "are pending instead of passing it through unmasked") {
+    import graft.ext.BucketedTables
+    val tombs = Seq(1L).toDF("id")
+    val noId = Seq((1L, "x"), (2L, "y")).toDF("h", "t")
+    // the takedown contract masks by id: a frame that cannot be masked
+    // must fail analysis, never serve the deleted rows
+    intercept[org.apache.spark.sql.AnalysisException](
+      BucketedTables.maskByTombs(noId, Some(tombs)).schema)
+    // no tombstone table: nothing is deleted, the frame passes unchanged
+    assert(BucketedTables.maskByTombs(noId, None) eq noId)
+  }
+
   test("dedup index deletion: tombstones mask verdicts at once; compact " +
        "folds them physically; a rebuild clears pending tombstones") {
     import org.apache.spark.sql.execution.SparkPlan
@@ -1102,6 +1115,10 @@ class IOSpec extends AnyFunSuite {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
+    val prevRoot = spark.conf.getOption("spark.graft.index.root")
+    def restoreRoot(): Unit = prevRoot.fold(
+      spark.conf.unset("spark.graft.index.root"))(
+      spark.conf.set("spark.graft.index.root", _))
     spark.conf.set("spark.graft.index.root", customRoot)
     try {
       DedupIndex.write(corpus, "text", "doc_id", "lang", "t_hroot_idx",
@@ -1126,9 +1143,9 @@ class IOSpec extends AnyFunSuite {
       assert(rows(DedupIndex.dedupIncremental(spark, "t_hroot_idx", delta,
         "text", "doc_id", "lang", threshold = 0.5)) == expect)
       // compaction's snapshot swap claims v2+ under the SAME root and
-      // prunes superseded versions there (nothing leaks to the default
-      // root, and the catalog-anchored root survives a conf change)
-      spark.conf.unset("spark.graft.index.root")
+      // prunes superseded versions there (nothing leaks to the session's
+      // own root, and the catalog-anchored root survives a conf change)
+      restoreRoot()
       DedupIndex.compact(spark, "t_hroot_idx")
       val exactLoc = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier("t_hroot_idx_exact"))
@@ -1143,7 +1160,7 @@ class IOSpec extends AnyFunSuite {
       assert(vdirs.length <= 2,
         s"superseded snapshots not pruned: ${vdirs.mkString(",")}")
     } finally {
-      spark.conf.unset("spark.graft.index.root")
+      restoreRoot()
       for (sfx <- Seq("_exact", "_pref", "_sh", "_band", "_tombs");
            t <- Seq(s"t_hroot_idx$sfx", s"t_hroot_idx${sfx}__next"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -1172,7 +1189,8 @@ class IOSpec extends AnyFunSuite {
         .toDF("doc_id", "lang", "text")
       val keepAll = extra.select(col("doc_id"), lit(true).as("keep"),
         lit(null).cast("string").as("reason"))
-      // append, delete, compact, migrate: all refuse, naming the holder
+      // append, delete, compact, compactPartial: all refuse, naming the
+      // holder
       val e1 = intercept[IllegalStateException](DedupIndex.appendKept(
         spark, "t_lease_idx", extra, keepAll, "text", "doc_id", "lang",
         threshold = 0.5, batchId = 11L))
@@ -1182,8 +1200,9 @@ class IOSpec extends AnyFunSuite {
         spark, "t_lease_idx", extra.select(col("doc_id")), "doc_id"))
       intercept[IllegalStateException](
         DedupIndex.compact(spark, "t_lease_idx"))
-      intercept[IllegalStateException](
-        DedupIndex.migrate(spark, "t_lease_idx", threshold = 0.5))
+      val e4 = intercept[IllegalStateException](
+        DedupIndex.compactPartial(spark, "t_lease_idx"))
+      assert(e4.getMessage.contains("test-harness"))
       // nothing landed anywhere — the refused append lost no rows into
       // a dir a racing swap would replace
       assert(spark.table("t_lease_idx_exact").count() == before)
@@ -1333,121 +1352,6 @@ class IOSpec extends AnyFunSuite {
     assert(verdicts("t_cwin_a") == verdicts("t_cwin_b"))
   }
 
-  test("legacy index (pre-bid, pre-PPJoin-payload) migrates and accepts stamped appends") {
-    import graft.ext.{BucketedTables, Dedup, DedupIndex}
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val delta = docs.filter(col("doc_id") % 5 === 0)
-    val extra = Seq((90007L, "en", "migration test unique words here indeed"))
-      .toDF("doc_id", "lang", "text")
-    val keepAll = extra.select(col("doc_id"), lit(true).as("keep"),
-      lit(null).cast("string").as("reason"))
-    // Build a CURRENT index, then rewrite every table to the legacy shape:
-    // no bid column anywhere, no (pos, sz) on the pref table — exactly
-    // what a pre-stamping build left on disk.
-    DedupIndex.write(corpus, "text", "doc_id", "lang", "t_legacy_idx",
-      threshold = 0.5, buckets = 4)
-    def strip(tbl: String, keys: Seq[String], drop: Seq[String]): Unit = {
-      val legacy = spark.table(tbl).drop(drop: _*)
-      // write the stripped rows as an unpublished snapshot, then recreate
-      // the catalog entry with the LEGACY schema directly over it (DDL —
-      // a writer-based recreate would clean the location dir)
-      val path = BucketedTables.writeSnapshot(spark, tbl, keys, legacy)
-      val bucketCols = keys.mkString(", ")
-      spark.sql(s"DROP TABLE $tbl")
-      spark.sql(s"""CREATE TABLE $tbl (${legacy.schema.toDDL}) USING parquet
-        CLUSTERED BY ($bucketCols) SORTED BY ($bucketCols) INTO 4 BUCKETS
-        LOCATION '$path'""")
-    }
-    strip("t_legacy_idx_exact", Seq("h", "t"), Seq("bid", "id"))
-    strip("t_legacy_idx_sh", Seq("id"), Seq("bid"))
-    strip("t_legacy_idx_band", Seq("bk"), Seq("bid"))
-    strip("t_legacy_idx_pref", Seq("bk"), Seq("bid", "pos", "sz"))
-    assert(!spark.table("t_legacy_idx_pref").columns.contains("pos"))
-    // legacy probes still work (no pruning payload, no stamps)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getBoolean(1),
-        Option(r.getString(2)))).toSet
-    val legacyVerdicts = rows(DedupIndex.dedupIncremental(spark, "t_legacy_idx",
-      delta, "text", "doc_id", "lang", threshold = 0.5))
-    assert(legacyVerdicts == rows(Dedup.dedupIncremental(corpus, delta,
-      "text", "doc_id", "lang", threshold = 0.5)))
-    // a stamped append auto-migrates the index to the current schema…
-    DedupIndex.appendKept(spark, "t_legacy_idx", extra, keepAll,
-      "text", "doc_id", "lang", threshold = 0.5, batchId = 3L)
-    Seq("t_legacy_idx_exact", "t_legacy_idx_sh", "t_legacy_idx_band").foreach {
-      t => assert(spark.table(t).columns.contains("bid"), s"$t not migrated") }
-    assert(spark.table("t_legacy_idx_pref").columns.contains("pos"))
-    // …and the mixed-era index (bulk legacy + stamped append) judges
-    // probes exactly like a from-scratch rebuild over the same corpus
-    DedupIndex.write(corpus.select("doc_id", "lang", "text").unionByName(extra),
-      "text", "doc_id", "lang", "t_rebuilt_idx", threshold = 0.5, buckets = 4)
-    val mixed = rows(DedupIndex.dedupIncremental(spark, "t_legacy_idx",
-      delta, "text", "doc_id", "lang", threshold = 0.5))
-    val rebuilt = rows(DedupIndex.dedupIncremental(spark, "t_rebuilt_idx",
-      delta, "text", "doc_id", "lang", threshold = 0.5))
-    assert(mixed == rebuilt)
-  }
-
-  test("backfillHolderIds retires the legacy-exact class: delete refuses " +
-       "before, works after, and partial compaction retires the tombstones") {
-    import graft.ext.{BucketedTables, DedupIndex}
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    DedupIndex.write(corpus, "text", "doc_id", "lang", "t_backfill_idx",
-      threshold = 0.5, buckets = 4)
-    // strip the exact table to the pre-holder-id era (the t_legacy_idx
-    // simulation, exact table only)
-    val legacy = spark.table("t_backfill_idx_exact").drop("bid", "id")
-    val path = BucketedTables.writeSnapshot(spark, "t_backfill_idx_exact",
-      Seq("h", "t"), legacy)
-    spark.sql("DROP TABLE t_backfill_idx_exact")
-    spark.sql(s"""CREATE TABLE t_backfill_idx_exact (${legacy.schema.toDDL})
-      USING parquet CLUSTERED BY (h, t) SORTED BY (h, t) INTO 4 BUCKETS
-      LOCATION '$path'""")
-    val victims = corpus.select("doc_id").orderBy("doc_id").limit(3)
-    // pre-migration: per-document deletion refuses loudly (no id col,
-    // then NULL ids after migrate)
-    val e1 = intercept[IllegalArgumentException](
-      DedupIndex.delete(spark, "t_backfill_idx", victims, "doc_id"))
-    assert(e1.getMessage.contains("holder id") ||
-      e1.getMessage.contains("holder-id"), e1.getMessage)
-    DedupIndex.migrate(spark, "t_backfill_idx", threshold = 0.5)
-    val e2 = intercept[IllegalArgumentException](
-      DedupIndex.delete(spark, "t_backfill_idx", victims, "doc_id"))
-    assert(e2.getMessage.contains("backfillHolderIds"), e2.getMessage)
-    // a corpus that does NOT cover the legacy texts refuses loudly —
-    // a partial backfill would leave silently un-deletable rows
-    val e3 = intercept[IllegalArgumentException](
-      DedupIndex.backfillHolderIds(spark, "t_backfill_idx",
-        corpus.filter(col("doc_id") % 2 === 0), "text", "doc_id",
-        threshold = 0.5))
-    assert(e3.getMessage.contains("no holder in the supplied corpus"),
-      e3.getMessage)
-    // the real backfill: holder ids recovered from the original corpus,
-    // bit-identical to the never-stripped index
-    DedupIndex.backfillHolderIds(spark, "t_backfill_idx", corpus,
-      "text", "doc_id", threshold = 0.5)
-    val rebuilt = spark.table("t_backfill_idx_exact")
-      .select("h", "t", "bid", "id").as[(Long, String, Long, Long)]
-      .collect().toSet
-    DedupIndex.write(corpus, "text", "doc_id", "lang", "t_backfill_ref",
-      threshold = 0.5, buckets = 4)
-    val reference = spark.table("t_backfill_ref_exact")
-      .select("h", "t", "bid", "id").as[(Long, String, Long, Long)]
-      .collect().toSet
-    assert(rebuilt == reference,
-      "backfilled exact rows must equal a from-scratch build's")
-    // and the full deletion story now applies: delete + PARTIAL
-    // compaction physically retires exactly the victims
-    DedupIndex.delete(spark, "t_backfill_idx", victims, "doc_id")
-    DedupIndex.compactPartial(spark, "t_backfill_idx")
-    val gone = victims.as[Long].collect().toSet
-    assert(spark.table("t_backfill_idx_exact")
-      .filter(col("id").isin(gone.toSeq: _*)).count() == 0L)
-    assert(DedupIndex.pendingTombstones(spark, "t_backfill_idx") == 0L)
-  }
-
   test("dedup index stats report the PHYSICAL bucket layout exactly; " +
        "needsCompact advises on pending tombstones and append mass") {
     import graft.ext.DedupIndex
@@ -1533,8 +1437,9 @@ class IOSpec extends AnyFunSuite {
       assert(DedupIndex.appendedSinceSnapshot(spark, base)
         .contains((0L, folded)))
       assert(!DedupIndex.needsCompact(spark, base))
-      // legacy index (no sidecar): appends report unknown, the advisory
-      // decides on tombstones alone, and a compact re-establishes
+      // a crash between a commit and its sidecar write (sidecar lost):
+      // appends report unknown, the advisory decides on tombstones
+      // alone, and a compact re-establishes
       assert(new java.io.File(tableLoc(s"${base}_exact"), "_appended").delete())
       assert(DedupIndex.appendedSinceSnapshot(spark, base).isEmpty)
       assert(!DedupIndex.needsCompact(spark, base))

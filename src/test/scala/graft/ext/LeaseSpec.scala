@@ -39,9 +39,16 @@ class LeaseSpec extends AnyFunSuite {
   private def tmpRoot(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath.toString
 
+  /** Put the session's own index root back (unsetting would fall back
+    * to the shared default root). */
+  private def restoreRoot(prev: Option[String]): Unit =
+    prev.fold(spark.conf.unset(BucketedTables.RootConfKey))(
+      spark.conf.set(BucketedTables.RootConfKey, _))
+
   test("capability gate: a scheme with no atomic create-if-absent is " +
        "REFUSED loudly; the operator trust conf unlocks it") {
     spark.conf.set("fs.noatomic.impl", classOf[NoAtomicFs].getName)
+    val prevRoot = spark.conf.getOption(BucketedTables.RootConfKey)
     spark.conf.set(BucketedTables.RootConfKey,
       "noatomic://" + tmpRoot("graft_noatomic"))
     try {
@@ -63,13 +70,14 @@ class LeaseSpec extends AnyFunSuite {
         "a completed leased op must release its lease")
     } finally {
       spark.conf.unset(BucketedTables.LeaseTrustConfKey)
-      spark.conf.unset(BucketedTables.RootConfKey)
+      restoreRoot(prevRoot)
     }
   }
 
   test("a store outage during acquisition is rethrown as ITSELF — never " +
        "misdiagnosed as a held lease") {
     spark.conf.set("fs.failcreate.impl", classOf[FailingCreateFs].getName)
+    val prevRoot = spark.conf.getOption(BucketedTables.RootConfKey)
     spark.conf.set(BucketedTables.RootConfKey,
       "failcreate://" + tmpRoot("graft_failcreate"))
     // trusted, so the gate lets the create run (and fail)
@@ -84,7 +92,7 @@ class LeaseSpec extends AnyFunSuite {
         "an IO failure must not be reported as a held lease")
     } finally {
       spark.conf.unset(BucketedTables.LeaseTrustConfKey)
-      spark.conf.unset(BucketedTables.RootConfKey)
+      restoreRoot(prevRoot)
     }
   }
 

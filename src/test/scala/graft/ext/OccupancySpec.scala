@@ -91,7 +91,8 @@ class OccupancySpec extends AnyFunSuite {
     SimilarityIndex.write(e, "embedding", "vec_id", base,
       k = 4, iters = 1, buckets = 4)
     try {
-      // simulate a pre-drift-tracking index: both advisory sidecars gone
+      // simulate a crash between the build commit and its post-commit
+      // sidecar writes: both advisory sidecars gone
       val dir = new java.io.File(
         new java.net.URI(BucketedTables.location(spark, cells).toString))
       assert(new java.io.File(dir, "_cellstats").delete())
@@ -112,7 +113,8 @@ class OccupancySpec extends AnyFunSuite {
           e.filter(col("vec_id") === 0).select(col("embedding"))))
       SimilarityIndex.append(spark, base, drift)
       assert(SimilarityIndex.needsRetrain(spark, base))
-      // migrate on a current-era index is a no-op (baseline untouched)
+      // migrate with both sidecars present is a no-op (baseline
+      // untouched)
       val baseBefore = parseStats("_cellstats")
       SimilarityIndex.migrate(spark, base)
       assert(parseStats("_cellstats") == baseBefore)
