@@ -25,8 +25,10 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *    table's snapshot epoch;
   *  - read: [[liveTombIds]] holds the epoch-first read order every probe
   *    mask and fold depends on;
-  *  - dispatch: [[chooseCompaction]] picks full vs partial and hands its
-  *    dirty-file scan on;
+  *  - dispatch: [[chooseCompaction]], the one compaction policy, picks
+  *    full vs partial from the anchor's file count, dirty share and
+  *    append counter against [[MinFiles]], [[MaxDirtyShare]] and
+  *    [[AppendedRatio]], and hands its dirty-file scan on;
   *  - partial fold: [[planPartial]] splits each table into rewrite and
   *    carry sets, [[writePartial]] writes the subset and carries the rest;
   *  - commit: [[commitSnapshots]] swaps the anchor LAST, then
@@ -682,44 +684,77 @@ private[graft] object BucketedTables {
     }
   }
 
-  /** The full-vs-partial compaction dispatch policy, pure so tests can
-    * pin the crossover. Partial compaction's data term is
-    * deletion-bounded but it pays fixed jobs a full fold does not (the
-    * dirty-file discovery scan, per-file carry links) — measured on
-    * identical twins (compactbench/anncompactbench artifacts), the full
-    * fold wins below a corpus-size crossover and whenever most files
-    * are dirty anyway:
+  /** Below this many anchor files a full fold costs less than partial's
+    * fixed jobs (the dirty-file discovery scan, per-file carry links):
+    * `compactbench_r13.json` measured partial ≈ full at 4k docs, ~50
+    * steady-state exact files (ratio 1.10), and partial 1.4–2× faster
+    * above; `anncompactbench_r13.json` measured full 1.9× faster on a
+    * 1.6k-vector index (ratio 0.52). Files are row-capped, so their count
+    * tracks corpus size. */
+  val MinFiles = 48
+
+  /** Above this share of dirty anchor files the rewrite set is the
+    * corpus, so partial pays its overhead on top of the full fold's data
+    * term (`anncompactbench_r13.json`: with one file per bucket, 12
+    * tombstones touched up to 12 of 16 cells, and partial lost below
+    * ~1.6M vectors). */
+  val MaxDirtyShare = 0.5
+
+  /** Docs appended since the last full fold, as a share of the
+    * snapshot's docs, from which a full fold is due: a partial fold
+    * carries append files (the dedup index's pref/band tables whole), and
+    * only the full fold restores one-file-per-bucket scans. No committed
+    * artifact varies append mass (compactbench and anncompactbench append
+    * one batch), so this is the advisory default the append counter has
+    * carried since it came in, not a measured crossover. */
+  val AppendedRatio = 0.5
+
+  /** True when `appended` docs since the last full fold reach
+    * [[AppendedRatio]] of a `snapshot`-doc snapshot — the append trigger
+    * of both [[compactionChoice]] and `DedupIndex.needsCompact`. */
+  def appendHeavy(appended: Long, snapshot: Long): Boolean =
+    appended >= AppendedRatio * math.max(snapshot, 1L)
+
+  /** The full-vs-partial compaction policy, pure so tests pin every
+    * branch. `appended` is the anchor's append counter (docs appended
+    * since the last full fold, docs in the snapshot); None when the index
+    * keeps none or a crash lost it, and the choice then rests on files
+    * and dirty share alone:
     *
-    *  - `totalFiles < minFiles` → "full": the corpus is small enough
-    *    that rewriting it costs less than partial's fixed jobs
-    *    (file count is the right proxy — files are row-capped, so
-    *    count tracks corpus size at the granularity that matters);
-    *  - `dirtyFiles > maxDirtyShare · totalFiles` → "full": the rewrite
-    *    set IS the corpus, so partial would pay its overhead on top of
-    *    the same data term;
+    *  - append mass [[appendHeavy]] → "full": a partial fold would carry
+    *    the append fragmentation again;
+    *  - `totalFiles < MinFiles` → "full": the corpus is small enough
+    *    that rewriting it costs less than partial's fixed jobs;
+    *  - `dirtyFiles > MaxDirtyShare · totalFiles` → "full": the rewrite
+    *    set is the corpus anyway;
     *  - otherwise → "partial".
     */
   def compactionChoice(totalFiles: Int, dirtyFiles: Int,
-                       minFiles: Int, maxDirtyShare: Double): String =
-    if (totalFiles < minFiles) "full"
-    else if (dirtyFiles > maxDirtyShare * totalFiles) "full"
+                       appended: Option[(Long, Long)]): String =
+    if (appended.exists { case (a, snap) => appendHeavy(a, snap) }) "full"
+    else if (totalFiles < MinFiles) "full"
+    else if (dirtyFiles > MaxDirtyShare * totalFiles) "full"
     else "partial"
 
-  /** The compaction dispatch of both indexes' `compactAuto`: the cheap
-    * file-count gate on `anchor` first (below `minFiles` the answer is
-    * "full" and no scan is paid), then the anchor's [[dirtyFiles]] scan,
-    * then [[compactionChoice]]. Returns the choice with the scan, which
-    * the partial fold takes as the anchor's dirty set ([[planPartial]])
-    * so it is never paid twice. */
+  /** The compaction dispatch of both indexes' `compactAuto`: the
+    * anchor's file count and the caller's append counter first — when
+    * either already says "full" no dirty-file scan is paid — then the
+    * anchor's [[dirtyFiles]] scan, then [[compactionChoice]]. Prints one
+    * `[compactAuto]` line per decision. Returns the choice with the
+    * scan, which the partial fold takes as the anchor's dirty set
+    * ([[planPartial]]) so it is never paid twice. */
   def chooseCompaction(spark: SparkSession, anchor: String, tombs: String,
-                       minFiles: Int, maxDirtyShare: Double)
+                       appended: Option[(Long, Long)])
       : (String, Option[Set[String]]) = {
     val totalFiles = bucketFilePaths(spark, anchor).size
     val dirty =
-      if (totalFiles < minFiles) None
+      if (compactionChoice(totalFiles, 0, appended) == "full") None
       else Some(dirtyFiles(spark, anchor, liveTombIds(spark, anchor, tombs)))
-    (compactionChoice(totalFiles, dirty.fold(0)(_.size), minFiles,
-      maxDirtyShare), dirty)
+    val choice = compactionChoice(totalFiles, dirty.fold(0)(_.size), appended)
+    System.err.println(s"[compactAuto] $anchor: files=$totalFiles " +
+      s"dirty=${dirty.fold("-")(_.size.toString)} appended=" +
+      appended.fold("-") { case (a, snap) => s"$a/$snap" } + s" -> $choice")
+    (choice, dirty)
   }
 
   /** One table's partial-compaction plan ([[planPartial]]): its live

@@ -436,16 +436,16 @@ object DedupIndex {
 
   /** Fold the standing index choosing full vs partial compaction
     * AUTOMATICALLY ([[BucketedTables.chooseCompaction]] on the exact
-    * table, the [[SimilarityIndex.compactAuto]] twin). Returns the
-    * strategy that ran. Threshold defaults come from the committed
-    * crossover experiments (compactbench: partial ≈ full at 4k docs /
-    * ~50 steady-state exact files, wins 1.4–2× above). */
-  def compactAuto(spark: SparkSession, base: String,
-                  minFiles: Int = 48, maxDirtyShare: Double = 0.5): String =
+    * table and the [[AppendedSidecar]] counter, the
+    * [[SimilarityIndex.compactAuto]] twin): append mass that
+    * [[needsCompact]] reports forces the full fold, because a partial
+    * fold carries the pref/band append files whole. Returns the strategy
+    * that ran. */
+  def compactAuto(spark: SparkSession, base: String): String =
    BucketedTables.withWriterLease(spark, exactTable(base), "compaction") {
     healInterrupted(spark, base)
     val (choice, dirty) = BucketedTables.chooseCompaction(spark,
-      exactTable(base), tombsTable(base), minFiles, maxDirtyShare)
+      exactTable(base), tombsTable(base), readAppended(spark, base))
     if (choice == "partial") compactPartialImpl(spark, base, dirty)
     else compactImpl(spark, base)
     choice
@@ -543,8 +543,8 @@ object DedupIndex {
 
   /** Advisory compaction trigger: true when deletions are pending (the
     * fold is what physically applies a takedown) or when the appended
-    * doc mass since the last full [[compact]] has reached
-    * `appendedRatio` of the snapshot (append files accumulate per batch
+    * doc mass since the last full [[compact]] is
+    * [[BucketedTables.appendHeavy]] (append files accumulate per batch
     * — the full fold restores one-file-per-bucket scans). An unknown
     * append counter (the sidecar lost to a crash after a snapshot
     * commit) decides on tombstones alone. Deliberately NOT
@@ -552,11 +552,10 @@ object DedupIndex {
     * legitimately writes many files per bucket, and deciding on file
     * counts would cry wolf right after every rebuild — the per-bucket
     * file signal is surfaced for the operator instead. */
-  def needsCompact(spark: SparkSession, base: String,
-                   appendedRatio: Double = 0.5): Boolean =
+  def needsCompact(spark: SparkSession, base: String): Boolean =
     pendingTombstones(spark, base) > 0 ||
       appendedSinceSnapshot(spark, base).exists { case (appended, snap) =>
-        appended >= appendedRatio * math.max(snap, 1L)
+        BucketedTables.appendHeavy(appended, snap)
       }
 
   /** Judge `delta` against the standing index — same output contract as

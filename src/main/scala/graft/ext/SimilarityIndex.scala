@@ -481,15 +481,13 @@ object SimilarityIndex {
     * on the cells table, the [[DedupIndex.compactAuto]] twin) — a user
     * calling compactPartial on a small index pays roughly double (the
     * anncompactbench ratio-0.52 row). Returns the strategy that ran
-    * ("full" | "partial") for operability and tests. Thresholds default
-    * from the committed crossover experiments
-    * (anncompactbench/compactbench); both are overridable per call. */
-  def compactAuto(spark: SparkSession, base: String,
-                  minFiles: Int = 48, maxDirtyShare: Double = 0.5): String =
+    * ("full" | "partial") for operability and tests. The index keeps no
+    * append counter, so the choice rests on files and dirty share. */
+  def compactAuto(spark: SparkSession, base: String): String =
    BucketedTables.withWriterLease(spark, cellsTable(base), "compaction") {
     BucketedTables.heal(spark, Seq(cellsTable(base), tombsTable(base)))
     val (choice, dirty) = BucketedTables.chooseCompaction(spark,
-      cellsTable(base), tombsTable(base), minFiles, maxDirtyShare)
+      cellsTable(base), tombsTable(base), appended = None)
     if (choice == "partial") compactPartialImpl(spark, base, dirty)
     else compactImpl(spark, base)
     choice

@@ -197,33 +197,19 @@ object SpanIndex {
     * one-partition-per-bucket scan provides. Lands in a fresh snapshot
     * dir with the width sidecar re-pinned and goes live at
     * [[BucketedTables.swapLocation]]'s single catalog op, under the
-    * writer lease.
-    *
-    * `preserveStamps` keeps one row per (h, bid) instead of one per h —
-    * the fold an IN-LINE streaming compaction must use, because fully
-    * folding batch stamps away would break a later replay's
-    * stamp-exclusion. Offline compactions (no in-flight stream) fold
-    * fully. */
-  def compact(spark: SparkSession, base: String,
-              preserveStamps: Boolean = false): Unit =
+    * writer lease. Fully folding the batch stamps away is why it runs
+    * offline, with no stream in flight: a later replay of a folded batch
+    * would lose its stamp exclusion. */
+  def compact(spark: SparkSession, base: String): Unit =
     BucketedTables.withWriterLease(spark, hashTable(base), "compaction") {
       heal(spark, base)
       val w = windowWidth(spark, base)
-      val keys = if (preserveStamps) Seq(col("h"), col("bid"))
-                 else Seq(col("h"))
       val folded0 = BucketedTables.withForcedBucketedScan(spark) {
-        val t = spark.table(hashTable(base))
+        spark.table(hashTable(base))
           .select(col("h"), col("cnt"), col("bid")).distinct()
-          .groupBy(keys: _*).agg(sum(col("cnt")).as("cnt"))
-        val f = if (preserveStamps)
-          // only (append ⊕ delete) pairs within one stamp cancel here;
-          // cross-stamp cancellation folds at the next offline compact
-          t.filter(col("cnt") =!= 0)
-            .select(col("h"), col("cnt"), col("bid"))
-        else
-          t.filter(col("cnt") > 0)
-            .select(col("h"), col("cnt"), lit(BulkBid).as("bid"))
-        f
+          .groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
+          .filter(col("cnt") > 0)
+          .select(col("h"), col("cnt"), lit(BulkBid).as("bid"))
       }
       val path = BucketedTables.withForcedBucketedScan(spark) {
         BucketedTables.writeSnapshot(spark, hashTable(base), Seq("h"),
@@ -239,22 +225,6 @@ object SpanIndex {
   def pendingTombstoneRows(spark: SparkSession, base: String): Long = {
     heal(spark, base, refresh = false)
     spark.table(hashTable(base)).filter(col("cnt") < 0).count()
-  }
-
-  /** Cheap compaction advisory: data files in the live snapshot vs the
-    * bucket count — pure file listing, never scans rows. */
-  def needsCompact(spark: SparkSession, base: String,
-                   maxFilesPerBucket: Int = 4): Boolean = {
-    heal(spark, base, refresh = false)
-    val loc = new org.apache.hadoop.fs.Path(
-      BucketedTables.location(spark, hashTable(base)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(loc).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    dataFiles > maxFilesPerBucket.toLong *
-      bucketsOf(spark, hashTable(base))
   }
 
   /** Observability surface (the [[DedupIndex.stats]] twin): occupancy and

@@ -1534,8 +1534,8 @@ object ExtQueries {
     * tombstone" path ([[graft.ext.DedupIndex.delete]]) exercised end to
     * end at the driver gate. Extends [[qStreamDedupLifecycle]] with:
     *
-    *  5. [[graft.ext.DedupIndex.compactAuto]] at default thresholds —
-    *     this layout sits above the crossover, so the policy chooses
+    *  5. [[graft.ext.DedupIndex.compactAuto]] — this layout sits above
+    *     the crossover with light append mass, so the policy chooses
     *     (and the query asserts) the PARTIAL branch: it physically removes
     *     the taken-down documents' exact/sh rows (rewriting ONLY their
     *     buckets; clean buckets and the whole pref/band accelerator
@@ -1575,14 +1575,15 @@ object ExtQueries {
     // their stale rows dying at the rewritten sh verify join. A
     // hash-pass here therefore proves partial compaction's
     // verdict-equivalence at the driver gate, not just in ExtSpec.
-    // Routed through the AUTO dispatch (r14 policy) at DEFAULT
-    // thresholds rather than a direct compactPartial call: this index's
-    // exact table genuinely sits above the file-count crossover at both
-    // gate sfs (77 files at sf0.01 / 96 at sf0.1, dirty share 0.24–0.32
-    // under the 40-doc takedown), so the policy must choose PARTIAL on
-    // its own — the require makes the artifact say which branch ran.
-    // The FULL branch is exercised under the same gate by
-    // q_stream_ann_readmit (defaults, below-crossover corpus).
+    // Routed through the AUTO dispatch rather than a direct
+    // compactPartial call: this index's exact table genuinely sits above
+    // the file-count crossover at both gate sfs (77 files at sf0.01 / 96
+    // at sf0.1, dirty share 0.24–0.32 under the 40-doc takedown), and its
+    // append mass stays below the ratio (98 of 400 docs appended at
+    // sf0.01, 0.245 < 0.5), so the policy must choose PARTIAL on its own
+    // — the require makes the artifact say which branch ran. The FULL
+    // branch is exercised under the same gate by q_stream_ann_readmit
+    // (below-crossover corpus).
     val choice = DedupIndex.compactAuto(s, life.idx)
     require(choice == "partial",
       s"compactAuto must take the partial branch here, got $choice")

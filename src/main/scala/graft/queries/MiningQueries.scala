@@ -523,8 +523,8 @@ object MiningQueries {
     * lifecycle with a third checkpointed leg:
     *
     *  6. AFTER the compaction ([[graft.ext.SimilarityIndex
-    *     .compactAuto]] at DEFAULT thresholds — which on this
-    *     below-crossover corpus must choose the FULL fold, asserted)
+    *     .compactAuto]] — which on this below-crossover corpus must
+    *     choose the FULL fold, asserted)
     *     has physically removed the taken-down rows and retired
     *     their tombstones, the cleared subset
     *     (vec_id % 7 = 3 AND vec_id < 420) lands as a late file and
@@ -545,7 +545,7 @@ object MiningQueries {
     // rewrite; clean files carry over by hard link — a hash-pass here
     // proves the partial fold's verdict-equivalence at the driver gate
     // (the q_stream_dedup_readmit discipline, applied to the ANN twin).
-    // Routed through the AUTO dispatch with DEFAULT thresholds: this
+    // Routed through the AUTO dispatch: this
     // fixed-count corpus (≤500 vectors, 4 buckets) sits far below the
     // measured file-count crossover, so the policy must choose the FULL
     // fold — and decide so WITHOUT paying the dirty-file discovery scan

@@ -29,26 +29,15 @@ import graft.ext.SpanIndex
 object IngestSpans {
 
   /** Build the writer (caller `.start()`s it). Trimmed docs land in
-    * `outPath` as parquet partitioned by `batch_id`. `compactEvery` runs
-    * [[graft.ext.SpanIndex.compact]] in-line every N batches when the
-    * file-count advisory fires (leave 0 and compact offline on a real
-    * cluster — the swap is atomic, but compaction competes with
-    * ingestion for the write path). */
+    * `outPath` as parquet partitioned by `batch_id`. */
   def run(stream: DataFrame, base: String, textCol: String, idCol: String,
           outPath: String, checkpoint: String,
-          updateIndex: Boolean = true,
-          compactEvery: Int = 0): DataStreamWriter[Row] =
+          updateIndex: Boolean = true): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, base, textCol, idCol, outPath,
           updateIndex, runTag = checkpoint)
-        if (compactEvery > 0 && updateIndex &&
-            (batchId + 1) % compactEvery == 0 &&
-            SpanIndex.needsCompact(batch.sparkSession, base))
-          // preserveStamps: an in-line compaction must not fold batch
-          // stamps away, or a later replay loses its stamp exclusion
-          SpanIndex.compact(batch.sparkSession, base, preserveStamps = true)
       }
 
   /** One micro-batch step, exposed so the replay-idempotence contract is

@@ -17,10 +17,8 @@ import graft.ext.SimilarityIndex
   * assignment under the stored quantizer is DETERMINISTIC, so a replayed
   * batch appends byte-identical rows. Probes dedup their probed slice
   * ([[SimilarityIndex.topK]]), so duplicate rows never distort top-k —
-  * they only cost space until [[SimilarityIndex.compact]] folds them
-  * away; `compactEvery` runs that compaction in-line every N batches
-  * (leave 0 and compact offline on a real cluster — the swap is atomic,
-  * but compaction competes with ingestion for the write path).
+  * they only cost space until an offline [[SimilarityIndex.compact]]
+  * folds them away.
   *
   * foreachBatch (not a stateful operator) for the same reason as
   * [[IngestDedup]]: the index IS the state and is far too large for
@@ -30,14 +28,11 @@ object IngestVectors {
 
   /** Build the writer (caller `.start()`s it). */
   def run(stream: DataFrame, base: String, checkpoint: String,
-          idCol: String = "vec_id", vecCol: String = "embedding",
-          compactEvery: Int = 0): DataStreamWriter[Row] =
+          idCol: String = "vec_id", vecCol: String = "embedding")
+      : DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        SimilarityIndex.append(spark, base, batch, idCol, vecCol)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          SimilarityIndex.compact(spark, base)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        SimilarityIndex.append(batch.sparkSession, base, batch, idCol, vecCol)
       }
 }

@@ -51,9 +51,4 @@ object Windows {
                      keys: Seq[String], watermark: String,
                      aggs: Seq[Column] = defaultAggs): DataFrame =
     tumbling(events.withWatermark(ts, watermark), ts, width, keys, aggs)
-
-  def sessionStream(events: DataFrame, ts: String, gap: String,
-                    keys: Seq[String], watermark: String,
-                    aggs: Seq[Column] = defaultAggs): DataFrame =
-    session(events.withWatermark(ts, watermark), ts, gap, keys, aggs)
 }

@@ -90,13 +90,14 @@ object AnnCompactBench {
     }
     build("t_acbench_full"); build("t_acbench_part")
     // what compactAuto would dispatch on this state (file count + dirty
-    // share at its defaults) — committed next to the measured winner so
-    // the artifact shows the policy tracking the crossover
+    // share; the ANN index keeps no append counter) — committed next to
+    // the measured winner so the artifact shows the policy tracking the
+    // crossover
     val files = graft.ext.BucketedTables
       .bucketFilePaths(spark, SimilarityIndex.cellsTable("t_acbench_part"))
       .size
     val auto = graft.ext.BucketedTables
-      .compactionChoice(files, math.min(nDeletes, files), 48, 0.5)
+      .compactionChoice(files, math.min(nDeletes, files), appended = None)
     val fullSec = time(SimilarityIndex.compact(spark, "t_acbench_full"))
     val partSec = time(SimilarityIndex.compactPartial(spark, "t_acbench_part"))
     println(f"""{"sf":"$sfDir","n_vecs":$nVecs,"n_deletes":$nDeletes,""" +

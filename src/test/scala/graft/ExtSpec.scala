@@ -636,7 +636,6 @@ class ExtSpec extends AnyFunSuite {
     val files = loc.listFiles().count(f => f.isFile &&
       !f.getName.startsWith("_") && !f.getName.startsWith("."))
     assert(files <= 2, s"expected <= one file per bucket, got $files")
-    assert(!SpanIndex.needsCompact(spark, "t_span_idx"))
     val r3 = SpanIndex.trimIncremental(spark, "t_span_idx", delta2, "text", "doc_id")
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getString(2))).toSeq
     assert(r3 == Seq((20L, 0L, "")))
@@ -1038,22 +1037,25 @@ class ExtSpec extends AnyFunSuite {
 
   test("DedupIndex.compactAuto: full below the file-count crossover, " +
        "partial above; takedown folded and verdicts equal either way") {
-    import graft.ext.DedupIndex
+    import graft.ext.{BucketedTables, DedupIndex}
     val docs = Tables(spark, dir, "documents").select("doc_id", "lang", "text")
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    def build(base: String): Unit = {
+    // same corpus and takedown; the bucket count alone puts the exact
+    // table below or above the file-count crossover
+    def build(base: String, buckets: Int): Int = {
       DedupIndex.write(corpus, "text", "doc_id", "lang", base,
-        threshold = 0.5, buckets = 8)
+        threshold = 0.5, buckets = buckets)
       DedupIndex.delete(spark, base,
         corpus.select("doc_id").orderBy("doc_id").limit(3), "doc_id")
+      spark.table(DedupIndex.exactTable(base)).inputFiles.length
     }
-    build("t_dauto_a"); build("t_dauto_b")
-    val anchorFiles =
-      spark.table(DedupIndex.exactTable("t_dauto_a")).inputFiles.length
-    assert(DedupIndex.compactAuto(spark, "t_dauto_a",
-      minFiles = anchorFiles + 1) == "full")
-    assert(DedupIndex.compactAuto(spark, "t_dauto_b",
-      minFiles = 1, maxDirtyShare = 1.0) == "partial")
+    val smallFiles = build("t_dauto_a", 8)
+    val bigFiles = build("t_dauto_b", 64)
+    assert(smallFiles < BucketedTables.MinFiles &&
+      bigFiles >= BucketedTables.MinFiles,
+      s"layouts must straddle the crossover: $smallFiles, $bigFiles files")
+    assert(DedupIndex.compactAuto(spark, "t_dauto_a") == "full")
+    assert(DedupIndex.compactAuto(spark, "t_dauto_b") == "partial")
     Seq("t_dauto_a", "t_dauto_b").foreach { b =>
       assert(DedupIndex.pendingTombstones(spark, b) == 0L)
       val gone = corpus.select("doc_id").orderBy("doc_id").limit(3)
@@ -1067,6 +1069,37 @@ class ExtSpec extends AnyFunSuite {
         "text", "doc_id", "lang", threshold = 0.5)
         .as[(Long, Boolean, Option[String])].collect().toSet
     assert(verdicts("t_dauto_a") == verdicts("t_dauto_b"))
+  }
+
+  test("DedupIndex.compactAuto folds append mass: an append-heavy index " +
+       "above the file-count crossover takes the full branch and leaves " +
+       "needsCompact false") {
+    import graft.ext.{BucketedTables, DedupIndex}
+    val docs = Tables(spark, dir, "documents").select("doc_id", "lang", "text")
+    val corpus = docs.filter(col("doc_id") % 2 === 0)
+    val delta = docs.filter(col("doc_id") % 2 =!= 0)
+    val base = "t_dauto_app"
+    DedupIndex.write(corpus, "text", "doc_id", "lang", base,
+      threshold = 0.5, buckets = 64)
+    DedupIndex.appendKept(spark, base, delta,
+      delta.select(col("doc_id"), lit(true).as("keep"),
+        lit(null).cast("string").as("reason")),
+      "text", "doc_id", "lang", threshold = 0.5, batchId = 1L)
+    DedupIndex.delete(spark, base,
+      corpus.select("doc_id").orderBy("doc_id").limit(1), "doc_id")
+    val files = spark.table(DedupIndex.exactTable(base)).inputFiles.length
+    assert(files >= BucketedTables.MinFiles, s"only $files exact files")
+    val (appended, snap) = DedupIndex.appendedSinceSnapshot(spark, base).get
+    assert(appended >= BucketedTables.AppendedRatio * snap,
+      s"append mass $appended/$snap must reach the ratio")
+    assert(DedupIndex.needsCompact(spark, base))
+    // one delete dirties a sliver of the files: only the append mass can
+    // send this index to the full fold, and only the full fold folds the
+    // pref/band append files
+    assert(DedupIndex.compactAuto(spark, base) == "full")
+    assert(!DedupIndex.needsCompact(spark, base),
+      "the fold must clear both the tombstone and the append mass")
+    assert(DedupIndex.appendedSinceSnapshot(spark, base).exists(_._1 == 0L))
   }
 
   test("ClusterIndex.heal rolls an interrupted compaction forward/back") {

@@ -654,11 +654,35 @@ class IOSpec extends AnyFunSuite {
   test("ANN compactAuto: full below the file-count crossover (no discovery " +
        "scan paid), partial above; takedown folded either way") {
     import graft.ext.{BucketedTables, SimilarityIndex}
-    // the pure policy: small corpus -> full; mostly-dirty -> full;
-    // big-and-mostly-clean -> partial
-    assert(BucketedTables.compactionChoice(10, 0, 48, 0.5) == "full")
-    assert(BucketedTables.compactionChoice(100, 10, 48, 0.5) == "partial")
-    assert(BucketedTables.compactionChoice(100, 80, 48, 0.5) == "full")
+    import BucketedTables.{AppendedRatio, MaxDirtyShare, MinFiles,
+      compactionChoice}
+    // the pure policy on every branch, each constant at its boundary.
+    // Unknown counter: files and dirty share alone. Small -> full
+    assert(compactionChoice(10, 0, None) == "full")
+    assert(compactionChoice(MinFiles - 1, 0, None) == "full")
+    assert(compactionChoice(MinFiles, 0, None) == "partial")
+    // dirty-heavy -> full; a dirty share AT the limit is still partial
+    val n = 100
+    val dirtyEdge = math.floor(MaxDirtyShare * n).toInt
+    assert(compactionChoice(n, 80, None) == "full")
+    assert(compactionChoice(n, dirtyEdge + 1, None) == "full")
+    assert(compactionChoice(n, dirtyEdge, None) == "partial")
+    // append-heavy -> full from the ratio up, partial just below it
+    val snap = 1000L
+    val appendEdge = math.ceil(AppendedRatio * snap).toLong
+    assert(compactionChoice(n, 10, Some((appendEdge, snap))) == "full")
+    assert(compactionChoice(n, 10, Some((10 * snap, snap))) == "full")
+    assert(compactionChoice(n, 10, Some((appendEdge - 1, snap))) ==
+      "partial")
+    // an empty snapshot weighs as one doc: any append mass is heavy
+    assert(compactionChoice(n, 10, Some((1L, 0L))) == "full")
+    assert(compactionChoice(n, 10, Some((0L, 0L))) == "partial")
+    // a light counter does not overrule the file or dirty rules
+    assert(compactionChoice(MinFiles - 1, 0, Some((0L, snap))) == "full")
+    assert(compactionChoice(n, dirtyEdge + 1, Some((0L, snap))) == "full")
+    // otherwise partial, known counter or not
+    assert(compactionChoice(n, 10, None) == "partial")
+    assert(compactionChoice(n, 10, Some((0L, snap))) == "partial")
     // the computed rowsPerFile default at the anncompactbench ladder's
     // breakpoints: flat at the measured 2048 sweet spot through 10M,
     // then sqrt growth landing on the ladder's own 100M guidance (8192)
@@ -668,18 +692,26 @@ class IOSpec extends AnyFunSuite {
     assert(SimilarityIndex.rowsPerFilePolicy(100_000_000L) == 8192L)
     assert(SimilarityIndex.rowsPerFilePolicy(1_000_000_000L) == 32768L)
     val e = Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    def build(base: String): Unit = {
+    def build(base: String): Int = {
       SimilarityIndex.write(e, "embedding", "vec_id", base,
         k = 4, iters = 1, buckets = 4)
       SimilarityIndex.delete(spark, base,
         e.select(col("vec_id")).orderBy("vec_id").limit(3))
+      spark.table(s"${base}_cells").inputFiles.length
     }
-    build("t_auto_a"); build("t_auto_b")
-    val totalFiles = spark.table("t_auto_a_cells").inputFiles.length
-    assert(SimilarityIndex.compactAuto(spark, "t_auto_a",
-      minFiles = totalFiles + 1) == "full")
-    assert(SimilarityIndex.compactAuto(spark, "t_auto_b",
-      minFiles = 1, maxDirtyShare = 1.0) == "partial")
+    // same cells either way; only the layout differs: the default row
+    // cap leaves a few files, an 8-row cap splits the cells above the
+    // file-count crossover
+    val smallFiles = build("t_auto_a")
+    val bigFiles =
+      try {
+        spark.conf.set(SimilarityIndex.RowsPerFileConfKey, "8")
+        build("t_auto_b")
+      } finally spark.conf.unset(SimilarityIndex.RowsPerFileConfKey)
+    assert(smallFiles < MinFiles && bigFiles >= MinFiles,
+      s"layouts must straddle the crossover: $smallFiles, $bigFiles files")
+    assert(SimilarityIndex.compactAuto(spark, "t_auto_a") == "full")
+    assert(SimilarityIndex.compactAuto(spark, "t_auto_b") == "partial")
     // both folds applied the takedown and retired the tombstones
     Seq("t_auto_a", "t_auto_b").foreach { b =>
       assert(spark.table(s"${b}_cells").filter(col("id") < 3).count() == 0)
@@ -1409,8 +1441,17 @@ class IOSpec extends AnyFunSuite {
         .contains((deltaN, corpusN)))
       assert(!DedupIndex.needsCompact(spark, base),
         "a fifth of the corpus appended must not trip the default ratio")
-      assert(DedupIndex.needsCompact(spark, base,
-        appendedRatio = deltaN.toDouble / corpusN / 2),
+      // a second batch (the corpus again under fresh ids) carries the
+      // append mass past the ratio
+      val delta2 = corpus.withColumn("doc_id", col("doc_id") + 1000000L)
+      val appendedN = deltaN + corpusN
+      DedupIndex.appendKept(spark, base, delta2,
+        delta2.select(col("doc_id"), lit(true).as("keep"),
+          lit(null).cast("string").as("reason")),
+        "text", "doc_id", "lang", threshold = 0.5, batchId = 8L)
+      assert(DedupIndex.appendedSinceSnapshot(spark, base)
+        .contains((appendedN, corpusN)))
+      assert(DedupIndex.needsCompact(spark, base),
         "the ratio trigger must fire once appended mass crosses it")
       // a pending tombstone alone advises compaction (the fold is what
       // physically applies a takedown)
@@ -1425,10 +1466,9 @@ class IOSpec extends AnyFunSuite {
       assert(DedupIndex.pendingTombstones(spark, base) == 0L)
       val partialN = spark.table(s"${base}_exact").count()
       assert(DedupIndex.appendedSinceSnapshot(spark, base)
-        .contains((deltaN, partialN)),
+        .contains((appendedN, partialN)),
         "a partial fold must keep the append mass it carried")
-      assert(DedupIndex.needsCompact(spark, base,
-        appendedRatio = deltaN.toDouble / corpusN / 2),
+      assert(DedupIndex.needsCompact(spark, base),
         "the ratio trigger must still fire after a partial fold")
       // compaction re-bases: pressure back to zero, snapshot count folded
       DedupIndex.compact(spark, base)

@@ -761,15 +761,16 @@ class StreamSpec extends AnyFunSuite {
     val (b1, b2) = extra.partition(_._1 % 2 == 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_sq8_vec").toString
     val input = MemoryStream[(Long, Seq[Float])]
-    // compactEvery = 2: the second batch folds the sq8-schema table
-    // through compactionFrame + snapshot swap, so the end state also
-    // proves compaction handles the byte-packed row shape
     val q = IngestVectors.run(input.toDF().toDF("vec_id", "embedding"),
-      "t_stream_sq8", checkpoint = s"$tmp/ckpt", compactEvery = 2).start()
+      "t_stream_sq8", checkpoint = s"$tmp/ckpt").start()
     try {
       input.addData(b1.toSeq); q.processAllAvailable()
       input.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
+    // the offline compaction folds the sq8-schema table through
+    // compactionFrame + snapshot swap, so the end state also proves
+    // compaction handles the byte-packed row shape
+    SimilarityIndex.compact(spark, "t_stream_sq8")
     // every streamed vector landed (micro-batch appends sniffed the
     // stored codec — a float-shaped append would have failed name
     // resolution, and a silent no-op would miss rows here)
@@ -808,14 +809,15 @@ class StreamSpec extends AnyFunSuite {
     val (b1, b2) = extra.partition(_._1 % 2 == 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_pq_vec").toString
     val input = MemoryStream[(Long, Seq[Float])]
-    // compactEvery = 2: the second batch folds the code-packed table
-    // through compactionFrame + snapshot swap WITH the codebook sidecar
     val q = IngestVectors.run(input.toDF().toDF("vec_id", "embedding"),
-      "t_stream_pq", checkpoint = s"$tmp/ckpt", compactEvery = 2).start()
+      "t_stream_pq", checkpoint = s"$tmp/ckpt").start()
     try {
       input.addData(b1.toSeq); q.processAllAvailable()
       input.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
+    // the offline compaction folds the code-packed table through
+    // compactionFrame + snapshot swap WITH the codebook sidecar
+    SimilarityIndex.compact(spark, "t_stream_pq")
     assert(spark.table("t_stream_pq_cells").count() == e.count())
     assert(spark.table("t_stream_pq_cells").columns.toSet ==
       Set("cell", "id", "pqc"), "streamed appends must keep the pq layout")
@@ -877,7 +879,8 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("streaming vector ingestion: batches searchable as they commit; " +
-       "two-batch split == one-shot append; periodic compaction folds files") {
+       "two-batch split == one-shot append; a compaction after the stream " +
+       "folds files") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.ext.{Similarity, SimilarityIndex}
     import graft.streaming.IngestVectors
@@ -896,10 +899,8 @@ class StreamSpec extends AnyFunSuite {
     val (b1, b2) = extra.partition(_._1 % 2 == 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_vec").toString
     val input = MemoryStream[(Long, Seq[Float])]
-    // compactEvery = 2: the second batch commit triggers an in-line
-    // compaction, so the end state is also the post-compaction state
     val q = IngestVectors.run(input.toDF().toDF("vec_id", "embedding"),
-      "t_stream_ann", checkpoint = s"$tmp/ckpt", compactEvery = 2).start()
+      "t_stream_ann", checkpoint = s"$tmp/ckpt").start()
     try {
       input.addData(b1.toSeq :+ twin); q.processAllAvailable()
       // batch 1 is searchable before batch 2 arrives: probing with vec
@@ -912,6 +913,8 @@ class StreamSpec extends AnyFunSuite {
         mid.head.getLong(2) == twin._1 && mid.head.getDouble(3) > 0.999)
       input.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
+    // the offline compaction: the end state is the post-compaction state
+    SimilarityIndex.compact(spark, "t_stream_ann")
     // assignment under the stored quantizer is deterministic, so the
     // batch split must not change any search result vs a one-shot append
     SimilarityIndex.write(corpus, "embedding", "vec_id", "t_oneshot_ann",
@@ -928,7 +931,7 @@ class StreamSpec extends AnyFunSuite {
     val oneShot = rows(SimilarityIndex.topK(spark, "t_oneshot_ann", probes,
       k = 3, nprobe = 2))
     assert(streamed == oneShot && streamed.nonEmpty)
-    // the in-line compaction left one file per non-empty bucket
+    // the compaction left one file per non-empty bucket
     val cellsDir = new java.io.File(spark.sessionState.catalog
       .getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier("t_stream_ann_cells"))
@@ -951,8 +954,7 @@ class StreamSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val q = IngestSpans.run(input.toDF().toDF("doc_id", "text"),
       "t_span_stream", "text", "doc_id",
-      outPath = s"$tmp/out", checkpoint = s"$tmp/ckpt",
-      compactEvery = 1).start()
+      outPath = s"$tmp/out", checkpoint = s"$tmp/ckpt").start()
     try {
       input.addData(Seq(
         (10L, "alpha beta gamma delta epsilon zeta eta"), // corpus copy
